@@ -17,16 +17,10 @@ event_id keeps one event's (possibly re-emitted) hops in one partition
 — ordered per event, parallel across events; the engine reproduces the
 same framing so a reference client can talk to either engine.
 
-Spark mapping (SURVEY.md §3.3(a)): Structured Streaming cannot express
-a cycle inside one query, so the feedback edge stays a *topic* and the
-job becomes TWO independent streaming queries sharing ``internal`` —
-query A: source ⇒ route ⇒ invoke ⇒ egress-split, writing CLIENT rows to
-``client_reply`` and INTERNAL rows back to ``internal``; Kafka is the
-cycle's buffer exactly as in the reference.
-
-Everything that needs a live broker is isolated behind ``.load()`` /
-``.start()`` on builders returned unstarted (the ``spark-sql-kafka``
-package resolves them on a real cluster; it is absent in this sandbox).
+Everything that needs a live broker is isolated behind ``.load()`` on
+a reader returned unloaded, and behind ``streaming.transport``'s
+``KafkaTransport`` (the ``spark-sql-kafka`` package resolves them on a
+real cluster; it is absent in this sandbox).
 The framing projections — encode/decode, key derivation, egress split —
 are plain DataFrame transforms over the public Kafka record schema and
 are unit-tested broker-free on static frames.
@@ -36,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamReader, DataStreamWriter
+from pyspark.sql.streaming import DataStreamReader
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -73,7 +67,7 @@ KAFKA_RECORD = StructType(
 
 
 # ---------------------------------------------------------------------------
-# builders (need a broker + the spark-sql-kafka package to .load()/.start())
+# reader builder (needs a broker + the spark-sql-kafka package to .load())
 # ---------------------------------------------------------------------------
 
 
@@ -95,23 +89,6 @@ def kafka_reader(
         .option("subscribe", ",".join(topics))
         .option("startingOffsets", starting_offsets)
         .option("kafka.group.id", GROUP_ID)
-    )
-
-
-def kafka_writer(
-    frames: DataFrame,
-    checkpoint_dir: str,
-    bootstrap: str = DEFAULT_BOOTSTRAP,
-) -> DataStreamWriter:
-    """Configured (unstarted) writer for pre-framed (key, value, topic)
-    rows — R12/R13.  Exactly-once to the checkpoint; the broker hop
-    itself is at-least-once (same level the reference runs:
-    ``Semantic.AT_LEAST_ONCE``, StateFlowFlinkJob.java:131/138) —
-    downstream dedup keys on event_id."""
-    return (
-        frames.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("checkpointLocation", checkpoint_dir)
     )
 
 
@@ -169,36 +146,3 @@ def _envelope_fields():
     from ..schemas import EVENT_ENVELOPE
 
     return EVENT_ENVELOPE.fields
-
-
-# ---------------------------------------------------------------------------
-# the full loop, wired (start on a real cluster)
-# ---------------------------------------------------------------------------
-
-
-def start_feedback_loop(
-    spark: SparkSession,
-    process,
-    checkpoint_root: str,
-    bootstrap: str = DEFAULT_BOOTSTRAP,
-):
-    """Wire and start the production event loop — two sinks over one
-    routed stream, sharing the ``internal`` topic with the source.
-
-    ``process`` is the engine pipeline ``(envelope DataFrame) ->
-    egress-routed DataFrame`` (must add ``direction``); typically
-    ``route_ingress`` ⇒ invoke/stateful apply ⇒ ``route_egress``.
-
-    Returns the two running StreamingQuery handles (client, internal).
-    Requires a live broker — integration entry point, not unit-testable
-    here; every projection it composes is tested statically."""
-    raw = kafka_reader(spark, bootstrap).load()
-    routed = process(decode_frames(raw))
-    client_frames, internal_frames = egress_split(routed)
-    q_client = kafka_writer(
-        client_frames, f"{checkpoint_root}/client", bootstrap
-    ).start()
-    q_internal = kafka_writer(
-        internal_frames, f"{checkpoint_root}/internal", bootstrap
-    ).start()
-    return q_client, q_internal

@@ -33,10 +33,13 @@ sandbox stand-in for Kafka):
     continuing rows append BACK to ``internal/``, i.e. into query B's
     own source.  That append is the feedback edge.
 
-Both queries run concurrently on processing-time triggers; a flow with
-k remaining hops crosses k micro-batches of query B, one hop per
-batch, exactly one reply per flow — the same per-event trajectory the
-reference executes through Kafka.
+Both queries run concurrently on processing-time triggers, exactly one
+reply per flow.  In :func:`run_feedback_loop` a flow with k remaining
+hops crosses k micro-batches of query B, one hop per batch — the same
+per-event trajectory the reference executes through Kafka.
+:func:`run_event_loop` instead moves each flow through every hop it can
+finish inside one worker micro-batch (up to ``flow.MAX_FLOW_STEPS``), so
+only flows past that bound cross the feedback edge again.
 
 Termination is the driver's concern (the reference's job runs forever;
 bounded fixtures need a drain): the loop stops once ``client_reply``
@@ -46,11 +49,13 @@ holds one reply per seeded flow, or after an idle timeout.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import time
+from functools import reduce
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -320,18 +325,27 @@ def run_event_loop(
       client --encode_frames--> client_request
       query A: decode_frames -> route_ingress -> {EGRESS -> client_reply,
                INTERNAL -> internal}                       (R3 ingress)
-      query B: decode_frames -> advance -> route_egress -> egress_split
-               -> {client_reply, internal (the feedback edge)}  (R4+R11+R13)
+      query B: decode_frames -> repeat {advance -> route_egress ->
+               localCheckpoint} on the rows still INTERNAL, until none
+               is left or MAX_FLOW_STEPS hops -> {client_reply, once
+               per batch; internal (the feedback edge), only for flows
+               still mid-flow after the bound}              (R4+R11+R13)
+
+    A flow enters ``internal`` once, through ingress, and crosses as many
+    worker micro-batches as it has runs of MAX_FLOW_STEPS hops: each
+    batch pays its trigger, decode, encode and appends once, not once
+    per hop (the Drizzle amortization of per-batch coordination). No hop
+    here waits on keyed state, so none has to cross the topic.
     """
     from ..sources.kafka import (
         TOPIC_CLIENT_REPLY,
         TOPIC_CLIENT_REQUEST,
         TOPIC_INTERNAL,
         decode_frames,
-        egress_split as split_frames,
         encode_frames,
     )
-    from ..schemas import EGRESS, INTERNAL
+    from ..schemas import CLIENT, EGRESS, INTERNAL
+    from .flow import MAX_FLOW_STEPS
     from .routing import route_egress, route_ingress
 
     base = tempfile.mkdtemp(prefix="sfs_wireloop_ck_")
@@ -377,18 +391,48 @@ def run_event_loop(
         .start()
     )
 
-    # --- query B: flow worker (internal -> advance -> egress split) --
+    # --- query B: flow worker (internal -> hops -> egress split) -----
     internal = decode_frames(transport.read_stream(spark, TOPIC_INTERNAL))
+    is_client = F.col("direction") == CLIENT
+    is_internal = F.col("direction") == INTERNAL
 
     def worker_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hopped = advance(batch_df).localCheckpoint()  # advance ONCE, split twice
-        client_frames, internal_frames = split_frames(route_egress(hopped))
-        if not client_frames.isEmpty():
-            transport.append(client_frames, TOPIC_CLIENT_REPLY)
-        if not internal_frames.isEmpty():
-            # THE FEEDBACK EDGE: produce back into query B's own source
-            # topic (StateFlowFlinkJob.java:127-132).
-            transport.append(internal_frames, TOPIC_INTERNAL)
+        # Hop the batch's flows in place until none is left mid-flow,
+        # up to MAX_FLOW_STEPS hops. The checkpoint is each hop's only
+        # action; the observation sizes both sides of the split on it.
+        frontier = batch_df.select(*env_cols)
+        replies: list[DataFrame] = []
+        for _ in range(MAX_FLOW_STEPS):
+            sizes = Observation()
+            routed = (
+                route_egress(advance(frontier))
+                .observe(
+                    sizes,
+                    F.count_if(is_client).alias(CLIENT),
+                    F.count_if(is_internal).alias(INTERNAL),
+                )
+                .localCheckpoint()
+            )
+            counts = sizes.get
+            if counts.get(CLIENT):
+                replies.append(routed.filter(is_client).select(*env_cols))
+            frontier = routed.filter(is_internal).select(*env_cols)
+            if not counts.get(INTERNAL):
+                break
+        else:
+            # THE FEEDBACK EDGE: flows still mid-flow after the bound
+            # go back into query B's own source topic
+            # (StateFlowFlinkJob.java:127-132).
+            transport.append(encode_frames(frontier, TOPIC_INTERNAL), TOPIC_INTERNAL)
+        if replies:
+            # every hop keeps the batch's partitions, so a union of k
+            # hops has k times as many: encode in the batch's count
+            done = reduce(DataFrame.unionByName, replies).coalesce(
+                replies[0].rdd.getNumPartitions()
+            )
+            transport.append(
+                encode_frames(done, TOPIC_CLIENT_REPLY), TOPIC_CLIENT_REPLY
+            )
 
     qb = (
         internal.writeStream.foreachBatch(worker_batch)
@@ -412,6 +456,8 @@ def run_event_loop(
     finally:
         qa.stop()
         qb.stop()
+        # fresh per call, so nothing can resume from it
+        shutil.rmtree(base, ignore_errors=True)
     return decode_frames(transport.read_batch(spark, TOPIC_CLIENT_REPLY))
 
 

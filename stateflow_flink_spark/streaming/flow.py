@@ -10,7 +10,7 @@ Structured Streaming cannot express cycles inside one query (SURVEY.md
 §3.3), so the engine offers the two idiomatic mappings:
 
   * production: keep the feedback topic — two independent streaming
-    queries sharing ``internal`` (see sources/kafka.py);
+    queries sharing ``internal`` (see streaming/feedback.py);
   * bounded/batch: the driver-side loop below — repeatedly apply
     route+advance to the not-yet-returned frontier, union the finished
     rows, until the frontier is empty.  Each iteration is one Catalyst

@@ -32,9 +32,10 @@ production path minus only the socket.
 
 from __future__ import annotations
 
-import threading
-
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -98,7 +99,22 @@ class DirectoryTransport:
             F.current_timestamp().alias("timestamp"),
             F.lit(0).alias("timestampType"),
         )
-        stamped.write.mode("append").parquet(self.topic_dir(topic))
+        # Each append commits into its own staging dir, outside every
+        # topic, and only then moves its part files into the topic: a
+        # job commit deletes its output dir's ``_temporary``, so two
+        # producers committing into one topic dir lose each other's
+        # task output.
+        staging = os.path.join(self.base, ".staging")
+        os.makedirs(staging, exist_ok=True)
+        stage = tempfile.mkdtemp(dir=staging)
+        try:
+            stamped.write.mode("append").parquet(stage)
+            dest = self.topic_dir(topic)
+            for name in os.listdir(stage):
+                if name.startswith("part-"):
+                    os.rename(os.path.join(stage, name), os.path.join(dest, name))
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
 
     def read_batch(self, spark: SparkSession, topic: str) -> DataFrame:
         """Bounded snapshot (drain checks / assertions).  Returns an
@@ -111,11 +127,12 @@ class DirectoryTransport:
 
 
 class KafkaTransport:
-    """The production wire — composes the R1/R12/R13 builders from
-    :mod:`sources.kafka` so the loop code path is identical to the
-    sandbox transport above.  Requires a live broker and the
-    ``spark-sql-kafka`` package (absent here; construction and plan
-    wiring are testable, ``.load()``/``.save()`` are not)."""
+    """The production wire — the R1 reader from :mod:`sources.kafka`
+    and batch ``format("kafka")`` producers (R12/R13), so the loop code
+    path is identical to the sandbox transport above.  Requires a live
+    broker and the ``spark-sql-kafka`` package (absent here;
+    construction and plan wiring are testable, ``.load()``/``.save()``
+    are not)."""
 
     def __init__(self, bootstrap: str = DEFAULT_BOOTSTRAP) -> None:
         self.bootstrap = bootstrap

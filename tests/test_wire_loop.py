@@ -12,6 +12,7 @@ that substitution is what test_kafka_transport_format_wiring pins.
 from __future__ import annotations
 
 import tempfile
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +23,7 @@ from stateflow_flink_spark.streaming.feedback import (
     make_flow_requests,
     run_event_loop,
 )
+from stateflow_flink_spark.streaming.flow import MAX_FLOW_STEPS
 from stateflow_flink_spark.streaming.transport import (
     DirectoryTransport,
     KafkaTransport,
@@ -32,13 +34,23 @@ from .conftest import SF_SMOKE
 
 def test_wire_loop_drains_every_flow_exactly_once(spark):
     """Same contract as test_feedback_loop_drains_every_flow_exactly_once
-    but over the WIRE path: each flow (event_id % 3 + 1 hops) crosses
-    one proto encode/decode per hop and lands exactly one
-    SuccessfulInvocation reply."""
+    but over the WIRE path: each flow (event_id % 3 + 1 hops) is decoded
+    and encoded through proto frames and lands exactly one
+    SuccessfulInvocation reply.  A worker batch hops its flows in place
+    up to MAX_FLOW_STEPS, so ``internal`` holds one frame per flow (its
+    ingress frame) plus one more for the flow of MAX_FLOW_STEPS + 1
+    hops, which crosses the feedback edge once."""
+    events = load(spark, SF_SMOKE, "events")
+    (long_id,) = events.agg(F.max("event_id") + 1).first()
     flows = (
-        load(spark, SF_SMOKE, "events")
-        .select("event_id", (F.col("event_id") % 3 + 1).alias("steps_left"))
+        events.select("event_id", (F.col("event_id") % 3 + 1).alias("steps_left"))
         .limit(60)
+        .unionByName(
+            spark.range(1).select(
+                F.lit(long_id).cast(events.schema["event_id"].dataType).alias("event_id"),
+                F.lit(MAX_FLOW_STEPS + 1).cast("long").alias("steps_left"),
+            )
+        )
     )
     n = flows.count()
     seed = make_flow_requests(spark, flows)
@@ -54,6 +66,7 @@ def test_wire_loop_drains_every_flow_exactly_once(spark):
         assert r.request is None  # oneof flipped request -> reply
         assert r.current_node_type == "RETURN"
         assert int(r.current_fun_key) == 0  # counter fully burned
+    assert transport.read_batch(spark, "internal").count() == n + 1
 
 
 def test_wire_loop_ping_answered_from_ingress(spark):
@@ -117,6 +130,45 @@ def test_directory_transport_record_shape_and_key_partitioning(spark):
     )
     # offsets unique within the topic
     assert got.select("offset", "partition").distinct().count() == 100
+
+
+def test_directory_transport_concurrent_appends_land_every_row(spark):
+    """Two producers on one topic is the loop's normal case (ingress
+    answers Pings into client_reply while the worker writes replies
+    there). Concurrent appends must neither raise nor lose rows: each
+    job commit may only publish its own part files. Rounds of eight
+    appends released together make the commits overlap."""
+    transport = DirectoryTransport(tempfile.mkdtemp(prefix="sfs_conc_"))
+    n_rounds, n_threads, rows = 3, 8, 5000
+    errors: list[BaseException] = []
+    start = threading.Barrier(n_threads)
+
+    def produce(first: int) -> None:
+        frames = spark.range(first, first + rows).select(
+            F.encode(F.col("id").cast("string"), "utf-8").alias("key"),
+            F.col("id").cast("string").cast("binary").alias("value"),
+        )
+        start.wait(timeout=120)
+        try:
+            transport.append(frames, TOPIC_CLIENT_REQUEST)
+        except Exception as exc:  # noqa: BLE001 - asserted below
+            errors.append(exc)
+
+    for r in range(n_rounds):
+        threads = [
+            threading.Thread(target=produce, args=((r * n_threads + i) * rows,))
+            for i in range(n_threads)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+            assert not t.is_alive()
+    assert errors == []
+    got = transport.read_batch(spark, TOPIC_CLIENT_REQUEST)
+    total = n_rounds * n_threads * rows
+    assert got.count() == total
+    assert got.select("key").distinct().count() == total
 
 
 def test_kafka_transport_format_wiring(spark):
