@@ -7,8 +7,8 @@ result.  In batch form that read-modify-write sequence per key ordered
 by time IS a prefix fold, which Spark expresses natively as window
 functions — no Python, no state store, whole-stage codegen.
 
-The true streaming twin (ValueState + transformWithStateInPandas) lives
-in ``streaming/state.py``; tests assert the two produce identical
+The true streaming twin (GroupState + applyInPandasWithState) lives in
+``streaming/state.py``; tests assert the two produce identical
 results, which is the engine's replacement for the reference's
 (untested) at-least-once replay semantics.
 """

@@ -21,8 +21,8 @@ Everything that needs a live broker is isolated behind ``.load()`` on
 a reader returned unloaded, and behind ``streaming.transport``'s
 ``KafkaTransport`` (the ``spark-sql-kafka`` package resolves them on a
 real cluster; it is absent in this sandbox).
-The framing projections — encode/decode, key derivation, egress split —
-are plain DataFrame transforms over the public Kafka record schema and
+The framing projections — encode/decode and key derivation — are
+plain DataFrame transforms over the public Kafka record schema and
 are unit-tested broker-free on static frames.
 """
 
@@ -41,9 +41,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..schemas import CLIENT, INTERNAL
-from .proto import envelope_struct
-from .proto_native import from_proto_auto, to_proto_auto
+from .proto import envelope_struct, from_proto, to_proto
 
 TOPIC_INTERNAL = "internal"
 TOPIC_CLIENT_REQUEST = "client_request"
@@ -103,12 +101,10 @@ def decode_frames(raw: DataFrame) -> DataFrame:
     Value-only deserialization like the reference
     (``setValueOnlyDeserializer``, StateFlowFlinkJob.java:53): the key
     is transport framing, not payload — event identity rides inside the
-    proto.  Decode dispatches through the native-protobuf seam
-    (sources/proto_native.py): JVM ``from_protobuf`` under
-    ``SPARK_GRAFT_NATIVE_PROTO=1``, Arrow-batched pandas codec
-    otherwise."""
+    proto.  Decode is the Arrow-batched proto3 codec of
+    :mod:`.proto`."""
     return raw.select(
-        from_proto_auto(F.col("value")).alias("e"), "topic", "partition", "offset"
+        from_proto(F.col("value")).alias("e"), "topic", "partition", "offset"
     ).select("e.*", "topic", "partition", "offset")
 
 
@@ -119,30 +115,7 @@ def encode_frames(events: DataFrame, topic: str) -> DataFrame:
     producer framing of ``KafkaSerializeProto.java:24-30``."""
     return events.select(
         F.encode(F.col("event_id"), "utf-8").alias("key"),
-        to_proto_auto(envelope_struct()).alias("value"),
+        to_proto(envelope_struct()).alias("value"),
         F.lit(topic).alias("topic"),
     )
 
-
-def egress_split(routed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split an egress-routed stream into its two producer feeds:
-    (client_reply frames, internal feedback frames) — the Spark analog
-    of the main-output/side-output pair feeding the two
-    FlinkKafkaProducers (StateFlowFlinkJob.java:141-147).
-
-    Expects ``direction`` from ``streaming.routing.route_egress``; both
-    filters are views over ONE routed pass (Catalyst pushes each filter
-    into the shared plan)."""
-    env_cols = [f.name for f in _envelope_fields()]
-    client = routed.filter(F.col("direction") == CLIENT).select(*env_cols)
-    internal = routed.filter(F.col("direction") == INTERNAL).select(*env_cols)
-    return (
-        encode_frames(client, TOPIC_CLIENT_REPLY),
-        encode_frames(internal, TOPIC_INTERNAL),
-    )
-
-
-def _envelope_fields():
-    from ..schemas import EVENT_ENVELOPE
-
-    return EVENT_ENVELOPE.fields

@@ -10,36 +10,14 @@ SURVEY.md §3.3(a) maps the loop to TWO independent streaming queries
 sharing the feedback topic; the topic itself remains the cycle's
 buffer, exactly as in the reference.
 
-Two loops live here, same architecture, two altitudes:
-
-  * :func:`run_event_loop` — the WIRE-LEVEL loop: every topic byte is
-    a framed Event proto, every read crosses ``decode_frames``, every
-    route crosses ``streaming.routing`` — through the transport seam
-    (``streaming/transport.py``), so the identical code path runs on
-    directory-topics in-sandbox and ``format("kafka")`` in production.
-  * :func:`run_feedback_loop` — the plain-column twin below (flow
-    cursors as parquet rows, no framing), kept as the minimal live
-    demonstration of the two-query cycle itself.
-
-For the latter, each "topic" is a directory of parquet part-files (the
-sandbox stand-in for Kafka):
-
-  * query A (ingress router, ref R3): streams ``client_request/``,
-    stamps flow-cursor columns (route_ingress semantics: EventFlow
-    requests go INTERNAL), appends to ``internal/``;
-  * query B (flow worker, ref R4+R9+R11+R13): streams ``internal/``,
-    advances every flow ONE hop, egress-splits inside ``foreachBatch``
-    — finished rows (cursor == RETURN) append to ``client_reply/``,
-    continuing rows append BACK to ``internal/``, i.e. into query B's
-    own source.  That append is the feedback edge.
-
-Both queries run concurrently on processing-time triggers, exactly one
-reply per flow.  In :func:`run_feedback_loop` a flow with k remaining
-hops crosses k micro-batches of query B, one hop per batch — the same
-per-event trajectory the reference executes through Kafka.
-:func:`run_event_loop` instead moves each flow through every hop it can
-finish inside one worker micro-batch (up to ``flow.MAX_FLOW_STEPS``), so
-only flows past that bound cross the feedback edge again.
+:func:`run_event_loop` is that cycle at the wire level: every topic byte
+is a framed Event proto, every read crosses ``decode_frames``, every
+route crosses ``streaming.routing`` — through the transport seam
+(``streaming/transport.py``), so the identical code path runs on
+directory-topics in-sandbox and ``format("kafka")`` in production.
+A worker micro-batch moves each flow through every hop it can finish
+in place (up to ``flow.MAX_FLOW_STEPS``), so only flows past that bound
+cross the feedback edge again.
 
 Termination is the driver's concern (the reference's job runs forever;
 bounded fixtures need a drain): the loop stops once ``client_reply``
@@ -55,209 +33,20 @@ import time
 from functools import reduce
 from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
+
+from ..schemas import CLIENT, EGRESS, EVENT_ENVELOPE, INTERNAL
+from ..sources.kafka import (
+    TOPIC_CLIENT_REPLY,
+    TOPIC_CLIENT_REQUEST,
+    TOPIC_INTERNAL,
+    decode_frames,
+    encode_frames,
 )
-
-RETURN_NODE = "RETURN"
-
-# The flow-cursor envelope crossing the topics (the proto Event's
-# EventFlow fields, event.proto:49-58, reduced to the cursor columns
-# the routing tables read).
-FLOW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("steps_left", LongType()),
-        StructField("current_node_type", StringType()),
-        StructField("n_hops", LongType()),
-    ]
-)
-
-
-def default_advance(df: DataFrame) -> DataFrame:
-    """One flow hop (the stateful apply of SURVEY §3.3 step 2): burn one
-    step, count the hop, move the cursor to RETURN when exhausted."""
-    stepped = df.withColumns(
-        {
-            "steps_left": F.col("steps_left") - 1,
-            "n_hops": F.col("n_hops") + 1,
-        }
-    )
-    return stepped.withColumn(
-        "current_node_type",
-        F.when(F.col("steps_left") <= 0, RETURN_NODE).otherwise("step"),
-    )
-
-
-def invoked_advance(latency=None) -> Callable[[DataFrame], DataFrame]:
-    """:func:`default_advance` as a PER-EVENT external function call —
-    the reference's InvokeStatefulLambda contract (one lambda call per
-    event, ``InvokeStatefulLambda.java:103-115``), with the latency
-    histogram wrapped around the call exactly where the reference wraps
-    its Dropwizard metric (``:56-59`` build, ``:112`` update).
-
-    ``latency`` is a ``metrics.InvokeLatency``; None runs the same
-    per-event path untimed.  Use this advance in
-    :func:`run_feedback_loop` to make the live cycle's hops observable:
-    after the loop drains, ``latency.snapshot()`` is the populated
-    histogram the reference's metric reporter would scrape."""
-    import pandas as pd
-
-    def hop(event: dict) -> dict:
-        steps = event["steps_left"] - 1
-        return {
-            "event_id": event["event_id"],
-            "steps_left": steps,
-            "current_node_type": RETURN_NODE if steps <= 0 else "step",
-            "n_hops": event["n_hops"] + 1,
-        }
-
-    fn = latency.timed_stateless(hop) if latency is not None else hop
-    cols = [f.name for f in FLOW_SCHEMA.fields]
-
-    def advance(df: DataFrame) -> DataFrame:
-        def run(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    [fn(ev) for ev in pdf.to_dict("records")], columns=cols
-                )
-
-        return df.mapInPandas(run, FLOW_SCHEMA)
-
-    return advance
-
-
-def run_feedback_loop(
-    spark: SparkSession,
-    seed: DataFrame,
-    advance: Callable[[DataFrame], DataFrame] = default_advance,
-    workdir: str | None = None,
-    expected_replies: int | None = None,
-    timeout_s: float = 120.0,
-    trigger_s: str = "250 milliseconds",
-    latency=None,
-) -> DataFrame:
-    """Drive ``seed`` flows through the live two-query cycle; return the
-    client replies as a DataFrame.
-
-    ``seed`` must match FLOW_SCHEMA minus ``current_node_type``/
-    ``n_hops`` (stamped by the ingress router).  ``expected_replies``
-    defaults to ``seed.count()`` — the drain condition.
-
-    ``latency`` (a ``metrics.InvokeLatency``): when given and
-    ``advance`` is the default, each hop runs as a per-event invoked
-    call through :func:`invoked_advance`, so every event of every
-    micro-batch lands one histogram sample; scrape
-    ``latency.snapshot()`` after the loop drains (the reference
-    reporter's cadence).  A custom ``advance`` is used as passed —
-    wrap it yourself if it should be timed.
-    """
-    if latency is not None and advance is default_advance:
-        advance = invoked_advance(latency)
-    base = workdir or tempfile.mkdtemp(prefix="sfs_feedback_")
-    d_request = os.path.join(base, "client_request")
-    d_internal = os.path.join(base, "internal")
-    d_reply = os.path.join(base, "client_reply")
-    ck_a = os.path.join(base, "ck_a")
-    ck_b = os.path.join(base, "ck_b")
-    for d in (d_request, d_internal, d_reply):
-        os.makedirs(d, exist_ok=True)
-
-    n_expected = expected_replies if expected_replies is not None else seed.count()
-
-    # Seed the request topic (the reference's client producing to
-    # client_request) — plain distributed parquet append.
-    seed.select("event_id", "steps_left").write.mode("append").parquet(d_request)
-
-    # --- query A: ingress router (client_request -> internal) --------
-    requests = (
-        spark.readStream.schema(
-            StructType(
-                [
-                    StructField("event_id", LongType()),
-                    StructField("steps_left", LongType()),
-                ]
-            )
-        ).parquet(d_request)
-    )
-    ingress = requests.select(
-        "event_id",
-        "steps_left",
-        F.lit("step").alias("current_node_type"),  # mid-flow => INTERNAL
-        F.lit(0).cast("long").alias("n_hops"),
-    )
-    def to_internal(batch_df: DataFrame, batch_id: int) -> None:
-        # Plain distributed append, NOT the streaming parquet sink: a
-        # file-sink `_spark_metadata` log in internal/ would make query
-        # B's source trust that log alone and never see the feedback
-        # appends below — the topic must stay a plain directory.
-        batch_df.write.mode("append").parquet(d_internal)
-
-    qa = (
-        ingress.writeStream.foreachBatch(to_internal)
-        .option("checkpointLocation", ck_a)
-        .trigger(processingTime=trigger_s)
-        .start()
-    )
-
-    # --- query B: flow worker (internal -> advance -> egress split) --
-    internal = spark.readStream.schema(FLOW_SCHEMA).parquet(d_internal)
-
-    def egress_split(batch_df: DataFrame, batch_id: int) -> None:
-        # One hop per micro-batch; the batch is tiny relative to the
-        # cluster, but both writes below are distributed appends.
-        hopped = advance(batch_df).localCheckpoint()  # advance ONCE, split twice
-        (
-            hopped.filter(F.col("current_node_type") == RETURN_NODE)
-            .withColumn("reply", F.lit("SuccessfulInvocation"))
-            .write.mode("append")
-            .parquet(d_reply)
-        )
-        cont = hopped.filter(F.col("current_node_type") != RETURN_NODE)
-        if not cont.isEmpty():
-            # THE FEEDBACK EDGE: append into query B's own source dir
-            # (the reference's producer back to topic `internal`).
-            cont.write.mode("append").parquet(d_internal)
-
-    qb = (
-        internal.writeStream.foreachBatch(egress_split)
-        .option("checkpointLocation", ck_b)
-        .trigger(processingTime=trigger_s)
-        .start()
-    )
-
-    try:
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            try:
-                done = spark.read.parquet(d_reply).count()
-            except Exception:  # no part files yet
-                done = 0
-            if done >= n_expected:
-                break
-            time.sleep(0.25)
-        else:
-            raise TimeoutError(
-                f"feedback loop drained {done}/{n_expected} within {timeout_s}s"
-            )
-    finally:
-        qa.stop()
-        qb.stop()
-    return spark.read.parquet(d_reply)
-
-
-# ---------------------------------------------------------------------------
-# The WIRE-LEVEL event loop — the same cycle, but over proto-framed Kafka
-# records through the transport seam (streaming/transport.py), i.e. the
-# production code path: every byte on every topic is an Event proto
-# (KafkaSerializeProto.java:24-30 framing), every read goes through
-# decode_frames, every route through routing.route_ingress/route_egress.
-# ---------------------------------------------------------------------------
+from .flow import MAX_FLOW_STEPS
+from .routing import RETURN_NODE, route_egress, route_ingress
 
 
 def make_flow_requests(spark: SparkSession, flows: DataFrame) -> DataFrame:
@@ -305,6 +94,46 @@ def advance_envelope(env: DataFrame) -> DataFrame:
     )
 
 
+def invoked_advance(latency=None) -> Callable[[DataFrame], DataFrame]:
+    """:func:`advance_envelope` as a PER-EVENT external function call —
+    the reference's InvokeStatefulLambda contract (one lambda call per
+    event, ``InvokeStatefulLambda.java:103-115``), with the latency
+    histogram wrapped around the call exactly where the reference wraps
+    its Dropwizard metric (``:56-59`` build, ``:112`` update).
+
+    ``latency`` is a ``metrics.InvokeLatency``; None runs the same
+    per-event path untimed.  Pass it as ``run_event_loop(...,
+    advance=invoked_advance(latency))``: every hop of every flow lands
+    one histogram sample, and after the loop drains
+    ``latency.snapshot()`` is the histogram the reference's metric
+    reporter would scrape."""
+
+    def hop(event: dict) -> dict:
+        steps = int(event["current_fun_key"]) - 1
+        done = steps <= 0
+        return {
+            **event,
+            "current_fun_key": str(steps),
+            "current_node_type": RETURN_NODE if done else "step",
+            "reply": "SuccessfulInvocation" if done else event["reply"],
+            "request": None if done else event["request"],
+        }
+
+    fn = latency.timed_stateless(hop) if latency is not None else hop
+    cols = EVENT_ENVELOPE.fieldNames()
+
+    def advance(env: DataFrame) -> DataFrame:
+        def run(batches):
+            for pdf in batches:
+                yield pd.DataFrame(
+                    [fn(ev) for ev in pdf.to_dict("records")], columns=cols
+                )
+
+        return env.mapInPandas(run, EVENT_ENVELOPE)
+
+    return advance
+
+
 def run_event_loop(
     spark: SparkSession,
     transport,
@@ -337,24 +166,13 @@ def run_event_loop(
     per hop (the Drizzle amortization of per-batch coordination). No hop
     here waits on keyed state, so none has to cross the topic.
     """
-    from ..sources.kafka import (
-        TOPIC_CLIENT_REPLY,
-        TOPIC_CLIENT_REQUEST,
-        TOPIC_INTERNAL,
-        decode_frames,
-        encode_frames,
-    )
-    from ..schemas import CLIENT, EGRESS, INTERNAL
-    from .flow import MAX_FLOW_STEPS
-    from .routing import route_egress, route_ingress
-
     base = tempfile.mkdtemp(prefix="sfs_wireloop_ck_")
     n_expected = expected_replies if expected_replies is not None else seed.count()
 
     # Seed: the client produces proto-framed requests to client_request.
     transport.append(encode_frames(seed, TOPIC_CLIENT_REQUEST), TOPIC_CLIENT_REQUEST)
 
-    env_cols = [f.name for f in FLOW_ENVELOPE_FIELDS()]
+    env_cols = EVENT_ENVELOPE.fieldNames()
 
     # --- query A: ingress router (client_request -> internal/reply) --
     ingress = route_ingress(
@@ -460,8 +278,3 @@ def run_event_loop(
         shutil.rmtree(base, ignore_errors=True)
     return decode_frames(transport.read_batch(spark, TOPIC_CLIENT_REPLY))
 
-
-def FLOW_ENVELOPE_FIELDS():
-    from ..schemas import EVENT_ENVELOPE
-
-    return EVENT_ENVELOPE.fields

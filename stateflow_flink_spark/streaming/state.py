@@ -15,9 +15,9 @@ Spark-native design decisions:
     its architecture; Spark lets the function travel to the data.  A
     remote invoker can be slotted into the same signature.
   * State lives in the Structured Streaming state store
-    (``transformWithStateInPandas`` + ``ValueState``, Spark ≥ 4.0) —
-    checkpointed, exactly-once, per-key — which is strictly stronger
-    than the reference's at-least-once ValueState (SURVEY.md §4.1).
+    (``applyInPandasWithState`` + ``GroupState``) — checkpointed,
+    exactly-once, per-key — which is strictly stronger than the
+    reference's at-least-once ValueState (SURVEY.md §4.1).
   * Events for a key are applied in (ts, event_id) order within each
     micro-batch, making results deterministic and replay-stable.
 
@@ -27,7 +27,6 @@ The function contract mirrors ``EventRequestReply`` (event.proto:77-81):
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import shutil
@@ -38,25 +37,11 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
-from ..session import python_state_partitions, stream_partitions
-
-# transformWithStateInPandas (Spark >= 4.0) runs a protobuf-based Python
-# driver worker; fall back to applyInPandasWithState (Spark >= 3.4,
-# Arrow-only control path) when the protobuf package is absent.
-try:
-    HAS_TWS_RUNTIME = importlib.util.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    HAS_TWS_RUNTIME = False
-
-from ..io import load
+from ..io import load, open_events_stream
 from ..numerics import sql_wsum
 from ..plans.registry import query
-from ..io import open_events_stream
+from ..session import python_state_partitions, stream_partitions
 
 # ---------------------------------------------------------------------------
 # Callable registry — the in-process replacement for the AWS Lambda hop.
@@ -151,64 +136,6 @@ _FOLD_OUTPUT = (
 )
 
 
-class EntityFoldProcessor(StatefulProcessor):
-    """ValueState-backed keyed processor applying a registered callable.
-
-    One opaque binary state per key (ValueState, like the reference's
-    ``ValueState<ByteString>`` — InvokeStatefulLambda.java:61-65);
-    events within a batch are applied in (ts, event_id) order.
-    """
-
-    def __init__(
-        self,
-        operator_name: str = "engine/Fold",
-        ttl_ms: int | None = None,
-        latency=None,
-    ) -> None:
-        self._operator_name = operator_name
-        self._ttl_ms = ttl_ms
-        # resolve driver-side: the pickled processor carries the callable,
-        # so runtime registrations work (a worker's registry only has
-        # import-time entries)
-        self._fn = get_stateful(operator_name)
-        self._vfn = get_stateful_vectorized(operator_name)
-        if latency is not None:  # ref: InvokeStatefulLambda.java:56-59,112
-            self._fn = latency.timed_stateful(self._fn)
-            if self._vfn is not None:
-                self._vfn = latency.timed_stateful(self._vfn)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        # With a TTL the state store expires the value itself: an
-        # expired key reads as absent, so the fold re-initializes to
-        # EMPTY — the reference's first-touch semantics
-        # (InvokeStatefulLambda.java:75-77) applied to idle keys.  TTL
-        # requires timeMode="ProcessingTime" (set by apply_stateful).
-        self._state = handle.getValueState(
-            "entity_state", "blob binary", ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(rows), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        state = self._state.get()[0] if self._state.exists() else b""
-        if self._vfn is not None:
-            out_pdf, state = self._vfn(pdf, state)
-            self._state.update((state,))
-            yield out_pdf
-            return
-        outs = []
-        for event in pdf.to_dict("records"):
-            out, state = self._fn(event, state)
-            outs.append(out)
-        self._state.update((state,))
-        yield pd.DataFrame(outs)
-
-    def close(self) -> None:
-        pass
-
-
 def stream_events_dir(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     """Stage events.parquet into a dir and open it as a stream
     (ts normalized to TimestampType by io.open_events_stream)."""
@@ -222,51 +149,26 @@ def apply_stateful(
     events: DataFrame,
     operator_name: str = "engine/Fold",
     ttl_ms: int | None = None,
-    force_path: str | None = None,
     latency=None,
 ) -> DataFrame:
     """Keyed stateful apply over a streaming DataFrame — ref R9.
 
-    Picks transformWithStateInPandas (ValueState, Spark 4) when its
-    protobuf runtime is available, else applyInPandasWithState
-    (GroupState) — identical semantics either way: one opaque blob per
-    key, events applied in (ts, event_id) order, state overwritten per
-    event (InvokeStatefulLambda.java:75-109).  ``force_path`` pins the
-    implementation ("tws" / "apws") so the equivalence test can run
-    BOTH on one session and byte-compare; production callers leave it
-    None (auto-pick).
+    One ``applyInPandasWithState`` over ``groupBy("user_id")``: one
+    opaque blob per key (GroupState), events applied in (ts, event_id)
+    order, state overwritten per event (InvokeStatefulLambda.java:75-109).
 
     ``ttl_ms`` bounds per-key state lifetime — the 100 TB hygiene knob:
     without it, every key ever seen lives in the store forever (the
     reference has the same unbounded-state problem).  A key idle past
     the TTL reads as EMPTY on its next event — first-touch semantics
-    (``InvokeStatefulLambda.java:75-77``).  TWS path (production
-    clusters, protobuf runtime present): native ValueState TTL — both
-    read-expiry AND background eviction of idle keys.  Fallback path:
-    the blob is wrapped with its last-update timestamp and expiry is
-    decided on read (exact, same observable semantics); storage for a
-    never-touched-again key is not reclaimed here — GroupState's
+    (``InvokeStatefulLambda.java:75-77``).  The blob is wrapped with its
+    last-update timestamp and expiry is decided on read (exact); storage
+    for a never-touched-again key is not reclaimed — GroupState's
     ProcessingTimeTimeout would evict it, but a registered timeout
     keeps an availableNow query alive past its data (measured: query
-    never terminates), so the fallback trades idle-key eviction for
-    bounded-run semantics and documents it.
+    never terminates), so this path trades idle-key eviction for
+    bounded-run semantics.
     """
-    if force_path not in (None, "tws", "apws"):
-        raise ValueError(
-            f"force_path must be None, 'tws' or 'apws', got {force_path!r}"
-        )
-    grouped = events.groupBy("user_id")
-    use_tws = HAS_TWS_RUNTIME if force_path is None else force_path == "tws"
-    if use_tws:
-        return grouped.transformWithStateInPandas(
-            statefulProcessor=EntityFoldProcessor(
-                operator_name, ttl_ms=ttl_ms, latency=latency
-            ),
-            outputStructType=_FOLD_OUTPUT,
-            outputMode="Append",
-            timeMode="ProcessingTime" if ttl_ms is not None else "None",
-        )
-
     fn = get_stateful(operator_name)
     vfn = get_stateful_vectorized(operator_name)
     if latency is not None:
@@ -303,7 +205,7 @@ def apply_stateful(
         state.update((blob,) if ttl_ms is None else (now_ms, blob))
         yield out_pdf
 
-    return grouped.applyInPandasWithState(
+    return events.groupBy("user_id").applyInPandasWithState(
         fold_group,
         outputStructType=_FOLD_OUTPUT,
         stateStructType=(

@@ -1,16 +1,10 @@
 """Topic transport seam — ONE event-loop code path, two physical wires.
 
 The reference's transport is Kafka and nothing else
-(``StateFlowFlinkJob.java:47-54`` source, ``:127-147`` producers).  The
-sandbox has no broker and no ``spark-sql-kafka`` package, so round 3
-ran the live cycle on plain parquet directories — but through loop code
-that bypassed the production framing (``sources/kafka.py``), leaving the
-builders dead until a cluster exercised them.
-
-This module closes that gap with a *transport* seam.  A transport moves
-**Kafka-shaped records** — ``(key binary, value binary, topic, partition,
-offset, timestamp)``, the public ``format("kafka")`` schema
-(``sources.kafka.KAFKA_RECORD``) — between topics:
+(``StateFlowFlinkJob.java:47-54`` source, ``:127-147`` producers).  A
+*transport* moves **Kafka-shaped records** — ``(key binary, value binary,
+topic, partition, offset, timestamp)``, the public ``format("kafka")``
+schema (``sources.kafka.KAFKA_RECORD``) — between topics:
 
   * :class:`KafkaTransport` — the production wire: readers come from
     :func:`sources.kafka.kafka_reader` (R1) and appends are batch
@@ -117,13 +111,9 @@ class DirectoryTransport:
             shutil.rmtree(stage, ignore_errors=True)
 
     def read_batch(self, spark: SparkSession, topic: str) -> DataFrame:
-        """Bounded snapshot (drain checks / assertions).  Returns an
-        empty KAFKA_RECORD frame while the topic has no part-files yet."""
-        d = self.topic_dir(topic)
-        try:
-            return spark.read.schema(KAFKA_RECORD).parquet(d)
-        except Exception:  # directory exists but holds no part-files
-            return spark.createDataFrame([], KAFKA_RECORD)
+        """Bounded snapshot (drain checks / assertions); a topic with no
+        part-files yet reads as zero KAFKA_RECORD rows."""
+        return spark.read.schema(KAFKA_RECORD).parquet(self.topic_dir(topic))
 
 
 class KafkaTransport:

@@ -13,10 +13,8 @@ from hypothesis import strategies as st
 from stateflow_flink_spark.schemas import EVENT_ENVELOPE, REPLIES, REQUESTS
 from stateflow_flink_spark.sources.kafka import (
     KAFKA_RECORD,
-    TOPIC_CLIENT_REPLY,
     TOPIC_INTERNAL,
     decode_frames,
-    egress_split,
     encode_frames,
 )
 from stateflow_flink_spark.sources.proto import (
@@ -25,7 +23,6 @@ from stateflow_flink_spark.sources.proto import (
     encode_event,
     encode_event_request_reply,
 )
-from stateflow_flink_spark.streaming.routing import route_egress
 
 _COLS = [f.name for f in EVENT_ENVELOPE.fields]
 
@@ -234,161 +231,3 @@ def test_decode_null_value_tombstone(spark):
     row = decode_frames(spark.createDataFrame(records, KAFKA_RECORD)).collect()[0]
     assert row.event_id is None and row.payload is None
 
-
-def test_egress_split_feeds_both_producers(spark, envelopes):
-    df = spark.createDataFrame(envelopes, EVENT_ENVELOPE)
-    routed = route_egress(df)
-    client, internal = egress_split(routed)
-    client_rows = client.collect()
-    internal_rows = internal.collect()
-    # replies -> client_reply (EgressRouter.java:36-42); EventFlow
-    # requests -> internal feedback (:33-35); others dropped (ERROR)
-    assert [bytes(r.key) for r in client_rows] == [b"c3"]
-    assert client_rows[0].topic == TOPIC_CLIENT_REPLY
-    assert [bytes(r.key) for r in internal_rows] == [b"d4"]
-    assert internal_rows[0].topic == TOPIC_INTERNAL
-    # value framing survives the split: feedback event re-decodes intact
-    assert decode_event(bytes(internal_rows[0].value))["current_node_type"] == "step"
-
-
-# ---------------------------------------------------------------------------
-# JVM-native from_protobuf/to_protobuf seam (proto_native)
-# ---------------------------------------------------------------------------
-
-
-def test_descriptor_set_is_wellformed_wire():
-    """The hand-encoded FileDescriptorSet must frame correctly under the
-    package's own wire walker: one file, named event.proto, proto3, six
-    messages, THREE enums (Reply / Request / RouteDirection — the third
-    is referenced by Route.direction and its absence makes protobuf-java
-    descriptor cross-linking throw), and the Event message carrying
-    fields 1-6 with a oneof declaration.  (Full parse-by-protoc is
-    exercised by the native round-trip test below on clusters that ship
-    the jar.)"""
-    from stateflow_flink_spark.sources.proto import _fields
-    from stateflow_flink_spark.sources.proto_native import descriptor_set_bytes
-
-    files = [v for f, _, v in _fields(descriptor_set_bytes()) if f == 1]
-    assert len(files) == 1
-    names, msgs, enums, syntax = [], [], [], None
-    for f, _, v in _fields(bytes(files[0])):
-        if f == 1:
-            names.append(v.decode())
-        elif f == 4:
-            msgs.append(bytes(v))
-        elif f == 5:
-            enums.append(bytes(v))
-        elif f == 12:
-            syntax = v.decode()
-    assert names == ["event.proto"] and syntax == "proto3"
-    assert len(msgs) == 6 and len(enums) == 3
-
-    def enum_shape(e):
-        name = next(v.decode() for f, _, v in _fields(e) if f == 1)
-        numbers = []
-        for f, _, v in _fields(e):
-            if f == 2:
-                # EnumValueDescriptorProto.number must ALWAYS be present
-                # (descriptor.proto is proto2 / explicit presence), even 0
-                numbers.append(next(n for ff, _, n in _fields(bytes(v)) if ff == 2))
-        return name, numbers
-
-    shapes = dict(enum_shape(e) for e in enums)
-    assert set(shapes) == {"Reply", "Request", "RouteDirection"}
-    assert shapes["RouteDirection"] == [0, 1, 2]
-    for numbers in shapes.values():
-        assert numbers == list(range(len(numbers)))
-
-    def msg_name(m):
-        return next(v.decode() for f, _, v in _fields(m) if f == 1)
-
-    by_name = {msg_name(m): m for m in msgs}
-    assert set(by_name) == {
-        "FunctionType", "FunctionAddress", "EventFlowNode",
-        "Event", "Route", "EventRequestReply",
-    }
-    event = by_name["Event"]
-    fields = [bytes(v) for f, _, v in _fields(event) if f == 2]
-    oneofs = [bytes(v) for f, _, v in _fields(event) if f == 8]
-    assert len(oneofs) == 1
-    numbers = []
-    for fd in fields:
-        numbers.append(next(v for f, _, v in _fields(fd) if f == 3))
-    assert numbers == [1, 2, 3, 4, 5, 6]
-    # oneof_index present exactly on request/reply (field numbers 3, 4)
-    for fd in fields:
-        num = next(v for f, _, v in _fields(fd) if f == 3)
-        has_oneof = any(f == 9 for f, _, _ in _fields(fd))
-        assert has_oneof == (num in (3, 4))
-
-
-def test_descriptor_set_type_references_all_resolve():
-    """Every FieldDescriptorProto.type_name (field 6) in the descriptor
-    set must resolve to a message or enum declared in the same file —
-    the same cross-linking protobuf-java's FileDescriptor.buildFrom
-    performs before from_protobuf can use the descriptor.  (A missing
-    ".RouteDirection" once survived the wire-shape test and would have
-    thrown DescriptorValidationException only on jar-present clusters.)"""
-    from stateflow_flink_spark.sources.proto import _fields
-    from stateflow_flink_spark.sources.proto_native import descriptor_set_bytes
-
-    file = next(bytes(v) for f, _, v in _fields(descriptor_set_bytes()) if f == 1)
-    declared, referenced = set(), set()
-    for f, _, v in _fields(file):
-        if f in (4, 5):  # message_type / enum_type
-            name = next(n.decode() for ff, _, n in _fields(bytes(v)) if ff == 1)
-            declared.add("." + name)
-        if f == 4:
-            for ff, _, fd in _fields(bytes(v)):
-                if ff == 2:  # field
-                    for g, _, val in _fields(bytes(fd)):
-                        if g == 6:  # type_name
-                            referenced.add(val.decode())
-    assert referenced, "descriptor should reference composite types"
-    unresolved = referenced - declared
-    assert not unresolved, f"dangling type references: {sorted(unresolved)}"
-
-
-def test_native_round_trip_matches_pandas_codec(spark, monkeypatch):
-    """With SPARK_GRAFT_NATIVE_PROTO=1, from_proto_auto/to_proto_auto
-    must reproduce the pandas codec's bytes and decode exactly.  Skips
-    where the spark-protobuf jar is absent (this sandbox)."""
-    from pyspark.sql import functions as F
-
-    from stateflow_flink_spark.sources import proto_native
-
-    monkeypatch.setenv(proto_native.NATIVE_FLAG, "1")
-    assert proto_native.native_enabled()
-
-    wire = encode_event(_canon(event_id="7", fun_name="user",
-                               fun_stateful=True, fun_key="7",
-                               request="InvokeStateful", payload=b"{}"))
-    df = spark.createDataFrame([(bytearray(wire),)], "value binary")
-    try:
-        got = df.select(
-            proto_native.from_proto_auto(F.col("value")).alias("e")
-        ).select("e.*").collect()
-    except Exception as exc:
-        # Skip ONLY for jar-absence signatures (class-load / missing
-        # protobuf dependency).  A DescriptorValidationException means
-        # our hand-encoded descriptor set is malformed — that must FAIL,
-        # not skip (a broad skip masked a missing-enum bug once).
-        msg = f"{type(exc).__name__}: {exc}"
-        jar_absent = any(
-            sig in msg
-            for sig in (
-                "JavaPackage",  # pyspark stub when the scala object is absent
-                "ClassNotFoundException",
-                "NoClassDefFoundError",
-                "PROTOBUF_DEPENDENCY_NOT_FOUND",
-                "PROTOBUF_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE",
-                "CANNOT_LOAD_PROTOBUF_CLASS",
-                "cannot be found",
-            )
-        )
-        if "DescriptorValidation" in msg or not jar_absent:
-            raise
-        pytest.skip(f"spark-protobuf jar unavailable: {type(exc).__name__}")
-    row = got[0].asDict()
-    assert row["event_id"] == "7" and row["request"] == "InvokeStateful"
-    assert row["reply"] is None and bytes(row["payload"]) == b"{}"

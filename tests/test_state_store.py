@@ -16,8 +16,6 @@ import datetime as dt
 import glob
 import time
 
-import pytest
-
 from stateflow_flink_spark.session import rocksdb_state, stream_partitions
 from stateflow_flink_spark.streaming.state import apply_stateful, run_stateful_stream
 
@@ -219,46 +217,6 @@ def test_scd2_stream_late_cross_batch_event_cannot_invert_interval(spark, tmp_pa
     assert third[0].valid_from == _dt.datetime(2024, 1, 1, 0, 0, 10)
     assert third[0].is_clamped
     assert third[0].valid_to == _dt.datetime(2024, 1, 1, 0, 0, 20)
-
-
-def test_tws_and_apws_paths_produce_identical_rows(spark, tmp_path):
-    """Run the SAME stateful fold through transformWithStateInPandas
-    (production path, Spark 4 ValueState) and applyInPandasWithState
-    (fallback) and byte-compare the rows.  Skips only when the tWS
-    Python driver worker cannot start in this environment — it requires
-    google.protobuf (probed: absent the package, the worker exits with
-    'TransformWithStateInPySpark driver worker exited unexpectedly');
-    on any protobuf-equipped cluster both paths execute and must agree."""
-    from stateflow_flink_spark.streaming.state import HAS_TWS_RUNTIME, apply_stateful
-
-    if not HAS_TWS_RUNTIME:
-        pytest.skip(
-            "google.protobuf absent: transformWithStateInPandas driver worker "
-            "crashes at start — only the applyInPandasWithState path can run "
-            "in this container"
-        )
-
-    staged = str(tmp_path / "staged")
-    rows = [_ev(i, uid=i % 4, v=0.25 * i) for i in range(1, 17)]
-    _write_events(spark, staged, rows)
-
-    def run(path: str) -> list:
-        got: list = []
-        result = apply_stateful(_stream(spark, staged), force_path=path)
-        with stream_partitions(spark):
-            q = (
-                result.writeStream.foreachBatch(
-                    lambda df, bid: got.extend(df.collect())
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", str(tmp_path / f"ck_{path}"))
-                .start()
-            )
-            q.awaitTermination()
-        return sorted(tuple(r) for r in got)
-
-    tws, apws = run("tws"), run("apws")
-    assert tws == apws and len(tws) == 16
 
 
 def test_minhash_dedup_stream_state_survives_restart(spark, tmp_path):

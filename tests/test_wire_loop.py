@@ -11,7 +11,6 @@ that substitution is what test_kafka_transport_format_wiring pins.
 
 from __future__ import annotations
 
-import tempfile
 import threading
 
 import pytest
@@ -20,6 +19,7 @@ from pyspark.sql import functions as F
 from stateflow_flink_spark.io import load
 from stateflow_flink_spark.sources.kafka import KAFKA_RECORD, TOPIC_CLIENT_REQUEST
 from stateflow_flink_spark.streaming.feedback import (
+    invoked_advance,
     make_flow_requests,
     run_event_loop,
 )
@@ -32,14 +32,13 @@ from stateflow_flink_spark.streaming.transport import (
 from .conftest import SF_SMOKE
 
 
-def test_wire_loop_drains_every_flow_exactly_once(spark):
-    """Same contract as test_feedback_loop_drains_every_flow_exactly_once
-    but over the WIRE path: each flow (event_id % 3 + 1 hops) is decoded
-    and encoded through proto frames and lands exactly one
-    SuccessfulInvocation reply.  A worker batch hops its flows in place
-    up to MAX_FLOW_STEPS, so ``internal`` holds one frame per flow (its
-    ingress frame) plus one more for the flow of MAX_FLOW_STEPS + 1
-    hops, which crosses the feedback edge once."""
+def test_wire_loop_drains_every_flow_exactly_once(spark, tmp_path):
+    """Each flow (event_id % 3 + 1 hops) is decoded and encoded through
+    proto frames and lands exactly one SuccessfulInvocation reply.  A
+    worker batch hops its flows in place up to MAX_FLOW_STEPS, so
+    ``internal`` holds one frame per flow (its ingress frame) plus one
+    more for the flow of MAX_FLOW_STEPS + 1 hops, which crosses the
+    feedback edge once."""
     events = load(spark, SF_SMOKE, "events")
     (long_id,) = events.agg(F.max("event_id") + 1).first()
     flows = (
@@ -54,7 +53,7 @@ def test_wire_loop_drains_every_flow_exactly_once(spark):
     )
     n = flows.count()
     seed = make_flow_requests(spark, flows)
-    transport = DirectoryTransport(tempfile.mkdtemp(prefix="sfs_wire_"))
+    transport = DirectoryTransport(str(tmp_path))
     replies = run_event_loop(spark, transport, seed, timeout_s=90.0)
     rows = replies.collect()
     assert len(rows) == n  # exactly one reply per flow
@@ -69,7 +68,7 @@ def test_wire_loop_drains_every_flow_exactly_once(spark):
     assert transport.read_batch(spark, "internal").count() == n + 1
 
 
-def test_wire_loop_ping_answered_from_ingress(spark):
+def test_wire_loop_ping_answered_from_ingress(spark, tmp_path):
     """Ping never enters the internal topic: the ingress router answers
     Pong directly (IngressRouter.java:42-52) — mixed seed of Pings and
     one-hop flows must yield exactly one reply each, with the right
@@ -87,7 +86,7 @@ def test_wire_loop_ping_answered_from_ingress(spark):
         for i in range(2)
     ]
     pings = spark.createDataFrame(ping_rows, seed.schema)
-    transport = DirectoryTransport(tempfile.mkdtemp(prefix="sfs_wire_ping_"))
+    transport = DirectoryTransport(str(tmp_path))
     replies = run_event_loop(
         spark, transport, seed.unionByName(pings), timeout_s=90.0
     )
@@ -105,11 +104,57 @@ def test_wire_loop_ping_answered_from_ingress(spark):
     assert keys == {"0", "1", "2"}
 
 
-def test_directory_transport_record_shape_and_key_partitioning(spark):
+def test_event_loop_populates_invoke_latency_histogram(spark, tmp_path):
+    """With ``advance=invoked_advance(lat)`` every hop of the live cycle
+    runs as a per-event invoked call and lands one histogram sample:
+    after the drain the driver-side snapshot holds EXACTLY one sample
+    per hop (the sum of steps over the seeds), mean/max are sane, and
+    each flow still gets one SuccessfulInvocation reply with its counter
+    fully burned.  This is the reference's metric-scrape point: the
+    Dropwizard histogram read after the job has processed its events."""
+    from stateflow_flink_spark.streaming.metrics import InvokeLatency
+
+    flows = (
+        load(spark, SF_SMOKE, "events")
+        .select("event_id", (F.col("event_id") % 3 + 1).alias("steps_left"))
+        .limit(60)
+    )
+    n = flows.count()
+    total_hops = flows.agg(F.sum("steps_left")).collect()[0][0]
+    lat = InvokeLatency(spark, name="feedback_hop_latency")
+    replies = run_event_loop(
+        spark,
+        DirectoryTransport(str(tmp_path)),
+        make_flow_requests(spark, flows),
+        advance=invoked_advance(lat),
+        timeout_s=90.0,
+    )
+    rows = replies.collect()
+    assert len(rows) == n
+    assert {r.event_id for r in rows} == {
+        str(e) for (e,) in flows.select("event_id").collect()
+    }
+    for r in rows:
+        assert r.reply == "SuccessfulInvocation"
+        assert r.current_fun_key == "0"
+
+    snap = lat.snapshot()
+    assert snap["name"] == "feedback_hop_latency"
+    assert snap["count"] == total_hops, snap
+    assert sum(snap["buckets"].values()) == total_hops
+    assert snap["max_ms"] >= 0.0 and snap["mean_ms"] > 0.0
+    assert snap["p50_le_ms"] is not None and snap["p99_le_ms"] is not None
+
+
+def test_directory_transport_record_shape_and_key_partitioning(spark, tmp_path):
     """The sandbox transport must produce the exact public Kafka record
     schema and honor the one-key-one-partition contract the loop's
-    per-event ordering relies on."""
-    transport = DirectoryTransport(tempfile.mkdtemp(prefix="sfs_rec_"), n_partitions=4)
+    per-event ordering relies on.  A topic nothing was written to yet
+    reads as zero rows of that schema."""
+    transport = DirectoryTransport(str(tmp_path), n_partitions=4)
+    empty = transport.read_batch(spark, TOPIC_CLIENT_REQUEST)
+    assert empty.schema == KAFKA_RECORD
+    assert empty.count() == 0
     frames = spark.range(50).select(
         F.encode(F.col("id").cast("string"), "utf-8").alias("key"),
         F.col("id").cast("string").cast("binary").alias("value"),
@@ -132,13 +177,13 @@ def test_directory_transport_record_shape_and_key_partitioning(spark):
     assert got.select("offset", "partition").distinct().count() == 100
 
 
-def test_directory_transport_concurrent_appends_land_every_row(spark):
+def test_directory_transport_concurrent_appends_land_every_row(spark, tmp_path):
     """Two producers on one topic is the loop's normal case (ingress
     answers Pings into client_reply while the worker writes replies
     there). Concurrent appends must neither raise nor lose rows: each
     job commit may only publish its own part files. Rounds of eight
     appends released together make the commits overlap."""
-    transport = DirectoryTransport(tempfile.mkdtemp(prefix="sfs_conc_"))
+    transport = DirectoryTransport(str(tmp_path))
     n_rounds, n_threads, rows = 3, 8, 5000
     errors: list[BaseException] = []
     start = threading.Barrier(n_threads)
