@@ -15,9 +15,11 @@ is a framed Event proto, every read crosses ``decode_frames``, every
 route crosses ``streaming.routing`` — through the transport seam
 (``streaming/transport.py``), so the identical code path runs on
 directory-topics in-sandbox and ``format("kafka")`` in production.
-A worker micro-batch moves each flow through every hop it can finish
-in place (up to ``flow.MAX_FLOW_STEPS``), so only flows past that bound
-cross the feedback edge again.
+Both queries run one batch function, as the reference's one job runs
+every event through ``IngressRouter``, the invoke and ``EgressRouter``:
+the micro-batch that ingests a flow also hops it in place, up to
+``flow.MAX_FLOW_STEPS`` hops, so only flows past that bound cross the
+feedback edge.
 
 Termination is the driver's concern (the reference's job runs forever;
 bounded fixtures need a drain): the loop stops once ``client_reply``
@@ -152,19 +154,21 @@ def run_event_loop(
     Data path (identical on DirectoryTransport and KafkaTransport):
 
       client --encode_frames--> client_request
-      query A: decode_frames -> route_ingress -> {EGRESS -> client_reply,
-               INTERNAL -> internal}                       (R3 ingress)
-      query B: decode_frames -> repeat {advance -> route_egress ->
-               localCheckpoint} on the rows still INTERNAL, until none
-               is left or MAX_FLOW_STEPS hops -> {client_reply, once
-               per batch; internal (the feedback edge), only for flows
-               still mid-flow after the bound}              (R4+R11+R13)
+      query A (client_request) and query B (internal), one batch function:
+        decode_frames -> route_ingress -> localCheckpoint
+          EGRESS   -> stamp out_reply                   (R3 ingress)
+          INTERNAL -> repeat {advance -> route_egress -> localCheckpoint}
+                      on the rows still INTERNAL, until none is left or
+                      MAX_FLOW_STEPS hops               (R4+R11)
+        -> client_reply, one append per batch; internal (the feedback
+           edge), only flows still mid-flow after the bound   (R13)
 
-    A flow enters ``internal`` once, through ingress, and crosses as many
-    worker micro-batches as it has runs of MAX_FLOW_STEPS hops: each
-    batch pays its trigger, decode, encode and appends once, not once
-    per hop (the Drizzle amortization of per-batch coordination). No hop
-    here waits on keyed state, so none has to cross the topic.
+    A flow of at most MAX_FLOW_STEPS hops is answered in the micro-batch
+    that ingests it and never touches ``internal``; a longer one crosses
+    it once per further run of MAX_FLOW_STEPS hops. Each batch pays its
+    trigger, decode, encode and appends once, not once per hop (the
+    Drizzle amortization of per-batch coordination). No hop here waits
+    on keyed state, so none has to cross the topic.
     """
     base = tempfile.mkdtemp(prefix="sfs_wireloop_ck_")
     n_expected = expected_replies if expected_replies is not None else seed.count()
@@ -173,78 +177,60 @@ def run_event_loop(
     transport.append(encode_frames(seed, TOPIC_CLIENT_REQUEST), TOPIC_CLIENT_REQUEST)
 
     env_cols = EVENT_ENVELOPE.fieldNames()
-
-    # --- query A: ingress router (client_request -> internal/reply) --
-    ingress = route_ingress(
-        decode_frames(transport.read_stream(spark, TOPIC_CLIENT_REQUEST))
-    )
-
-    def ingress_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed = batch_df.localCheckpoint()  # route ONCE, split twice
-        # Ping / already-finished flows answer the client directly
-        # (IngressRouter.java:42-52, :79-90): stamp out_reply into the
-        # oneof before framing.
-        direct = (
-            routed.filter(F.col("direction") == EGRESS)
-            .withColumns(
-                {
-                    "reply": F.col("out_reply"),
-                    "request": F.lit(None).cast("string"),
-                }
-            )
-            .select(*env_cols)
-        )
-        if not direct.isEmpty():
-            transport.append(
-                encode_frames(direct, TOPIC_CLIENT_REPLY), TOPIC_CLIENT_REPLY
-            )
-        mid = routed.filter(F.col("direction") == INTERNAL).select(*env_cols)
-        if not mid.isEmpty():
-            transport.append(encode_frames(mid, TOPIC_INTERNAL), TOPIC_INTERNAL)
-
-    qa = (
-        ingress.writeStream.foreachBatch(ingress_batch)
-        .option("checkpointLocation", os.path.join(base, "ck_a"))
-        .trigger(processingTime=trigger_s)
-        .start()
-    )
-
-    # --- query B: flow worker (internal -> hops -> egress split) -----
-    internal = decode_frames(transport.read_stream(spark, TOPIC_INTERNAL))
+    is_egress = F.col("direction") == EGRESS
     is_client = F.col("direction") == CLIENT
     is_internal = F.col("direction") == INTERNAL
 
-    def worker_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Hop the batch's flows in place until none is left mid-flow,
-        # up to MAX_FLOW_STEPS hops. The checkpoint is each hop's only
-        # action; the observation sizes both sides of the split on it.
-        frontier = batch_df.select(*env_cols)
+    def split(df: DataFrame, *directions: str) -> tuple[DataFrame, dict]:
+        """Checkpoint ``df`` eagerly, the split's only action, with an
+        observation counting its rows per direction on the way."""
+        sizes = Observation()
+        counted = df.observe(
+            sizes,
+            *(F.count_if(F.col("direction") == d).alias(d) for d in directions),
+        ).localCheckpoint()
+        return counted, sizes.get
+
+    def loop_batch(batch_df: DataFrame, batch_id: int) -> None:
+        routed, counts = split(batch_df, EGRESS, INTERNAL)  # route ONCE
         replies: list[DataFrame] = []
-        for _ in range(MAX_FLOW_STEPS):
-            sizes = Observation()
-            routed = (
-                route_egress(advance(frontier))
-                .observe(
-                    sizes,
-                    F.count_if(is_client).alias(CLIENT),
-                    F.count_if(is_internal).alias(INTERNAL),
+        if counts.get(EGRESS):
+            # Ping / already-finished flows answer the client directly
+            # (IngressRouter.java:42-52, :79-90): stamp out_reply into
+            # the oneof before framing.
+            replies.append(
+                routed.filter(is_egress)
+                .withColumns(
+                    {
+                        "reply": F.col("out_reply"),
+                        "request": F.lit(None).cast("string"),
+                    }
                 )
-                .localCheckpoint()
+                .select(*env_cols)
             )
-            counts = sizes.get
-            if counts.get(CLIENT):
-                replies.append(routed.filter(is_client).select(*env_cols))
+        if counts.get(INTERNAL):
+            # Hop the batch's flows in place until none is left
+            # mid-flow, up to MAX_FLOW_STEPS hops, one action per hop.
             frontier = routed.filter(is_internal).select(*env_cols)
-            if not counts.get(INTERNAL):
-                break
-        else:
-            # THE FEEDBACK EDGE: flows still mid-flow after the bound
-            # go back into query B's own source topic
-            # (StateFlowFlinkJob.java:127-132).
-            transport.append(encode_frames(frontier, TOPIC_INTERNAL), TOPIC_INTERNAL)
+            for _ in range(MAX_FLOW_STEPS):
+                hopped, counts = split(
+                    route_egress(advance(frontier)), CLIENT, INTERNAL
+                )
+                if counts.get(CLIENT):
+                    replies.append(hopped.filter(is_client).select(*env_cols))
+                frontier = hopped.filter(is_internal).select(*env_cols)
+                if not counts.get(INTERNAL):
+                    break
+            else:
+                # THE FEEDBACK EDGE: flows still mid-flow after the
+                # bound go back into query B's source topic
+                # (StateFlowFlinkJob.java:127-132).
+                transport.append(
+                    encode_frames(frontier, TOPIC_INTERNAL), TOPIC_INTERNAL
+                )
         if replies:
             # every hop keeps the batch's partitions, so a union of k
-            # hops has k times as many: encode in the batch's count
+            # parts has k times as many: encode in the batch's count
             done = reduce(DataFrame.unionByName, replies).coalesce(
                 replies[0].rdd.getNumPartitions()
             )
@@ -252,12 +238,16 @@ def run_event_loop(
                 encode_frames(done, TOPIC_CLIENT_REPLY), TOPIC_CLIENT_REPLY
             )
 
-    qb = (
-        internal.writeStream.foreachBatch(worker_batch)
-        .option("checkpointLocation", os.path.join(base, "ck_b"))
+    # One query per source topic, both running loop_batch: query A
+    # ingests client_request, query B the feedback edge.
+    queries = [
+        route_ingress(decode_frames(transport.read_stream(spark, topic)))
+        .writeStream.foreachBatch(loop_batch)
+        .option("checkpointLocation", os.path.join(base, name))
         .trigger(processingTime=trigger_s)
         .start()
-    )
+        for name, topic in (("ck_a", TOPIC_CLIENT_REQUEST), ("ck_b", TOPIC_INTERNAL))
+    ]
 
     try:
         deadline = time.time() + timeout_s
@@ -272,8 +262,8 @@ def run_event_loop(
                 f"wire loop drained {done}/{n_expected} within {timeout_s}s"
             )
     finally:
-        qa.stop()
-        qb.stop()
+        for q in queries:
+            q.stop()
         # fresh per call, so nothing can resume from it
         shutil.rmtree(base, ignore_errors=True)
     return decode_frames(transport.read_batch(spark, TOPIC_CLIENT_REPLY))

@@ -314,14 +314,20 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         # N rewrites batch=N, never appends beside it
         df.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
 
-    with stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sfs_fb_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
+    ckpt = tempfile.mkdtemp(prefix="sfs_fb_ckpt_")
+    try:
+        with stream_partitions(spark):
+            q = (
+                stream.writeStream.foreachBatch(write_batch)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        # fresh per call, so nothing can resume from it; the sink stays,
+        # the returned frame reads it
+        shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(stage, ignore_errors=True)
     sunk = spark.read.option("basePath", out).parquet(f"{out}/batch=*")
     return sunk.groupBy("event_type").agg(
@@ -452,6 +458,7 @@ def run_incremental_rollup(
     fixture-scale query path.  Exposed separately so tests can feed a
     deliberately multi-batch source (maxFilesPerTrigger) through the
     merge path and replay individual batches."""
+    import shutil
     import tempfile
 
     if root is None:
@@ -466,14 +473,20 @@ def run_incremental_rollup(
         merge_rollup_batch(root, df, bid)
         written.append(bid)
 
-    with stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sfs_rollup_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
+    ckpt = tempfile.mkdtemp(prefix="sfs_rollup_ckpt_")
+    try:
+        with stream_partitions(spark):
+            q = (
+                stream.writeStream.foreachBatch(_merge)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        # fresh per call, so nothing can resume from it; the rollup
+        # root stays, the returned frame reads it
+        shutil.rmtree(ckpt, ignore_errors=True)
     if written:
         final = max(written)
     else:

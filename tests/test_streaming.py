@@ -312,6 +312,29 @@ def test_incremental_rollup_is_batch_split_independent(spark, tmp_path):
     assert m_rows == [tuple(r) for r in batch.collect()]
 
 
+def test_foreach_batch_queries_release_their_checkpoints(
+    spark, duck, tmp_path, monkeypatch
+):
+    """q_stream_foreach_batch and run_incremental_rollup (through
+    q_rollup_incremental) each start a query on a fresh checkpoint dir
+    and remove it once the query ends: no ``*_ckpt_*`` dir is left in
+    the temp dir, while the sink and rollup dirs their lazy results read
+    stay, and both results still match their oracles."""
+    from stateflow_flink_spark.plans.registry import ORACLE
+
+    from .parity import compare
+
+    load_all_modules()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in ("q_stream_foreach_batch", "q_rollup_incremental"):
+        got = QUERIES[name](spark, SF_SMOKE).toPandas()
+        compare(got, duck.execute(ORACLE[name]).df(), name)
+    left = sorted(p.name for p in tmp_path.iterdir())
+    assert not [d for d in left if "_ckpt_" in d], left
+    assert any(d.startswith("sfs_fb_sink_") for d in left), left
+    assert any(d.startswith("sfs_rollup_") for d in left), left
+
+
 def test_incremental_rollup_replayed_batch_is_idempotent(spark, tmp_path):
     """Failure contract: if a micro-batch is REPLAYED (crash between
     sink write and checkpoint commit), the versioned merge must

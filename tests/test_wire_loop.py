@@ -12,12 +12,18 @@ that substitution is what test_kafka_transport_format_wiring pins.
 from __future__ import annotations
 
 import threading
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from stateflow_flink_spark.io import load
-from stateflow_flink_spark.sources.kafka import KAFKA_RECORD, TOPIC_CLIENT_REQUEST
+from stateflow_flink_spark.schemas import EVENT_ENVELOPE
+from stateflow_flink_spark.sources.kafka import (
+    KAFKA_RECORD,
+    TOPIC_CLIENT_REQUEST,
+    decode_frames,
+)
 from stateflow_flink_spark.streaming.feedback import (
     invoked_advance,
     make_flow_requests,
@@ -34,11 +40,10 @@ from .conftest import SF_SMOKE
 
 def test_wire_loop_drains_every_flow_exactly_once(spark, tmp_path):
     """Each flow (event_id % 3 + 1 hops) is decoded and encoded through
-    proto frames and lands exactly one SuccessfulInvocation reply.  A
-    worker batch hops its flows in place up to MAX_FLOW_STEPS, so
-    ``internal`` holds one frame per flow (its ingress frame) plus one
-    more for the flow of MAX_FLOW_STEPS + 1 hops, which crosses the
-    feedback edge once."""
+    proto frames and lands exactly one SuccessfulInvocation reply.  The
+    batch that ingests a flow hops it in place up to MAX_FLOW_STEPS, so
+    ``internal`` holds one frame only: the flow of MAX_FLOW_STEPS + 1
+    hops, which crosses the feedback edge once."""
     events = load(spark, SF_SMOKE, "events")
     (long_id,) = events.agg(F.max("event_id") + 1).first()
     flows = (
@@ -65,27 +70,33 @@ def test_wire_loop_drains_every_flow_exactly_once(spark, tmp_path):
         assert r.request is None  # oneof flipped request -> reply
         assert r.current_node_type == "RETURN"
         assert int(r.current_fun_key) == 0  # counter fully burned
-    assert transport.read_batch(spark, "internal").count() == n + 1
+    internal = transport.read_batch(spark, "internal")
+    assert [bytes(k).decode() for (k,) in internal.select("key").collect()] == [
+        str(long_id)
+    ]
+
+
+def _pings(spark, n: int):
+    """``n`` Ping requests ``ping-0`` .. ``ping-<n-1>`` as EVENT_ENVELOPE rows."""
+    rows = [
+        (f"ping-{i}", "globals", "ping", False, "", "Ping", None,
+         b"", "", "", "", "")
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, EVENT_ENVELOPE)
 
 
 def test_wire_loop_ping_answered_from_ingress(spark, tmp_path):
-    """Ping never enters the internal topic: the ingress router answers
-    Pong directly (IngressRouter.java:42-52) — mixed seed of Pings and
-    one-hop flows must yield exactly one reply each, with the right
-    oneof member."""
+    """The ingress router answers Ping with Pong directly
+    (IngressRouter.java:42-52) — mixed seed of Pings and one-hop flows
+    must yield exactly one reply each, with the right oneof member, and
+    nothing crosses the internal topic: the flows finish in the batch
+    that ingests them."""
     flows = spark.range(3).select(
         F.col("id").alias("event_id"), F.lit(1).alias("steps_left")
     )
     seed = make_flow_requests(spark, flows)
-    pings = seed.limit(0)  # envelope-shaped empty frame, then union rows
-    ping_rows = [
-        (
-            f"ping-{i}", "globals", "ping", False, "", "Ping", None,
-            b"", "", "", "", "",
-        )
-        for i in range(2)
-    ]
-    pings = spark.createDataFrame(ping_rows, seed.schema)
+    pings = _pings(spark, 2)
     transport = DirectoryTransport(str(tmp_path))
     replies = run_event_loop(
         spark, transport, seed.unionByName(pings), timeout_s=90.0
@@ -98,10 +109,86 @@ def test_wire_loop_ping_answered_from_ingress(spark, tmp_path):
         "ping-0": "Pong",
         "ping-1": "Pong",
     }
-    # Pings never crossed the feedback topic
-    internal = transport.read_batch(spark, "internal")
-    keys = {bytes(r.key).decode() for r in internal.select("key").collect()}
-    assert keys == {"0", "1", "2"}
+    assert transport.read_batch(spark, "internal").count() == 0
+
+
+class CountingTransport(DirectoryTransport):
+    """DirectoryTransport that counts its appends per topic."""
+
+    def __init__(self, base: str) -> None:
+        super().__init__(base)
+        self.appends: Counter[str] = Counter()
+
+    def append(self, frames, topic: str) -> None:
+        self.appends[topic] += 1
+        super().append(frames, topic)
+
+
+def _epoch(offset: int) -> int:
+    """The producer epoch of a DirectoryTransport record: which append
+    wrote it, counted over all topics of the transport."""
+    return offset >> 40
+
+
+def test_wire_loop_answers_flows_in_the_ingesting_batch(spark, tmp_path):
+    """Pings and flows of 1 to 3 hops are all answered by the batch that
+    ingests them: after the seed, one append to client_reply and none to
+    internal.  A flow of MAX_FLOW_STEPS + 1 hops adds exactly one append
+    to internal, and its reply is appended after that frame, so it was
+    the internal topic's query that answered it."""
+    flows = spark.range(9).select(
+        F.col("id").alias("event_id"), (F.col("id") % 3 + 1).alias("steps_left")
+    )
+    seed = make_flow_requests(spark, flows)
+    pings = _pings(spark, 3)
+    expected = {str(i): "SuccessfulInvocation" for i in range(9)}
+    expected.update({f"ping-{i}": "Pong" for i in range(3)})
+
+    def check(replies) -> None:
+        rows = replies.collect()
+        assert len(rows) == len(expected)  # exactly one reply per request
+        assert {r.event_id: r.reply for r in rows} == expected
+        for r in rows:
+            assert r.request is None
+            if r.reply == "SuccessfulInvocation":
+                assert r.current_fun_key == "0"
+
+    transport = CountingTransport(str(tmp_path / "short"))
+    check(run_event_loop(spark, transport, seed.unionByName(pings), timeout_s=90.0))
+    assert transport.appends == {TOPIC_CLIENT_REQUEST: 1, "client_reply": 1}
+
+    long_seed = make_flow_requests(
+        spark,
+        spark.range(1).select(
+            F.lit(99).cast("long").alias("event_id"),
+            F.lit(MAX_FLOW_STEPS + 1).cast("long").alias("steps_left"),
+        ),
+    )
+    expected["99"] = "SuccessfulInvocation"
+    transport = CountingTransport(str(tmp_path / "long"))
+    check(
+        run_event_loop(
+            spark,
+            transport,
+            seed.unionByName(pings).unionByName(long_seed),
+            timeout_s=90.0,
+        )
+    )
+    assert transport.appends == {
+        TOPIC_CLIENT_REQUEST: 1,
+        "internal": 1,
+        "client_reply": 2,
+    }
+    ((internal_offset,),) = (
+        transport.read_batch(spark, "internal").select("offset").collect()
+    )
+    reply_epochs = {
+        r.event_id: _epoch(r.offset)
+        for r in decode_frames(transport.read_batch(spark, "client_reply")).collect()
+    }
+    long_epoch = reply_epochs.pop("99")
+    assert long_epoch > _epoch(internal_offset)
+    assert long_epoch not in set(reply_epochs.values())
 
 
 def test_event_loop_populates_invoke_latency_histogram(spark, tmp_path):
