@@ -5,17 +5,25 @@ every query receives ``(spark, sf_dir)`` and calls ``load`` per table.
 Scans stay declarative so Catalyst pushes predicates / prunes columns
 into the parquet reader — verify with ``df.explain("formatted")``
 (``PushedFilters`` / ``ReadSchema`` rows).
+
+Streaming queries open a table with :func:`staged_stream` and drain it
+with :func:`run_bounded`, the one memory-sink ``availableNow`` runner.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import shutil
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import TABLE_NAMES
+from .schemas import TABLE_NAMES, TABLE_SCHEMAS
+from .session import stream_partitions
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
@@ -112,6 +120,56 @@ def open_events_stream(
         _SCHEMA_CACHE[key] = schema
     stream = spark.readStream.schema(schema).parquet(stage_dir)
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+@contextmanager
+def staged_stream(spark: SparkSession, sf_dir: str, name: str) -> Iterator[DataFrame]:
+    """Open fixture table ``name`` as a file stream; remove the stage on exit.
+
+    Spark's file stream source reads a directory, so the single fixture
+    file is copied into a fresh ``sfs_stream_<name>_*`` dir.  Run the
+    query inside the ``with`` block: a memory or foreachBatch sink has
+    its rows by the time the block ends, and nothing reads the stage
+    after that.
+    """
+    stage = tempfile.mkdtemp(prefix=f"sfs_stream_{name}_")
+    try:
+        src = table_path(sf_dir, name)
+        shutil.copy(src, os.path.join(stage, "part-0.parquet"))
+        if name == "events":
+            yield open_events_stream(spark, stage, src)
+        else:
+            yield spark.readStream.schema(TABLE_SCHEMAS[name]).parquet(stage)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def run_bounded(
+    spark: SparkSession,
+    frame: DataFrame,
+    name: str,
+    mode: str = "append",
+    partitions: int | str | None = None,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Drain a streaming frame with one ``availableNow`` run into the
+    memory sink ``name`` and return the sink's table.
+
+    ``partitions`` pins the state partition count for the run (see
+    ``session.stream_partitions``); ``checkpoint_dir`` lets a later run
+    resume the same state.
+    """
+    with stream_partitions(spark, partitions):
+        writer = (
+            frame.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+        )
+        if checkpoint_dir is not None:
+            writer = writer.option("checkpointLocation", checkpoint_dir)
+        writer.start().awaitTermination()
+    return spark.table(name)
 
 
 # df.rdd.getNumPartitions() materializes a physical plan driver-side on

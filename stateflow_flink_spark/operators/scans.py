@@ -14,15 +14,13 @@ between scanning 2 columns' pages and the whole table.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load, open_events_stream
+from ..io import load, run_bounded, staged_stream
 from ..plans.registry import query
-from ..session import stream_partitions
 
 
 @query(
@@ -82,24 +80,10 @@ def q_stream_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     all available input then stops — no wall-clock flakiness), runs a
     streaming aggregation, and materializes via the memory sink.
     """
-    # Spark's file stream source requires a directory; stage the single
-    # fixture file into one (at scale the source would already be a dir
-    # of arriving part files).
-    stage = tempfile.mkdtemp(prefix="sfs_stream_src_")
-    src = os.path.join(sf_dir, "events.parquet")
-    shutil.copy(src, os.path.join(stage, "part-0.parquet"))
-    stream = open_events_stream(spark, stage, src)
-    counts = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    with stream_partitions(spark):
-        qy = (
-            counts.writeStream.format("memory")
-            .queryName("sfs_stream_file_source")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_file_source")
+    # at scale the source would already be a dir of arriving part files
+    with staged_stream(spark, sf_dir, "events") as stream:
+        counts = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
+        return run_bounded(spark, counts, "sfs_stream_file_source", mode="complete")
 
 
 @query(

@@ -9,8 +9,10 @@ is a few scalars, read-modify-written per event, surviving restarts in
 the checkpoint.
 
 State per user: the pending partial match — (start view's event_id,
-its unix-micros timestamp, clicks seen since).  A purchase arriving on
-a pending state EMITS the completed match and resets; determinism
+its unix-micros timestamp, clicks seen since), folded by a per-user
+step over ``state.keyed_fold``.  A purchase arriving on a pending state
+EMITS the completed match and resets; an idle user's state is removed,
+so the store holds pending matches only.  Determinism
 under any batching follows because events fold in (ts, event_id) order
 within a batch and the pending-match state carries across batches (a
 pattern split mid-`click*` across micro-batches completes exactly as
@@ -24,17 +26,15 @@ checkpointing on top.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ..io import run_bounded, staged_stream
 from ..operators.cep import _CEP_ORACLE
 from ..plans.registry import query
-from ..session import python_state_partitions, stream_partitions
-from .state import stream_events_dir
+from ..session import python_state_partitions
+from .state import keyed_fold
 
 _CEP_OUTPUT = (
     "user_id long, start_event_id long, end_event_id long, "
@@ -47,13 +47,11 @@ def apply_cep_stream(events: DataFrame) -> DataFrame:
     emits one row per completed `view click* purchase` match.  Columns
     required on ``events``: user_id, ts, event_id, event_type."""
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            start_id, start_us, n_clicks = state.get
+    def step(user_id, pdf: pd.DataFrame, stored):
+        if stored is not None:
+            start_id, start_us, n_clicks = stored
         else:
             start_id, start_us, n_clicks = None, None, None
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
         out: dict[str, list] = {c: [] for c in
                                 ("start_event_id", "end_event_id",
                                  "n_clicks", "span_us")}
@@ -75,25 +73,19 @@ def apply_cep_stream(events: DataFrame) -> DataFrame:
                 start_id = start_us = n_clicks = None
             else:  # signup / error / unmatched purchase: reset to idle
                 start_id = start_us = n_clicks = None
-        if start_id is None:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((start_id, start_us, n_clicks))
-        if out["end_event_id"]:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out["end_event_id"]),
-                    **out,
-                }
-            )
+        matches = pd.DataFrame(
+            {"user_id": [user_id] * len(out["end_event_id"]), **out}
+        )
+        # idle (no pending match): None removes the user's state
+        pending = None if start_id is None else (start_id, start_us, n_clicks)
+        return matches, pending
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType=_CEP_OUTPUT,
-        stateStructType="start_id long, start_us long, n_clicks long",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "user_id",
+        step,
+        _CEP_OUTPUT,
+        "start_id long, start_us long, n_clicks long",
     )
 
 
@@ -102,16 +94,10 @@ def q_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_cep_pattern (same oracle): every completed
     `view click* purchase` match, emitted by the keyed-state NFA as the
     closing purchase folds in."""
-    events, _ = stream_events_dir(spark, sf_dir)
-    ops = events.select("user_id", "ts", "event_id", "event_type")
-    result = apply_cep_stream(ops)
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_cep")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with staged_stream(spark, sf_dir, "events") as events:
+        result = apply_cep_stream(
+            events.select("user_id", "ts", "event_id", "event_type")
         )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_cep")
+        return run_bounded(
+            spark, result, "sfs_stream_cep", partitions=python_state_partitions(spark)
+        )

@@ -8,7 +8,8 @@ Scale notes: tumbling/sliding aggregation is a single hash-agg shuffle
 keyed by (window, key) — Spark expands sliding windows to one row per
 overlapping window before the partial agg.  Sessionization in batch is
 the gaps-and-islands pattern: one window sort per user partition, no
-self-join.
+self-join.  The keyed-state sessionizer (``q_stream_sessionize``) is a
+per-user step over ``state.keyed_fold``.
 """
 
 from __future__ import annotations
@@ -16,8 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, run_bounded, staged_stream
 from ..plans.registry import query
+from ..session import python_state_partitions
+from .state import keyed_fold
 
 _EPOCH = "TIMESTAMP '1970-01-01 00:00:00'"
 
@@ -174,17 +177,13 @@ def apply_sessionize_stream(events):
     per user (three longs) and per-event work is O(1) — the same cost
     profile as the reference's keyed ValueState fold (ref R9,
     InvokeStatefulLambda.java:75-109)."""
-    from collections.abc import Iterator
-
     import pandas as pd
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            start_us, last_us, n = state.get
+    def step(user_id, pdf: pd.DataFrame, stored):
+        if stored is not None:
+            start_us, last_us, n = stored
         else:
             start_us = last_us = n = None
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
         out = {"session_start": [], "n_events": [], "duration_sec": []}
         for row in pdf.itertuples():
             t_us = int(pd.Timestamp(row.ts).value // 1000)
@@ -197,18 +196,11 @@ def apply_sessionize_stream(events):
                 start_us, last_us, n = t_us, t_us, 1
             else:
                 last_us, n = t_us, n + 1
-        state.update((start_us, last_us, n))
-        if out["n_events"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["n_events"]), **out}
-            )
+        closed = pd.DataFrame({"user_id": [user_id] * len(out["n_events"]), **out})
+        return closed, (start_us, last_us, n)
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType=_SESS_OUTPUT,
-        stateStructType="start_us long, last_us long, n long",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events, "user_id", step, _SESS_OUTPUT, "start_us long, last_us long, n long"
     )
 
 
@@ -218,18 +210,11 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_sessionize_stream): emits every CLOSED session; the oracle is
     the batch gaps-and-islands result minus each user's final (still
     open) session."""
-    from ..session import python_state_partitions, stream_partitions
-    from .state import stream_events_dir
-
-    events, _ = stream_events_dir(spark, sf_dir)
-    result = apply_sessionize_stream(events.select("user_id", "ts", "event_id"))
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_sessionize")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with staged_stream(spark, sf_dir, "events") as events:
+        result = apply_sessionize_stream(events.select("user_id", "ts", "event_id"))
+        return run_bounded(
+            spark,
+            result,
+            "sfs_stream_sessionize",
+            partitions=python_state_partitions(spark),
         )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_sessionize")

@@ -18,6 +18,10 @@ Spark-native design decisions:
     (``applyInPandasWithState`` + ``GroupState``) — checkpointed,
     exactly-once, per-key — which is strictly stronger than the
     reference's at-least-once ValueState (SURVEY.md §4.1).
+  * :func:`keyed_fold` is that read-modify-write, once: every keyed
+    stateful operator in the package (fold, SCD2, EWMA, HLL, anomaly,
+    CDC here; sessionize, CEP and the MinHash stream beside it) is a
+    per-key ``step`` over it.
   * Events for a key are applied in (ts, event_id) order within each
     micro-batch, making results deterministic and replay-stable.
 
@@ -28,9 +32,7 @@ The function contract mirrors ``EventRequestReply`` (event.proto:77-81):
 from __future__ import annotations
 
 import json
-import os
-import shutil
-import tempfile
+import time
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -38,10 +40,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, open_events_stream
+from ..io import run_bounded, staged_stream
 from ..numerics import sql_wsum
 from ..plans.registry import query
-from ..session import python_state_partitions, stream_partitions
+from ..session import python_state_partitions, stream_partitions  # noqa: F401 (re-exported)
 
 # ---------------------------------------------------------------------------
 # Callable registry — the in-process replacement for the AWS Lambda hop.
@@ -136,13 +138,49 @@ _FOLD_OUTPUT = (
 )
 
 
-def stream_events_dir(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
-    """Stage events.parquet into a dir and open it as a stream
-    (ts normalized to TimestampType by io.open_events_stream)."""
-    stage = tempfile.mkdtemp(prefix="sfs_stream_events_")
-    src = os.path.join(sf_dir, "events.parquet")
-    shutil.copy(src, os.path.join(stage, "part-0.parquet"))
-    return open_events_stream(spark, stage, src), stage
+# step(key value, the key's sorted batch, stored state or None) ->
+# (rows to emit or None, new state or None)
+FoldStep = Callable[
+    [object, pd.DataFrame, tuple | None], tuple[pd.DataFrame | None, tuple | None]
+]
+
+
+def keyed_fold(
+    events: DataFrame,
+    key: str,
+    step: FoldStep,
+    output: str,
+    state_schema: str,
+    order: tuple[str, ...] | None = ("ts", "event_id"),
+) -> DataFrame:
+    """The keyed read-modify-write of InvokeStatefulLambda.java:75-109,
+    as the package's one ``applyInPandasWithState``.
+
+    Per key and micro-batch: concatenate the key's frames, stable-sort
+    them by ``order`` (``None`` keeps arrival order), call ``step`` with
+    the stored state tuple (``None`` on first touch), write the state it
+    returns — ``None`` removes the key's state — and emit its rows if
+    there are any."""
+
+    def fold_group(k, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        if order is not None:
+            pdf = pdf.sort_values(list(order), kind="mergesort")
+        out, new = step(k[0], pdf, state.get if state.exists else None)
+        if new is not None:
+            state.update(new)
+        elif state.exists:
+            state.remove()
+        if out is not None and len(out):
+            yield out
+
+    return events.groupBy(key).applyInPandasWithState(
+        fold_group,
+        outputStructType=output,
+        stateStructType=state_schema,
+        outputMode="Append",
+        timeoutConf="NoTimeout",
+    )
 
 
 def apply_stateful(
@@ -153,7 +191,7 @@ def apply_stateful(
 ) -> DataFrame:
     """Keyed stateful apply over a streaming DataFrame — ref R9.
 
-    One ``applyInPandasWithState`` over ``groupBy("user_id")``: one
+    One :func:`keyed_fold` over ``user_id``: one
     opaque blob per key (GroupState), events applied in (ts, event_id)
     order, state overwritten per event (InvokeStatefulLambda.java:75-109).
 
@@ -180,20 +218,16 @@ def apply_stateful(
         if vfn is not None:
             vfn = latency.timed_stateful(vfn)
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        import time
-
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+    def step(_, pdf: pd.DataFrame, stored):
         now_ms = int(time.time() * 1000)
-        if ttl_ms is None:
-            blob = state.get[0] if state.exists else b""
-        elif state.exists:
-            stored_ms, blob = state.get
+        if stored is None:
+            blob = b""
+        elif ttl_ms is None:
+            blob = stored[0]
+        else:
+            stored_ms, blob = stored
             if now_ms - stored_ms > ttl_ms:
                 blob = b""  # expired -> EMPTY first-touch re-init
-        else:
-            blob = b""
         if vfn is not None:
             out_pdf, blob = vfn(pdf, blob)
         else:
@@ -202,17 +236,14 @@ def apply_stateful(
                 out, blob = fn(event, blob)
                 outs.append(out)
             out_pdf = pd.DataFrame(outs)
-        state.update((blob,) if ttl_ms is None else (now_ms, blob))
-        yield out_pdf
+        return out_pdf, ((blob,) if ttl_ms is None else (now_ms, blob))
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType=_FOLD_OUTPUT,
-        stateStructType=(
-            "blob binary" if ttl_ms is None else "ts_ms long, blob binary"
-        ),
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "user_id",
+        step,
+        _FOLD_OUTPUT,
+        "blob binary" if ttl_ms is None else "ts_ms long, blob binary",
     )
 
 
@@ -232,18 +263,13 @@ def run_stateful_stream(
     per-key state lifetime (see apply_stateful); ``latency`` records
     the per-invoke histogram (see metrics.InvokeLatency)."""
     result = apply_stateful(events, operator_name, ttl_ms=ttl_ms, latency=latency)
-    with stream_partitions(spark, python_state_partitions(spark)):
-        writer = (
-            result.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-        )
-        if checkpoint_dir is not None:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        qy = writer.start()
-        qy.awaitTermination()
-    return spark.table(query_name)
+    return run_bounded(
+        spark,
+        result,
+        query_name,
+        partitions=python_state_partitions(spark),
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 @query(
@@ -261,8 +287,8 @@ def run_stateful_stream(
 def q_stateful_fold_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_stateful_fold (ref R9) — same oracle: the
     ValueState fold must agree exactly with the batch window fold."""
-    events, _ = stream_events_dir(spark, sf_dir)
-    return run_stateful_stream(spark, events)
+    with staged_stream(spark, sf_dir, "events") as events:
+        return run_stateful_stream(spark, events)
 
 
 # ---------------------------------------------------------------------------
@@ -303,11 +329,9 @@ def apply_scd2_stream(events: DataFrame) -> DataFrame:
     this operator watermark-sorted input (buffer by `withWatermark` +
     event-time sort in the upstream batch) so the clamp never fires."""
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        if state.exists:
-            cur_type, cur_from_us, cur_ver, cur_clamped = state.get
+    def step(user_id, pdf: pd.DataFrame, stored):
+        if stored is not None:
+            cur_type, cur_from_us, cur_ver, cur_clamped = stored
         else:
             cur_type, cur_from_us, cur_ver, cur_clamped = None, 0, 0, False
         out = []
@@ -328,7 +352,7 @@ def apply_scd2_stream(events: DataFrame) -> DataFrame:
             elif row.event_type != cur_type:
                 out.append(
                     (
-                        key[0],
+                        user_id,
                         cur_type,
                         pd.Timestamp(cur_from_us, unit="us"),
                         pd.Timestamp(ts_us, unit="us"),
@@ -338,8 +362,7 @@ def apply_scd2_stream(events: DataFrame) -> DataFrame:
                 )
                 cur_type, cur_from_us, cur_ver = row.event_type, ts_us, cur_ver + 1
                 cur_clamped = clamp_fired
-        state.update((cur_type, cur_from_us, cur_ver, bool(cur_clamped)))
-        yield pd.DataFrame(
+        closed = pd.DataFrame(
             out,
             columns=[
                 "user_id",
@@ -350,15 +373,14 @@ def apply_scd2_stream(events: DataFrame) -> DataFrame:
                 "is_clamped",
             ],
         )
+        return closed, (cur_type, cur_from_us, cur_ver, bool(cur_clamped))
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType=_SCD2_STREAM_OUTPUT,
-        stateStructType=(
-            "cur_type string, from_us long, version int, clamped boolean"
-        ),
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "user_id",
+        step,
+        _SCD2_STREAM_OUTPUT,
+        "cur_type string, from_us long, version int, clamped boolean",
     )
 
 
@@ -395,20 +417,13 @@ def q_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_scd2_track: the incremental CDC fold must
     emit exactly the batch query's CLOSED intervals (open versions stay
     in the state store — see apply_scd2_stream)."""
-    events, _ = stream_events_dir(spark, sf_dir)
-    result = apply_scd2_stream(
-        events.select("user_id", "event_type", "ts", "event_id")
-    )
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_scd2_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with staged_stream(spark, sf_dir, "events") as events:
+        result = apply_scd2_stream(
+            events.select("user_id", "event_type", "ts", "event_id")
         )
-        qy.awaitTermination()
-    return spark.table("sfs_scd2_stream")
+        return run_bounded(
+            spark, result, "sfs_scd2_stream", partitions=python_state_partitions(spark)
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -444,9 +459,8 @@ def apply_ewma_stream(events: DataFrame) -> DataFrame:
 
     from ..operators.timeseries import EWMA_WINDOW
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        top: list = pickle.loads(state.get[0]) if state.exists else []
-        pdf = pd.concat(list(pdfs), ignore_index=True)
+    def step(user_id, pdf: pd.DataFrame, stored):
+        top: list = pickle.loads(stored[0]) if stored is not None else []
         for row in pdf.itertuples():
             xs = int(
                 Decimal(repr(float(row.value) * 1_000_000)).to_integral_value(
@@ -458,23 +472,19 @@ def apply_ewma_stream(events: DataFrame) -> DataFrame:
         del top[EWMA_WINDOW:]
         num = sum(xs * (1 << (EWMA_WINDOW - rn)) for rn, (_, _, xs) in enumerate(top, 1))
         den = sum(1 << (EWMA_WINDOW - rn) for rn in range(1, len(top) + 1))
-        state.update((pickle.dumps(top),))
-        yield pd.DataFrame(
+        summary = pd.DataFrame(
             {
-                "user_id": [key[0]],
+                "user_id": [user_id],
                 "last_ts": [pd.Timestamp(top[0][0], unit="us")],
                 "last_event_id": [top[0][1]],
                 "n_used": [len(top)],
                 "ewma_value": [float(num) / float(den) / 1_000_000],
             }
         )
+        return summary, (pickle.dumps(top),)
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType=_EWMA_STREAM_OUTPUT,
-        stateStructType="blob binary",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events, "user_id", step, _EWMA_STREAM_OUTPUT, "blob binary", order=None
     )
 
 
@@ -503,26 +513,18 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-window EWMA maintained incrementally in keyed state; the
     latest per-user summary must equal the batch window aggregate
     bit for bit (see apply_ewma_stream)."""
-    events, _ = stream_events_dir(spark, sf_dir)
-    result = apply_ewma_stream(
-        events.select("user_id", "ts", "event_id", "value")
-    )
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_ewma")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with staged_stream(spark, sf_dir, "events") as events:
+        result = apply_ewma_stream(
+            events.select("user_id", "ts", "event_id", "value")
         )
-        qy.awaitTermination()
-    from pyspark.sql import Window as W
-
-    latest = W.partitionBy("user_id").orderBy(
+        summaries = run_bounded(
+            spark, result, "sfs_stream_ewma", partitions=python_state_partitions(spark)
+        )
+    latest = Window.partitionBy("user_id").orderBy(
         F.desc("last_ts"), F.desc("last_event_id")
     )
     return (
-        spark.table("sfs_stream_ewma")
+        summaries
         .withColumn("_r", F.row_number().over(latest))
         .filter(F.col("_r") == 1)
         .select("user_id", "n_used", "ewma_value")
@@ -594,13 +596,12 @@ def apply_hll_stream(events: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+    def step(event_type, pdf: pd.DataFrame, stored):
         reg = (
-            np.frombuffer(state.get[0], dtype=np.uint8).copy()
-            if state.exists
+            np.frombuffer(stored[0], dtype=np.uint8).copy()
+            if stored is not None
             else np.zeros(_HLL_M, dtype=np.uint8)
         )
-        pdf = pd.concat(list(pdfs), ignore_index=True)
         for uid in pdf["user_id"].unique():
             hx = hashlib.md5(str(int(uid)).encode()).hexdigest()
             j = int(hx[:8], 16) % _HLL_M
@@ -612,7 +613,6 @@ def apply_hll_stream(events: DataFrame) -> DataFrame:
             )
             if rho > reg[j]:
                 reg[j] = rho
-        state.update((reg.tobytes(),))
         nz = int((reg > 0).sum())
         v = _HLL_M - nz
         if v > 0:
@@ -626,23 +626,23 @@ def apply_hll_stream(events: DataFrame) -> DataFrame:
             )
         else:
             est = None
-        yield pd.DataFrame(
+        summary = pd.DataFrame(
             {
-                "event_type": [key[0]],
+                "event_type": [event_type],
                 "reg_nonzero": [nz],
                 "reg_sum": [int(reg.sum())],
                 "est_users": [est],
             }
         )
+        return summary, (reg.tobytes(),)
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        fold_group,
-        outputStructType=(
-            "event_type string, reg_nonzero long, reg_sum long, est_users long"
-        ),
-        stateStructType="blob binary",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "event_type",
+        step,
+        "event_type string, reg_nonzero long, reg_sum long, est_users long",
+        "blob binary",
+        order=None,
     )
 
 
@@ -653,22 +653,14 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone (registers only grow), so the newest summary per key is
     the one with the maximal (reg_sum, reg_nonzero) — no timestamp
     bookkeeping needed to pick it."""
-    events, _ = stream_events_dir(spark, sf_dir)
-    result = apply_hll_stream(events.select("event_type", "user_id"))
-    with stream_partitions(spark):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_hll")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
+    with staged_stream(spark, sf_dir, "events") as events:
+        result = apply_hll_stream(events.select("event_type", "user_id"))
+        summaries = run_bounded(spark, result, "sfs_stream_hll")
     latest = Window.partitionBy("event_type").orderBy(
         F.desc("reg_sum"), F.desc("reg_nonzero")
     )
     return (
-        spark.table("sfs_stream_hll")
+        summaries
         .withColumn("_r", F.row_number().over(latest))
         .filter(F.col("_r") == 1)
         .drop("_r")
@@ -729,11 +721,8 @@ def apply_anomaly_stream(events: DataFrame) -> DataFrame:
     import pickle
     from decimal import ROUND_HALF_UP, Decimal
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        n, s, ssq = pickle.loads(state.get[0]) if state.exists else (0, 0, 0)
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts", "event_id"], ignore_index=True
-        )
+    def step(user_id, pdf: pd.DataFrame, stored):
+        n, s, ssq = pickle.loads(stored[0]) if stored is not None else (0, 0, 0)
         out_e, out_n, out_f = [], [], []
         for row in pdf.itertuples():
             x = int(
@@ -748,22 +737,22 @@ def apply_anomaly_stream(events: DataFrame) -> DataFrame:
             out_n.append(n)
             out_f.append(bool(flag))
             n, s, ssq = n + 1, s + x, ssq + x * x
-        state.update((pickle.dumps((n, s, ssq)),))
-        yield pd.DataFrame(
+        flags = pd.DataFrame(
             {
-                "user_id": [key[0]] * len(out_e),
+                "user_id": [user_id] * len(out_e),
                 "event_id": out_e,
                 "n_prior": out_n,
                 "is_anomaly": out_f,
             }
         )
+        return flags, (pickle.dumps((n, s, ssq)),)
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType="user_id long, event_id long, n_prior long, is_anomaly boolean",
-        stateStructType="blob binary",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "user_id",
+        step,
+        "user_id long, event_id long, n_prior long, is_anomaly boolean",
+        "blob binary",
     )
 
 
@@ -773,20 +762,13 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     its user's PRIOR history via O(1) keyed sufficient statistics (see
     apply_anomaly_stream); the oracle is the batch prefix-window
     formulation — every emitted flag must match it exactly."""
-    events, _ = stream_events_dir(spark, sf_dir)
-    result = apply_anomaly_stream(
-        events.select("user_id", "ts", "event_id", "value")
-    )
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_anomaly")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with staged_stream(spark, sf_dir, "events") as events:
+        result = apply_anomaly_stream(
+            events.select("user_id", "ts", "event_id", "value")
         )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_anomaly")
+        return run_bounded(
+            spark, result, "sfs_stream_anomaly", partitions=python_state_partitions(spark)
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -855,13 +837,8 @@ def apply_cdc_stream(events: DataFrame) -> DataFrame:
     fold is bit-identical to the batch oracle's arithmetic."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bal, present, n_applied = state.get
-        else:
-            bal, present, n_applied = 0, False, 0
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+    def step(user_id, pdf: pd.DataFrame, stored):
+        bal, present, n_applied = stored if stored is not None else (0, False, 0)
         for row in pdf.itertuples():
             if row.event_type == "error":
                 bal, present = 0, False
@@ -873,22 +850,22 @@ def apply_cdc_stream(events: DataFrame) -> DataFrame:
                 )
                 bal, present = (bal if present else 0) + cents, True
             n_applied += 1
-        state.update((bal, bool(present), n_applied))
-        yield pd.DataFrame(
+        current = pd.DataFrame(
             {
-                "user_id": [key[0]],
+                "user_id": [user_id],
                 "balance": [bal / 100.0 if present else None],
                 "is_present": [bool(present)],
                 "n_applied": [n_applied],
             }
         )
+        return current, (bal, bool(present), n_applied)
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType=_CDC_APPLY_OUTPUT,
-        stateStructType="bal long, present boolean, n_applied long",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "user_id",
+        step,
+        _CDC_APPLY_OUTPUT,
+        "bal long, present boolean, n_applied long",
     )
 
 
@@ -904,23 +881,19 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     final select keeps the max-``n_applied`` row per key, so the result
     is the current serving table whether the staged log arrived as one
     availableNow batch or many (maxFilesPerTrigger-proof)."""
-    events, _ = stream_events_dir(spark, sf_dir)
-    ops = events.filter(F.col("event_type").isin("purchase", "error")).select(
-        "user_id", "ts", "event_id", "event_type", "value"
-    )
-    result = apply_cdc_stream(ops)
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_cdc_apply")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with staged_stream(spark, sf_dir, "events") as events:
+        ops = events.filter(F.col("event_type").isin("purchase", "error")).select(
+            "user_id", "ts", "event_id", "event_type", "value"
         )
-        qy.awaitTermination()
+        rows = run_bounded(
+            spark,
+            apply_cdc_stream(ops),
+            "sfs_stream_cdc_apply",
+            partitions=python_state_partitions(spark),
+        )
     latest = Window.partitionBy("user_id").orderBy(F.desc("n_applied"))
     return (
-        spark.table("sfs_stream_cdc_apply")
+        rows
         .withColumn("_r", F.row_number().over(latest))
         .filter(F.col("_r") == 1)
         .select("user_id", "balance", "is_present")

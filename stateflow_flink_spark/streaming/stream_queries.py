@@ -10,10 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, run_bounded, staged_stream
 from ..plans.registry import query
 from ..session import stream_partitions
-from .state import stream_events_dir
 
 
 @query(
@@ -87,23 +86,14 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-batch, crafted late rows) are asserted in
     tests/test_streaming.py.
     """
-    events, _ = stream_events_dir(spark, sf_dir)
-    counts = (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-    with stream_partitions(spark):
-        qy = (
-            counts.writeStream.format("memory")
-            .queryName("sfs_stream_watermark")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    with staged_stream(spark, sf_dir, "events") as events:
+        counts = (
+            events.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(F.col("w.start").alias("window_start"), "n_events")
         )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_watermark")
+        return run_bounded(spark, counts, "sfs_stream_watermark", mode="complete")
 
 
 @query(
@@ -136,25 +126,17 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller than the stream).  Complete output mode for the bounded
     oracle check; an unbounded deployment uses append mode + a
     foreachBatch rank, same split."""
-    events, _ = stream_events_dir(spark, sf_dir)
-    counts = (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-    with stream_partitions(spark):
-        qy = (
-            counts.writeStream.format("memory")
-            .queryName("sfs_stream_topk")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    with staged_stream(spark, sf_dir, "events") as events:
+        counts = (
+            events.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.col("w.start").alias("window_start"), "event_type", "n")
         )
-        qy.awaitTermination()
+        counted = run_bounded(spark, counts, "sfs_stream_topk", mode="complete")
     rk = Window.partitionBy("window_start").orderBy(F.desc("n"), F.asc("event_type"))
     return (
-        spark.table("sfs_stream_topk")
+        counted
         .withColumn("rk", F.row_number().over(rk).cast("long"))
         .filter(F.col("rk") <= 3)
     )
@@ -175,27 +157,49 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     static side per micro-batch, so the dim can update between batches
     and no join state accumulates.  The canonical pattern for joining a
     100 TB event stream to reference data."""
-    from ..io import load as load_static
-
-    events, _ = stream_events_dir(spark, sf_dir)
-    customers = load_static(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    joined = (
-        events.join(customers, events["user_id"] == customers["c_custkey"])
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    with stream_partitions(spark):
-        qy = (
-            joined.writeStream.format("memory")
-            .queryName("sfs_stream_static_join")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    customers = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    with staged_stream(spark, sf_dir, "events") as events:
+        joined = (
+            events.join(customers, events["user_id"] == customers["c_custkey"])
+            .groupBy("c_mktsegment")
+            .agg(F.count(F.lit(1)).alias("n_events"))
         )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_static_join")
+        return run_bounded(spark, joined, "sfs_stream_static_join", mode="complete")
+
+
+def _click_purchase_join(events: DataFrame, how: str) -> DataFrame:
+    """Each click joined to the same user's purchases in the next 30
+    minutes; both legs filter off one stream under a 1-hour watermark."""
+    c = (
+        events.filter(F.col("event_type") == "click")
+        .withWatermark("ts", "1 hour")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
+        )
+    )
+    p = (
+        events.filter(F.col("event_type") == "purchase")
+        .withWatermark("ts", "1 hour")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+        )
+    )
+    return c.join(
+        p,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
+    ).select(
+        "click_id",
+        "purchase_id",
+        F.col("c_user").alias("user_id"),
+        (F.unix_micros(F.col("p_ts")) - F.unix_micros(F.col("c_ts"))).alias("gap_us"),
+    )
 
 
 @query(
@@ -226,61 +230,25 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter off ONE stream source — the micro-batch scans the events
     directory once, not once per leg.  Batch twin of the same plan:
     q_join_range."""
-    events, _ = stream_events_dir(spark, sf_dir)
-    c = (
-        events.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    p = (
-        events.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    joined = c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        (F.unix_micros(F.col("p_ts")) - F.unix_micros(F.col("c_ts"))).alias("gap_us"),
-    )
-    # r14 (measured): availableNow runs a SECOND, no-data micro-batch
-    # after the data batch purely to advance the watermark and evict
-    # state — for an INNER join every result row was already emitted in
-    # the data batch, so the cleanup batch is ~0.8 s of pure overhead on
-    # a bounded run (2.2 s -> 1.45 s; output digest-identical).  Skip it
-    # for this query only: the LEFT join (q_stream_stream_left) KEEPS
-    # the default — its outer rows are emitted BY that no-data batch.
-    # An unbounded deployment leaves the default on; state eviction
-    # there rides later data batches anyway.
-    _NDMB = "spark.sql.streaming.noDataMicroBatches.enabled"
-    saved = spark.conf.get(_NDMB)
-    with stream_partitions(spark):
+    with staged_stream(spark, sf_dir, "events") as events:
+        joined = _click_purchase_join(events, "inner")
+        # Measured: availableNow runs a SECOND, no-data micro-batch after
+        # the data batch purely to advance the watermark and evict state —
+        # for an INNER join every result row was already emitted in the
+        # data batch, so the cleanup batch is ~0.8 s of pure overhead on a
+        # bounded run (2.2 s -> 1.45 s; output digest-identical).  Skip it
+        # for this query only: the LEFT join (q_stream_stream_left) KEEPS
+        # the default — its outer rows are emitted BY that no-data batch.
+        # An unbounded deployment leaves the default on; state eviction
+        # there rides later data batches anyway.
+        _NDMB = "spark.sql.streaming.noDataMicroBatches.enabled"
+        saved = spark.conf.get(_NDMB)
         try:
             spark.conf.set(_NDMB, "false")
-            qy = (
-                joined.writeStream.format("memory")
-                .queryName("sfs_stream_stream_join")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            qy.awaitTermination()
+            return run_bounded(spark, joined, "sfs_stream_stream_join")
         finally:
             spark.conf.set(_NDMB, saved)
-    return spark.table("sfs_stream_stream_join")
+
 
 
 @query(
@@ -306,7 +274,6 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    stream, stage = stream_events_dir(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="sfs_fb_sink_")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
@@ -316,7 +283,7 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt = tempfile.mkdtemp(prefix="sfs_fb_ckpt_")
     try:
-        with stream_partitions(spark):
+        with staged_stream(spark, sf_dir, "events") as stream, stream_partitions(spark):
             q = (
                 stream.writeStream.foreachBatch(write_batch)
                 .trigger(availableNow=True)
@@ -328,7 +295,6 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fresh per call, so nothing can resume from it; the sink stays,
         # the returned frame reads it
         shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)
     sunk = spark.read.option("basePath", out).parquet(f"{out}/batch=*")
     return sunk.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -363,13 +329,8 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (full-outer merge on the group key), so a replayed batch
     regenerates its version idempotently instead of double-counting —
     same recovery contract as the foreachBatch sink."""
-    import shutil
-
-    stream, stage = stream_events_dir(spark, sf_dir)
-    try:
+    with staged_stream(spark, sf_dir, "events") as stream:
         return run_incremental_rollup(spark, stream)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 def rollup_versions_on_disk(root: str, below: int | None = None) -> list[int]:
@@ -564,44 +525,6 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the inner join (both legs filter off ONE
     source scan, state is watermark-evicted O(events/hour) per side);
     the outer rows add no state — they ARE the evictions."""
-    events, _ = stream_events_dir(spark, sf_dir)
-    c = (
-        events.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    p = (
-        events.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    joined = c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        (F.unix_micros(F.col("p_ts")) - F.unix_micros(F.col("c_ts"))).alias("gap_us"),
-    )
-    with stream_partitions(spark):
-        qy = (
-            joined.writeStream.format("memory")
-            .queryName("sfs_stream_stream_left")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_stream_left")
+    with staged_stream(spark, sf_dir, "events") as events:
+        joined = _click_purchase_join(events, "left_outer")
+        return run_bounded(spark, joined, "sfs_stream_stream_left")

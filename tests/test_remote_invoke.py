@@ -168,19 +168,17 @@ def test_invoke_latency_histogram_stateful_stream(spark):
     """The stateful path (InvokeStatefulLambda.java:56-59, :112): after
     a full streaming loop run the metric is populated — one sample per
     (key, batch) invoke on the vectorized fold."""
+    from stateflow_flink_spark.io import staged_stream
     from stateflow_flink_spark.streaming.metrics import InvokeLatency
-    from stateflow_flink_spark.streaming.state import (
-        run_stateful_stream,
-        stream_events_dir,
-    )
+    from stateflow_flink_spark.streaming.state import run_stateful_stream
 
     from .conftest import SF_SMOKE
 
     lat = InvokeLatency(spark, "stateful_invoke")
-    events, _ = stream_events_dir(spark, SF_SMOKE)
-    out = run_stateful_stream(
-        spark, events, query_name="sfs_metric_fold_stream", latency=lat
-    )
+    with staged_stream(spark, SF_SMOKE, "events") as events:
+        out = run_stateful_stream(
+            spark, events, query_name="sfs_metric_fold_stream", latency=lat
+        )
     n_users = out.select("user_id").distinct().count()
     snap = lat.snapshot()
     assert snap["count"] >= n_users > 0

@@ -450,12 +450,15 @@ def test_cep_stream_pending_match_survives_restart(spark, tmp_path):
     runs over one checkpoint must complete from RESTORED state — the
     match's start id, click count, and span all reach back into run 1.
     A reset event (error) pending at the end of run 2 must clear state
-    so a later purchase alone does not match."""
+    so a later purchase alone does not match.  A completed or reset
+    user's state is removed: after run 2 the store holds user 3's
+    pending `view click` only."""
     import pandas as pd
 
     from stateflow_flink_spark.streaming.cep import apply_cep_stream
 
     staged, ckpt = str(tmp_path / "staged"), str(tmp_path / "ckpt")
+    progress: list = []
 
     def run() -> pd.DataFrame:
         got: list = []
@@ -472,6 +475,7 @@ def test_cep_stream_pending_match_survives_restart(spark, tmp_path):
                 .start()
             )
             q.awaitTermination()
+        progress.append(q.lastProgress)
         return pd.DataFrame(
             got,
             columns=["user_id", "start_event_id", "end_event_id",
@@ -493,14 +497,18 @@ def test_cep_stream_pending_match_survives_restart(spark, tmp_path):
     assert first.empty, "no purchase yet — the pending match must stay in state"
 
     # run 2: one more click, then the closing purchase; user 2 gets an
-    # error (reset) in the same batch
+    # error (reset) in the same batch; user 3 is left at `view click`
     _write_events(
         spark, staged,
         [ev(10, 1, "click", 60), ev(11, 1, "purchase", 61),
-         ev(12, 2, "view", 61), ev(13, 2, "error", 62)],
+         ev(12, 2, "view", 61), ev(13, 2, "error", 62),
+         ev(14, 3, "view", 63), ev(15, 3, "click", 64)],
     )
     second = run().set_index("user_id")
     assert list(second.index) == [1]
+    assert progress[-1]["stateOperators"][0]["numRowsTotal"] == 1, (
+        "completed and reset users' state must be removed"
+    )
     assert second.loc[1, "start_event_id"] == 1, "start must be run 1's view"
     assert second.loc[1, "end_event_id"] == 11
     assert second.loc[1, "n_clicks"] == 3, "clicks from BOTH runs"

@@ -140,18 +140,18 @@ def test_watermark_drops_late_rows(spark):
 
 
 def test_session_window_stream_equals_batch(spark):
-    from stateflow_flink_spark.streaming.state import stream_events_dir
+    from stateflow_flink_spark.io import staged_stream
 
-    events, _ = stream_events_dir(spark, SF_SMOKE)
-    sessions = session_window_stream(events)
-    qy = (
-        sessions.writeStream.format("memory")
-        .queryName("sfs_sessions_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    qy.awaitTermination()
+    with staged_stream(spark, SF_SMOKE, "events") as events:
+        sessions = session_window_stream(events)
+        qy = (
+            sessions.writeStream.format("memory")
+            .queryName("sfs_sessions_stream")
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .start()
+        )
+        qy.awaitTermination()
     got = spark.table("sfs_sessions_stream").toPandas()
     want = (
         QUERIES["q_window_session"](spark, SF_SMOKE)
@@ -315,21 +315,41 @@ def test_incremental_rollup_is_batch_split_independent(spark, tmp_path):
 def test_foreach_batch_queries_release_their_checkpoints(
     spark, duck, tmp_path, monkeypatch
 ):
-    """q_stream_foreach_batch and run_incremental_rollup (through
-    q_rollup_incremental) each start a query on a fresh checkpoint dir
-    and remove it once the query ends: no ``*_ckpt_*`` dir is left in
-    the temp dir, while the sink and rollup dirs their lazy results read
-    stay, and both results still match their oracles."""
+    """Every registry query that stages a fixture as a stream removes
+    the stage once its query ends, and q_stream_foreach_batch and
+    run_incremental_rollup (through q_rollup_incremental) each remove
+    their fresh checkpoint dir: no ``sfs_stream_*`` or ``*_ckpt_*`` dir
+    is left in the temp dir, while the sink and rollup dirs their lazy
+    results read stay, and every result still matches its oracle."""
     from stateflow_flink_spark.plans.registry import ORACLE
 
     from .parity import compare
 
     load_all_modules()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    for name in ("q_stream_foreach_batch", "q_rollup_incremental"):
+    for name in (
+        "q_stream_foreach_batch",
+        "q_rollup_incremental",
+        "q_stateful_fold_stream",
+        "q_scd2_stream",
+        "q_stream_sessionize",
+        "q_stream_cep",
+        "q_dedup_minhash_stream",
+        "q_stream_hll",
+        "q_stream_stream_join",
+        "q_stream_watermark",
+        "q_stream_topk",
+        "q_stream_static_join",
+        "q_stream_stream_left",
+        "q_stream_ewma",
+        "q_stream_anomaly",
+        "q_stream_cdc_apply",
+        "q_stream_file_source",
+    ):
         got = QUERIES[name](spark, SF_SMOKE).toPandas()
         compare(got, duck.execute(ORACLE[name]).df(), name)
     left = sorted(p.name for p in tmp_path.iterdir())
+    assert not [d for d in left if d.startswith("sfs_stream_")], left
     assert not [d for d in left if "_ckpt_" in d], left
     assert any(d.startswith("sfs_fb_sink_") for d in left), left
     assert any(d.startswith("sfs_rollup_") for d in left), left
