@@ -1,17 +1,23 @@
 #!/usr/bin/env python
-"""Benchmark harness — the driver's per-round feedback loop.
+"""Per-query timing over the registry.
 
-Runs every registered query at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+Runs every registered query, or only the query names given on argv, at
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 fixture dir) on
+``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
 
-    {"metric": "suite_wall_clock_sec", "value": <total>, "unit": "sec",
-     "queries": {"q_agg_groupby": 0.41, ...}, "sf": 0.1}
+    {"metric": "suite_wall_clock_sec", "queries": {"q_agg_groupby": 0.41, ...},
+     "value": <total>, "unit": "sec", "sf": 0.1}
 
-Execution is forced with the ``noop`` batch sink — the full physical plan
-runs (scan→shuffle→agg→sort) with zero driver-side collection cost, which
-is the honest measure of engine throughput.  One warm-up query first so
-JVM/codegen startup is not billed to the first query measured.
+Usage::
+
+    python bench.py                          # every query
+    python bench.py q_agg_groupby q_tpch_q1  # only these
+
+Each run goes through ``registry.run_query`` with the ``noop`` batch sink
+as its action — the full physical plan runs with zero driver-side
+collection cost — and ``run_query`` releases what the query created, so
+every measured run is cold.  Four warm-up queries run first so one-time
+startup costs are not billed to the first query measured.
 """
 
 from __future__ import annotations
@@ -21,17 +27,16 @@ import os
 import sys
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules
+from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules, run_query
 from stateflow_flink_spark.session import apply_runtime_conf
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-# BASELINE.md procedure: 3 warm runs per query, report the median — also
-# the default here so driver-side rounds measure the same statistic the
-# committed BENCH.json was produced with (n=1 showed ±10x outliers on
-# whichever query landed on a codegen-cache eviction or GC pause).
+# BASELINE.md procedure: 3 runs per query, report the median (n=1 showed
+# ±10x outliers on whichever query landed on a codegen-cache eviction or
+# GC pause).
 RUNS = int(os.environ.get("SPARK_GRAFT_RUNS", "3"))
 
 
@@ -45,6 +50,10 @@ def sf_of(path: str) -> float:
 
 def main() -> None:
     load_all_modules()
+    names = sys.argv[1:] or sorted(QUERIES)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("stateflow-spark-bench")
@@ -56,35 +65,14 @@ def main() -> None:
     apply_runtime_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
-    def drop_memory_sinks() -> None:
-        # Streaming registry queries land availableNow results in
-        # memory-sink temp views (all named sfs_*).  With 219 queries a
-        # session accumulates dozens of retained result tables — that
-        # aging was the round-6 phantom-regression source; drop them as
-        # soon as the timing for the query that made them is taken.
-        for t in spark.catalog.listTables():
-            if t.isTemporary and t.name.startswith("sfs_"):
-                spark.catalog.dropTempView(t.name)
-        # Hermetic-cache discipline (judge r10 item 2): several dedup /
-        # curation / anomaly queries .cache() shingle/postings/residual
-        # frames for intra-query reuse and cannot unpersist before
-        # returning (the caller executes the lazy plan).  Left in place they accumulate across a 282-query
-        # suite until LRU eviction thrashes whichever query runs under
-        # memory pressure — the r10 driver's 16.5x q_dedup_domain reading.
-        # Clearing here (after the timing is taken) also makes every
-        # measured run a COLD-cache run, so the committed median is the
-        # reproducible path, not the cached steady state.
-        spark.catalog.clearCache()
-
     def run(name: str) -> float:
         t0 = time.perf_counter()
-        df = QUERIES[name](spark, SF_DIR)
-        if df.isStreaming:  # registry queries return batch frames; belt & braces
-            df = spark.createDataFrame(df.collect(), df.schema)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        drop_memory_sinks()
-        return dt
+
+        def force(df: DataFrame) -> float:
+            df.write.format("noop").mode("overwrite").save()
+            return time.perf_counter() - t0
+
+        return run_query(spark, name, SF_DIR, force)
 
     # Warm-ups, not billed to any measured query:
     #   q_agg_groupby      — JVM, codegen, parquet footer cache
@@ -94,15 +82,14 @@ def main() -> None:
     #   q_udaf_grouped     — grouped-map (applyInPandas) eval path
     #   q_stream_watermark — streaming engine init (state store provider,
     #                        checkpoint IO, micro-batch planner) so the
-    #                        alphabetically-first streaming query is not
-    #                        billed that one-time cost
-    run("q_agg_groupby")
-    run("q_udf_scalar")
-    run("q_udaf_grouped")
-    run("q_stream_watermark")
+    #                        first streaming query is not billed that
+    #                        one-time cost
+    for warm in ("q_agg_groupby", "q_udf_scalar", "q_udaf_grouped",
+                 "q_stream_watermark"):
+        run(warm)
 
     timings: dict[str, float] = {}
-    for name in sorted(QUERIES):
+    for name in names:
         try:
             samples = sorted(run(name) for _ in range(RUNS))
             timings[name] = round(samples[len(samples) // 2], 3)
@@ -111,9 +98,6 @@ def main() -> None:
             timings[name] = -1.0
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    # Key order matters: the driver records only the TAIL of this line, so
-    # the big "queries" map goes first and the scalar fields (suite total,
-    # unit, sf) go last — they must survive truncation.
     print(
         json.dumps(
             {
@@ -125,134 +109,6 @@ def main() -> None:
             }
         )
     )
-    # Second, short line: self-diff against the committed BENCH.json so a
-    # truncated artifact still shows the total and the worst regressions.
-    try:
-        committed = json.load(open(os.path.join(os.path.dirname(__file__), "BENCH.json")))
-        base = committed.get("queries", {})
-        ratios = sorted(
-            ((round(timings[q] / base[q], 2), q) for q in timings if timings[q] > 0 and base.get(q, 0) > 0),
-            reverse=True,
-        )
-        print(
-            json.dumps(
-                {
-                    "metric": "suite_total_and_worst_vs_committed",
-                    "value": total,
-                    "unit": "sec",
-                    "sf": sf_of(SF_DIR),
-                    "worst_vs_committed": [[q, r] for r, q in ratios[:10]],
-                }
-            )
-        )
-    except Exception as exc:  # self-diff is advisory; never break the bench line
-        print(f"BENCH SELFDIFF SKIPPED: {exc}", file=sys.stderr)
-    # Third, rotating line (judge r9 item 3): the driver archives only the
-    # ~2000-char TAIL of this stdout, which preserves the self-diff line
-    # plus whatever fits of line 1's alphabetical end — so per-round
-    # driver timings for the first ~200 queries were unrecoverable from
-    # committed BENCH_rNN.json artifacts.  Emit one ~55-query alphabetical
-    # chunk per round.  The rotation anchors on the HIGHEST archived round
-    # number parsed from BENCH_r{N}.json filenames (not a raw file count,
-    # which silently shifts if archives are pruned or renamed — r10 ADVICE):
-    # during round N the repo carries BENCH_r{N-1} as its newest archive,
-    # and chunk 0 (the alphabetical HEAD, disjoint from r9's visible tail)
-    # was emitted in round 10, so idx = (max_round - 9) mod n_chunks gives
-    # r10 -> 0, r11 -> 1, ... and any n_chunks consecutive rounds together
-    # cover every query.  $SPARK_GRAFT_ROUND overrides the anchor outright.
-    # Anchor on COMMITTED archives (git ls-files), not the working tree:
-    # once the current round's BENCH_r{N}.json is written but not yet
-    # committed, a same-round re-run must not shift chunks (r11 ADVICE).
-    try:
-        import glob
-        import re
-        import subprocess
-
-        chunk_sz = 55
-        names = sorted(timings)
-        n_chunks = max(1, -(-len(names) // chunk_sz))
-        env_round = os.environ.get("SPARK_GRAFT_ROUND")
-        if env_round is not None:
-            max_round = int(env_round) - 1
-        else:
-            here = os.path.dirname(__file__) or "."
-            try:
-                files = subprocess.run(
-                    ["git", "-C", here, "ls-files", "BENCH_r*.json"],
-                    capture_output=True, text=True, timeout=10, check=True,
-                ).stdout.split()
-            except Exception:  # not a git checkout — fall back to the tree
-                files = glob.glob(os.path.join(here, "BENCH_r*.json"))
-            rounds = [
-                int(m.group(1))
-                for f in files
-                if (m := re.search(r"BENCH_r(\d+)\.json$", f))
-            ]
-            max_round = max(rounds, default=9)
-        idx = (max_round - 9) % n_chunks
-        chunk = names[idx * chunk_sz : (idx + 1) * chunk_sz]
-        print(
-            json.dumps(
-                {
-                    "metric": "per_query_history_chunk",
-                    "chunk": idx,
-                    "of": n_chunks,
-                    "t": {q: timings[q] for q in chunk},
-                }
-            )
-        )
-    except Exception as exc:  # history chunk is advisory too
-        print(f"BENCH CHUNK SKIPPED: {exc}", file=sys.stderr)
-    # Round-14 driver-contract repair (judge r13 item 1).  The driver
-    # archives only the last ~2000 chars of stdout and its PERF diff
-    # intersects the per-query maps it can parse from consecutive rounds'
-    # tails; with one rotating chunk per round, consecutive rounds shared
-    # ZERO queries (r12 emitted chunk 2, r13 chunk 3) so PERF_r13.json had
-    # n_common=0.  Two additional lines, emitted LAST so they survive the
-    # tail truncation:
-    #   4. "round_delta"  — suite total + this round's touched queries
-    #      (read from TOUCHED_ROUND.json, maintained by the optimization
-    #      round), compact (<700 chars).
-    #   5. chunk idx-1    — the chunk the PREVIOUS round's tail preserved,
-    #      re-emitted verbatim-format as the FINAL line, so the driver's
-    #      last-line parse of round N and round N-1 always share ~55
-    #      queries (n_common >= 55) and a geomean is computable.
-    # Lines 1-3 are unchanged; old methodology and numbers intact.
-    try:
-        here = os.path.dirname(__file__) or "."
-        touched: dict[str, float] = {}
-        try:
-            tr = json.load(open(os.path.join(here, "TOUCHED_ROUND.json")))
-            touched = {
-                q: timings[q] for q in tr.get("queries", []) if q in timings
-            }
-        except Exception:
-            pass
-        print(
-            json.dumps(
-                {
-                    "metric": "round_delta",
-                    "value": total,
-                    "unit": "sec",
-                    "sf": sf_of(SF_DIR),
-                    "touched": touched,
-                }
-            )
-        )
-        prev_idx = (idx - 1) % n_chunks
-        prev_chunk = names[prev_idx * chunk_sz : (prev_idx + 1) * chunk_sz]
-        print(
-            json.dumps(
-                {
-                    "metric": "per_query_history_chunk",
-                    "chunk": prev_idx,
-                    "of": n_chunks,
-                    "t": {q: timings[q] for q in prev_chunk},
-                }
-            )
-        )
-    except Exception as exc:  # advisory; never break the bench line
-        print(f"BENCH OVERLAP LINES SKIPPED: {exc}", file=sys.stderr)
     spark.stop()
 
 

@@ -8,10 +8,13 @@ into the parquet reader — verify with ``df.explain("formatted")``
 
 Streaming queries open a table with :func:`staged_stream` and drain it
 with :func:`run_bounded`, the one memory-sink ``availableNow`` runner.
+A query that writes files its returned frame reads puts them in a
+:func:`scratch_dir`.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import re
 import shutil
@@ -142,6 +145,39 @@ def staged_stream(spark: SparkSession, sf_dir: str, name: str) -> Iterator[DataF
             yield spark.readStream.schema(TABLE_SCHEMAS[name]).parquet(stage)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
+
+
+_SCRATCH_DIRS: list[str] = []
+
+
+def scratch_dir(prefix: str) -> str:
+    """Make a fresh dir for files that a query's returned frame reads.
+
+    The frame is lazy, so the dir outlives the query function: the dirs
+    made inside :func:`released_scratch` (``registry.run_query``'s run)
+    are removed when it exits, and the rest at interpreter exit.
+    """
+    path = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH_DIRS.append(path)
+    return path
+
+
+def _remove_scratch_dirs(keep: int) -> None:
+    while len(_SCRATCH_DIRS) > keep:
+        shutil.rmtree(_SCRATCH_DIRS.pop(), ignore_errors=True)
+
+
+atexit.register(_remove_scratch_dirs, 0)
+
+
+@contextmanager
+def released_scratch() -> Iterator[None]:
+    """Remove the scratch dirs made inside the block when it exits."""
+    keep = len(_SCRATCH_DIRS)
+    try:
+        yield
+    finally:
+        _remove_scratch_dirs(keep)
 
 
 def run_bounded(

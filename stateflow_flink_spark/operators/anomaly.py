@@ -195,7 +195,7 @@ def q_anomaly_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four downstream passes (residual median, deviations, MAD, the
     # outlier census) re-derived the events scan + seasonal join per
     # consumer without this cache (r13 optimization, guide §1.2/§5;
-    # bench.py clearCache keeps measured runs cold)
+    # registry.run_query releases it, so measured runs stay cold)
     resid = e.join(broadcast(seasonal), ["event_type", "hod"]).select(
         "event_type", (F.col("v6") - F.col("smean6")).alias("r6")
     ).cache()

@@ -1135,8 +1135,8 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_list("doc_id").alias("ids"),
             F.count(F.lit(1)).alias("n_g"),
         )
-        # corpus-sized, intra-query (bench.py clearCache keeps measured
-        # runs cold): read by the gram pass, the doc-count aggregate and
+        # corpus-sized, intra-query (registry.run_query releases it, so
+        # measured runs stay cold): read by the gram pass, the doc-count aggregate and
         # both pair expansions below
         .cache()
     )
@@ -1169,8 +1169,8 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sides of the term-keyed pair join); without the cache each one
         # re-runs the shingle explode + tf/df aggregates + idf join —
         # the q_dedup_fuzzy `ds.cache()` discipline applied here (r13
-        # optimization round, guide §1.2/§5; bench.py clearCache keeps
-        # every measured run cold).
+        # optimization round, guide §1.2/§5; registry.run_query releases
+        # it, so every measured run stays cold).
         .cache()
     )
     norms = w.groupBy("rep").agg(

@@ -277,10 +277,10 @@ def minhash_candidates(docsh: DataFrame, bands: int = MINHASH_BANDS) -> DataFram
 
     Cache contract (r11 ADVICE): the cache cannot be unpersisted here —
     the returned frame is lazy and the CALLER executes it.  Long-lived
-    sessions that run many registry queries must
-    ``spark.catalog.clearCache()`` between queries (bench.py and the
-    driver harness both do); one-shot pipelines can ignore this — the
-    cache dies with the session."""
+    sessions that run many registry queries run them through
+    ``registry.run_query``, which releases the cache after each run;
+    one-shot pipelines can ignore this — the cache dies with the
+    session."""
     with_bands = minhash_band_buckets(docsh, bands).cache()
     pruned = prune_singleton_buckets(with_bands, ["band", "bucket"])
     a = pruned.alias("a")
@@ -1483,7 +1483,7 @@ def q_dedup_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # domain-sharded bucket widths nearly all groups are singletons
     # (judge r10 item 3: the q_dedup_containment aggregate-prune
     # discipline applied to buckets).  Cache contract: see
-    # minhash_candidates — callers clearCache between queries.
+    # minhash_candidates — registry.run_query releases it after the run.
     wb = minhash_band_buckets(docsh, keep=["source"]).cache()
     wbp = prune_singleton_buckets(wb, ["band", "bucket", "source"])
     a, b = wbp.alias("a"), wbp.alias("b")
@@ -1726,8 +1726,8 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same bucketed write that built it."""
     t_bands, t_sh = _ensure_incremental_index(spark, sf_dir)
     d = spread(load(spark, sf_dir, "documents"), spark)
-    # cache contract: see minhash_candidates — callers clearCache between
-    # queries; the batch frame is lazy, so it can't unpersist here.
+    # cache contract: see minhash_candidates — registry.run_query releases
+    # it; the batch frame is lazy, so it can't unpersist here.
     batch_sh = d.filter(_inc_hash_bucket("doc_id") >= _INC_BATCH_FROM).select(
         "doc_id", hashed_shingles(F.col("text")).alias("sh")
     ).cache()

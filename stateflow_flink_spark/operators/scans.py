@@ -14,12 +14,11 @@ between scanning 2 columns' pages and the whole table.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load, run_bounded, staged_stream
+from ..io import load, run_bounded, scratch_dir, staged_stream
 from ..plans.registry import query
 
 
@@ -58,7 +57,7 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parquet round-trips doubles/longs bit-exactly, so the oracle is the
     pre-sink query itself.
     """
-    out = os.path.join(tempfile.mkdtemp(prefix="sfs_sink_"), "orders_big.parquet")
+    out = os.path.join(scratch_dir("sfs_sink_"), "orders_big.parquet")
     (
         load(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -101,7 +100,7 @@ def q_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     date/tenant/language partitioning is the first knob every large
     table turns.  Parquet round-trips longs/strings bit-exactly, so the
     oracle is the pre-sink filter itself."""
-    out = os.path.join(tempfile.mkdtemp(prefix="sfs_sink_part_"), "docs_by_lang")
+    out = os.path.join(scratch_dir("sfs_sink_part_"), "docs_by_lang")
     (
         load(spark, sf_dir, "documents")
         .select("doc_id", "lang", "n_chars")

@@ -763,17 +763,11 @@ EMB_LSH_VERIFY_GROUPS = 64  # FLOOR for the coarse Arrow verify groups
 _EMB_LSH_GROUP_ROWS = 200_000  # target (t, bucket, embedding) rows per
 #   verify group — each applyInPandas group materializes its slice as
 #   ONE pandas frame, so per-group rows must stay ~constant as the
-#   corpus grows: groups = clamp(L*n / target, 64, 65536), overridable
-#   via SPARK_GRAFT_EMB_LSH_GROUPS for cluster tuning.
+#   corpus grows: groups = clamp(L*n / target, 64, 65536).
 _EMB_LSH_PAIR_CHUNK = 4_000_000  # bound per-step pair memory in a hot bucket
 
 
 def _emb_lsh_verify_groups(n_vectors: int) -> int:
-    import os as _os
-
-    env = _os.environ.get("SPARK_GRAFT_EMB_LSH_GROUPS")
-    if env:
-        return max(1, int(env))
     rows = n_vectors * EMB_LSH_TABLES
     return min(65536, max(EMB_LSH_VERIFY_GROUPS, rows // _EMB_LSH_GROUP_ROWS))
 

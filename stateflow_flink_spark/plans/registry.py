@@ -10,15 +10,23 @@ pre-registered fixture views.
 Alias discipline (driver contract): the Spark DataFrame column names and
 the oracle SQL output column names must match EXACTLY — the driver sorts
 columns by name before hashing values.
+
+:func:`run_query` is the one way bench, tests and tools run a query: it
+forces the frame with the caller's action and then releases what the
+query left in the session.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import released_scratch
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
+T = TypeVar("T")
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
@@ -43,6 +51,36 @@ def oracle(name: str, sql: str) -> None:
     if name not in QUERIES:
         raise KeyError(f"oracle for unregistered query: {name}")
     ORACLE[name] = sql
+
+
+def run_query(
+    spark: SparkSession, name: str, sf_dir: str, action: Callable[[DataFrame], T]
+) -> T:
+    """Run query ``name`` and return ``action`` applied to its frame.
+
+    The run's jobs are described as ``name``.  Afterwards, whether the
+    action returned or raised: every RDD persisted during the run is
+    unpersisted (pins and cached frames), the cache is cleared, the
+    ``sfs_*`` temporary views (memory sinks and query views) are
+    dropped, and the run's :func:`io.scratch_dir` dirs are removed.
+    Catalog tables, such as the ``artifacts`` indexes, stay.  Every
+    run therefore starts cold.
+    """
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    sc.setJobDescription(name)
+    with released_scratch():
+        try:
+            return action(QUERIES[name](spark, sf_dir))
+        finally:
+            sc.setJobDescription(None)
+            spark.catalog.clearCache()
+            for rdd_id, rdd in list(sc._jsc.getPersistentRDDs().items()):
+                if rdd_id not in before:
+                    rdd.unpersist(False)
+            for t in spark.catalog.listTables():
+                if t.isTemporary and t.name.startswith("sfs_"):
+                    spark.catalog.dropTempView(t.name)
 
 
 def load_all_modules() -> None:

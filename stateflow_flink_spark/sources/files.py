@@ -12,12 +12,11 @@ original parquet, so the round-trip must be value-exact end to end.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, scratch_dir
 from ..plans.registry import query
 
 _AGG_ORACLE = """
@@ -41,7 +40,7 @@ def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 10 == 0)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="sfs_src_"), fmt)
+    out = os.path.join(scratch_dir("sfs_src_"), fmt)
     writer = src.write.mode("overwrite")
     if fmt == "csv":
         writer = writer.option("header", "true")

@@ -19,12 +19,10 @@ Structured Streaming cannot express cycles inside one query (SURVEY.md
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, scratch_dir
 from ..plans.registry import query
 
 MAX_FLOW_STEPS = 64  # safety bound, like any production feedback loop
@@ -47,7 +45,7 @@ def iterate_flow(flows: DataFrame, advance, max_steps: int = MAX_FLOW_STEPS) -> 
     not 64, and nothing stays pinned after the call.
     """
     spark = flows.sparkSession
-    stage = tempfile.mkdtemp(prefix="sfs_flow_done_")
+    stage = scratch_dir("sfs_flow_done_")
     frontier = flows
     prev: DataFrame | None = None
     for _ in range(max_steps):

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, run_bounded, staged_stream
+from ..io import load, run_bounded, scratch_dir, staged_stream
 from ..plans.registry import query
 from ..session import stream_partitions
 
@@ -274,7 +274,7 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    out = tempfile.mkdtemp(prefix="sfs_fb_sink_")
+    out = scratch_dir("sfs_fb_sink_")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         # idempotence = per-batch directory + overwrite: replaying batch
@@ -415,15 +415,15 @@ def run_incremental_rollup(
     event_type, value) — see q_rollup_incremental for the contract and
     merge_rollup_batch for the replay-safe recovery semantics.  `root`
     is the caller-supplied DURABLE rollup location (production: object
-    store beside the checkpoint); defaults to a tempdir for the
-    fixture-scale query path.  Exposed separately so tests can feed a
+    store beside the checkpoint); defaults to an ``io.scratch_dir`` for
+    the fixture-scale query path.  Exposed separately so tests can feed a
     deliberately multi-batch source (maxFilesPerTrigger) through the
     merge path and replay individual batches."""
     import shutil
     import tempfile
 
     if root is None:
-        root = tempfile.mkdtemp(prefix="sfs_rollup_")
+        root = scratch_dir("sfs_rollup_")
 
     # track which versions THIS run produced: the final read must never
     # pick up a stale higher version left in a reused durable root by an

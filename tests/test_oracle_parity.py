@@ -10,7 +10,12 @@ from __future__ import annotations
 
 import pytest
 
-from stateflow_flink_spark.plans.registry import ORACLE, QUERIES, load_all_modules
+from stateflow_flink_spark.plans.registry import (
+    ORACLE,
+    QUERIES,
+    load_all_modules,
+    run_query,
+)
 
 from .conftest import SF_SMOKE
 from .parity import compare
@@ -20,11 +25,13 @@ load_all_modules()
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
-    df = QUERIES[name](spark, SF_SMOKE)
-    spark_pdf = df.toPandas()
-    if name not in ORACLE:
-        assert len(df.columns) > 0
-        assert len(spark_pdf) >= 0
-        return
-    duck_pdf = duck.execute(ORACLE[name]).df()
-    compare(spark_pdf, duck_pdf, name)
+    def check(df) -> None:
+        spark_pdf = df.toPandas()
+        if name not in ORACLE:
+            assert len(df.columns) > 0
+            assert len(spark_pdf) >= 0
+            return
+        duck_pdf = duck.execute(ORACLE[name]).df()
+        compare(spark_pdf, duck_pdf, name)
+
+    run_query(spark, name, SF_SMOKE, check)

@@ -11,9 +11,10 @@ from __future__ import annotations
 import contextlib
 import io
 
-from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules
+from stateflow_flink_spark.plans.registry import ORACLE, QUERIES, load_all_modules
 
 from .conftest import SF_SMOKE
+from .parity import compare
 
 load_all_modules()
 
@@ -112,6 +113,19 @@ def test_bucketed_join_needs_no_join_shuffle(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "Bucketed: true" in plan
     assert plan.lower().count("hashpartitioning") <= 1
+
+
+def test_bucketed_tables_are_rebuilt_after_a_drop(spark, duck):
+    """The bucketed tables are an ``artifacts.ensure_tables`` memo: when
+    the catalog loses one, the next run rebuilds it instead of trusting
+    the memo, and the result still matches the oracle."""
+    from stateflow_flink_spark.operators.joins import _ensure_bucketed_tables
+
+    QUERIES["q_join_bucketed"](spark, SF_SMOKE).collect()
+    t_orders, _ = _ensure_bucketed_tables(spark, SF_SMOKE)
+    spark.sql(f"DROP TABLE {t_orders}")
+    got = QUERIES["q_join_bucketed"](spark, SF_SMOKE).toPandas()
+    compare(got, duck.execute(ORACLE["q_join_bucketed"]).df(), "q_join_bucketed")
 
 
 def test_mix_domains_is_projection_plus_single_agg(spark):

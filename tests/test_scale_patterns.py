@@ -275,24 +275,20 @@ def test_emb_lsh_verify_kernel_row_blocks_match_whole_triangle():
     assert len(whole) > 0  # planted dups actually exercised the keep path
 
 
-def test_emb_lsh_verify_groups_scale_with_corpus(monkeypatch):
+def test_emb_lsh_verify_groups_scale_with_corpus():
     """Verify-group fan-out keeps per-group rows ~constant as the
     corpus grows (a fixed 64 would grow per-group memory linearly),
-    floors at the small-corpus default, caps at 65536, and honors the
-    SPARK_GRAFT_EMB_LSH_GROUPS override."""
+    floors at the small-corpus default and caps at 65536."""
     from stateflow_flink_spark.operators.similarity import (
         EMB_LSH_TABLES,
         _EMB_LSH_GROUP_ROWS,
         _emb_lsh_verify_groups,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_EMB_LSH_GROUPS", raising=False)
     assert _emb_lsh_verify_groups(1000) == 64
     big = _emb_lsh_verify_groups(10_000_000)
     assert big == (10_000_000 * EMB_LSH_TABLES) // _EMB_LSH_GROUP_ROWS
     assert _emb_lsh_verify_groups(10**12) == 65536
-    monkeypatch.setenv("SPARK_GRAFT_EMB_LSH_GROUPS", "128")
-    assert _emb_lsh_verify_groups(10**9) == 128
 
 
 def test_triangle_estimator_tracks_unthinned_count(spark, tmp_path, monkeypatch):

@@ -37,6 +37,12 @@ def test_stateful_stream_equals_batch(spark):
     assert canonical_rows(stream) == canonical_rows(batch)
 
 
+def _mkdir(parent, name: str) -> str:
+    path = parent / name
+    path.mkdir(parents=True)
+    return str(path)
+
+
 def _write_events_chunk(stage: str, name: str, pdf) -> None:
     tbl = pa.Table.from_pandas(pdf, preserve_index=False)
     ts_idx = tbl.schema.get_field_index("ts")
@@ -46,18 +52,18 @@ def _write_events_chunk(stage: str, name: str, pdf) -> None:
     pq.write_table(tbl, os.path.join(stage, name))
 
 
-def test_stateful_state_survives_micro_batches_and_restart(spark):
+def test_stateful_state_survives_micro_batches_and_restart(spark, tmp_path):
     """Feed events in 3 chunks as 3 separate availableNow runs over one
     checkpoint: the fold must equal the batch result — state carries
     across micro-batches AND across query restarts (strictly stronger
     than the reference's at-least-once checkpointing)."""
     pdf = load(spark, SF_SMOKE, "events").orderBy("ts").toPandas()
-    stage = tempfile.mkdtemp(prefix="sfs_chunks_")
-    ckpt = tempfile.mkdtemp(prefix="sfs_ckpt_")
+    stage = _mkdir(tmp_path, "chunks")
+    ckpt = _mkdir(tmp_path, "ckpt")
     third = len(pdf) // 3
     chunks = (pdf.iloc[:third], pdf.iloc[third : 2 * third], pdf.iloc[2 * third :])
 
-    out = tempfile.mkdtemp(prefix="sfs_fold_out_")
+    out = _mkdir(tmp_path, "fold_out")
     for i, chunk in enumerate(chunks):
         _write_events_chunk(stage, f"chunk-{i}.parquet", chunk)
         stream = spark.readStream.schema(
@@ -80,10 +86,10 @@ def test_stateful_state_survives_micro_batches_and_restart(spark):
     assert canonical_rows(got) == canonical_rows(want)
 
 
-def test_watermark_drops_late_rows(spark):
+def test_watermark_drops_late_rows(spark, tmp_path):
     """Append-mode windowed agg: a row older than the watermark arriving
     in a later batch must not resurrect its window."""
-    stage = tempfile.mkdtemp(prefix="sfs_late_")
+    stage = _mkdir(tmp_path, "late")
 
     def write_batch(name, rows):
         tbl = pa.table(
@@ -99,8 +105,8 @@ def test_watermark_drops_late_rows(spark):
         pq.write_table(tbl, os.path.join(stage, name))
 
     hour = 3600
-    ckpt = tempfile.mkdtemp(prefix="sfs_late_ckpt_")
-    out = tempfile.mkdtemp(prefix="sfs_late_out_")
+    ckpt = _mkdir(tmp_path, "late_ckpt")
+    out = _mkdir(tmp_path, "late_out")
 
     def run() -> None:
         stream = spark.readStream.schema(
@@ -170,10 +176,10 @@ def test_flow_iteration_one_reply_per_event(spark):
     assert result.filter(~F.col("n_hops").isin(1, 2, 3)).count() == 0
 
 
-def test_stream_dedup_within_watermark(spark):
+def test_stream_dedup_within_watermark(spark, tmp_path):
     """Streaming dropDuplicates: duplicate event_ids across micro-batches
     are suppressed."""
-    stage = tempfile.mkdtemp(prefix="sfs_dup_")
+    stage = _mkdir(tmp_path, "dup")
 
     def write_batch(name, ids, base_ts):
         tbl = pa.table(
@@ -215,7 +221,7 @@ def test_stream_dedup_within_watermark(spark):
     assert got == [1, 2, 3, 4]
 
 
-def test_checkpoint_recovery_exactly_once(spark):
+def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     """Ref R14 (checkpointing, StateFlowFlinkJob.java:36-40), upgraded:
     a stopped streaming aggregation restarted from its checkpoint must
     process ONLY new files and land on exactly the batch answer — no
@@ -224,8 +230,8 @@ def test_checkpoint_recovery_exactly_once(spark):
     events = load(spark, SF_SMOKE, "events").select("event_id", "event_type")
     pdf = events.toPandas()
     half = len(pdf) // 2
-    src = tempfile.mkdtemp(prefix="sfs_ckpt_src_")
-    ckpt = tempfile.mkdtemp(prefix="sfs_ckpt_")
+    src = _mkdir(tmp_path, "ckpt_src")
+    ckpt = _mkdir(tmp_path, "ckpt")
     pq.write_table(pa.Table.from_pandas(pdf.iloc[:half]), os.path.join(src, "a.parquet"))
 
     def run_once(qname):
@@ -355,6 +361,54 @@ def test_foreach_batch_queries_release_their_checkpoints(
     assert any(d.startswith("sfs_rollup_") for d in left), left
 
 
+def test_run_query_releases_what_the_query_created(
+    spark, duck, tmp_path, monkeypatch
+):
+    """``registry.run_query`` leaves nothing behind once its action has
+    checked the result against the oracle: no ``sfs_*`` scratch dir in
+    the temp dir, no ``sfs_*`` temporary view (memory sinks) and no
+    RDD persisted during the run (q_dedup_minhash caches its band
+    table).  Frames other tests cached may be released too, since the
+    run clears the cache, so the check is on RDD ids, not a count."""
+    from stateflow_flink_spark.plans.registry import ORACLE, run_query
+
+    from .parity import compare
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    for name in (
+        "q_flow_iterate",
+        "q_stream_foreach_batch",
+        "q_rollup_incremental",
+        "q_sink_roundtrip",
+        "q_sink_partitioned",
+        "q_source_csv",
+        "q_source_json",
+        "q_source_orc",
+        "q_stream_watermark",
+        "q_dedup_minhash",
+    ):
+        run_query(
+            spark, name, SF_SMOKE,
+            lambda df, name=name: compare(
+                df.toPandas(), duck.execute(ORACLE[name]).df(), name
+            ),
+        )
+    left = sorted(p.name for p in tmp_path.iterdir() if p.name.startswith("sfs_"))
+    assert not left, left
+    views = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("sfs_")
+    ]
+    assert not views, views
+    assert persisted() <= before, persisted() - before
+
+
 def test_incremental_rollup_replayed_batch_is_idempotent(spark, tmp_path):
     """Failure contract: if a micro-batch is REPLAYED (crash between
     sink write and checkpoint commit), the versioned merge must
@@ -389,9 +443,7 @@ def test_incremental_rollup_replayed_batch_is_idempotent(spark, tmp_path):
     # availableNow run completed, so a fresh start() with the SAME
     # checkpoint must process NOTHING new (offsets committed) and the
     # rollup must not change
-    import tempfile
-
-    ckpt = tempfile.mkdtemp(prefix="sfs_replay_ckpt_")
+    ckpt = _mkdir(tmp_path, "replay_ckpt")
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
@@ -464,17 +516,17 @@ def test_incremental_rollup_midrun_replay_preserves_history(spark, tmp_path):
     assert v0.agg(F.sum("n_events")).collect()[0][0] == b0.count()
 
 
-def _run_windowed_batches(spark, transform, batches, seed: int):
+def _run_windowed_batches(spark, transform, batches, seed: int, root):
     """Replay `batches` (list of row-lists) as successive availableNow
-    runs over one checkpoint, with each batch's rows shuffled by `seed`
-    (batch MEMBERSHIP fixed, intra-batch order randomized).  Returns the
-    append-mode output as a sorted row list."""
+    runs over one checkpoint under dir `root`, with each batch's rows
+    shuffled by `seed` (batch MEMBERSHIP fixed, intra-batch order
+    randomized).  Returns the append-mode output as a sorted row list."""
     import random
 
     rng = random.Random(seed)
-    stage = tempfile.mkdtemp(prefix=f"sfs_perm_{seed}_")
-    ckpt = tempfile.mkdtemp(prefix=f"sfs_perm_ck_{seed}_")
-    out = tempfile.mkdtemp(prefix=f"sfs_perm_out_{seed}_")
+    stage = _mkdir(root, f"perm_{seed}")
+    ckpt = _mkdir(root, f"perm_ck_{seed}")
+    out = _mkdir(root, f"perm_out_{seed}")
 
     def write_batch(name, rows):
         rows = rows[:]
@@ -512,7 +564,7 @@ def _run_windowed_batches(spark, transform, batches, seed: int):
     return sorted(tuple(r) for r in spark.read.parquet(out).collect())
 
 
-def test_watermark_eviction_is_invariant_under_intra_batch_reorder(spark):
+def test_watermark_eviction_is_invariant_under_intra_batch_reorder(spark, tmp_path):
     """Property the 100 TB design leans on: watermark eviction depends
     only on which micro-batch a row arrives in (max event time per
     batch), never on the order rows happen to occupy within the batch.
@@ -537,7 +589,7 @@ def test_watermark_eviction_is_invariant_under_intra_batch_reorder(spark):
         )
 
     outputs = [
-        _run_windowed_batches(spark, windowed, batches, seed)
+        _run_windowed_batches(spark, windowed, batches, seed, tmp_path)
         for seed in (0, 1, 2)
     ]
     assert outputs[0] == outputs[1] == outputs[2]
@@ -549,7 +601,7 @@ def test_watermark_eviction_is_invariant_under_intra_batch_reorder(spark):
     assert sum(emitted.values()) <= 7  # event 5 never counted
 
 
-def test_session_merge_is_invariant_under_intra_batch_reorder(spark):
+def test_session_merge_is_invariant_under_intra_batch_reorder(spark, tmp_path):
     """session_window state merge must be order-insensitive the same
     way: two users' interleaved sessions replayed under k shuffles
     produce identical closed sessions, with a beyond-watermark row
@@ -567,7 +619,7 @@ def test_session_merge_is_invariant_under_intra_batch_reorder(spark):
 
     outputs = [
         _run_windowed_batches(
-            spark, session_window_stream, batches, seed
+            spark, session_window_stream, batches, seed, tmp_path
         )
         for seed in (0, 1, 2)
     ]
@@ -579,7 +631,7 @@ def test_session_merge_is_invariant_under_intra_batch_reorder(spark):
     assert all(r[2] == 1 for r in u2) and len(u2) >= 1, rows
 
 
-def test_progress_observables_capture_drops_and_throughput(spark):
+def test_progress_observables_capture_drops_and_throughput(spark, tmp_path):
     """streaming/progress.py: batch rows carry input counts + durations,
     and numRowsDroppedByWatermark surfaces the late row the engine
     discarded — the operational twin of test_watermark_drops_late_rows."""
@@ -588,7 +640,7 @@ def test_progress_observables_capture_drops_and_throughput(spark):
         progress_summary,
     )
 
-    stage = tempfile.mkdtemp(prefix="sfs_prog_")
+    stage = _mkdir(tmp_path, "prog")
 
     def write_batch(name, rows):
         tbl = pa.table(
@@ -604,8 +656,8 @@ def test_progress_observables_capture_drops_and_throughput(spark):
         pq.write_table(tbl, os.path.join(stage, name))
 
     hour = 3600
-    ckpt = tempfile.mkdtemp(prefix="sfs_prog_ckpt_")
-    out = tempfile.mkdtemp(prefix="sfs_prog_out_")
+    ckpt = _mkdir(tmp_path, "prog_ckpt")
+    out = _mkdir(tmp_path, "prog_out")
 
     def run():
         stream = spark.readStream.schema(

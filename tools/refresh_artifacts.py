@@ -66,12 +66,10 @@ def refresh_bench() -> None:
     import datetime
     import json
 
-    # bench.py emits THREE JSON lines since r10 (the per-query map, a
-    # short self-diff vs the previously-committed BENCH.json, and a
-    # rotating per-query history chunk); the artifact is the line that
-    # carries the "queries" map.  A stray stdout line that merely starts
-    # with "{" must not abort the refresh, so parse failures are skipped
-    # per line and only a missing "queries" line is fatal.
+    # The artifact is bench.py's JSON line, the one that carries the
+    # "queries" map.  A stray stdout line that merely starts with "{"
+    # must not abort the refresh, so parse failures are skipped per line
+    # and only a missing "queries" line is fatal.
     parsed = None
     for ln in res.stdout.strip().splitlines():
         if not ln.startswith("{"):

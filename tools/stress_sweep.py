@@ -208,50 +208,66 @@ def gen_corpus(out_dir: str, n_docs: int, seed: int) -> None:
     events.to_parquet(os.path.join(out_dir, "events.parquet"), index=False)
 
 
-def _worker(name: str, d1: str, d10: str) -> None:
-    """Measure ONE operator at both scales in a private JVM and print a
-    JSON line.  Isolation matters: the round-5 shared-session sweep
-    read q_sim_ann_lsh at 45 s on the 10x corpus (measured right after
+def _worker_session(app: str, driver_memory: str | None):
+    """The private session every worker mode measures in.
+
+    Isolation matters: the round-5 shared-session sweep read
+    q_sim_ann_lsh at 45 s on the 10x corpus (measured right after
     embedding-LSH's three ~370 s runs had trashed the heap) vs 12 s in
     a fresh process — a 21x 'super-linear' verdict manufactured by JVM
     state, not by the plan.  `spark.stop()` does not recycle the py4j
     JVM, so true isolation means one OS process per operator."""
-    import json
-
     from pyspark.sql import SparkSession
 
-    from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules
+    from stateflow_flink_spark.plans.registry import load_all_modules
     from stateflow_flink_spark.session import apply_runtime_conf
 
     load_all_modules()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
+    builder = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"stress-{name}")
+        .appName(app)
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # local-mode default is a 1 GiB heap — far below the 100 TB
-        # target's per-executor memory; give the sweep honest headroom
-        # so an OOM means "plan is wrong", not "toy heap".
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
     )
+    if driver_memory is not None:
+        builder = builder.config("spark.driver.memory", driver_memory)
+    spark = builder.getOrCreate()
     apply_runtime_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def _timed(spark, name: str, sf_dir: str, action):
+    """(seconds, result) of one ``run_query`` of ``name`` through
+    ``action``; the release after the action is not timed."""
+    from stateflow_flink_spark.plans.registry import run_query
+
+    t0 = time.perf_counter()
+
+    def act(df):
+        out = action(df)
+        return time.perf_counter() - t0, out
+
+    return run_query(spark, name, sf_dir, act)
+
+
+def _worker(name: str, d1: str, d10: str) -> None:
+    """Measure ONE operator at both scales in a private JVM and print a
+    JSON line."""
+    import json
+
+    # local-mode default is a 1 GiB heap — far below the 100 TB
+    # target's per-executor memory; give the sweep honest headroom
+    # so an OOM means "plan is wrong", not "toy heap".
+    spark = _worker_session(f"stress-{name}", driver_memory="16g")
 
     def run(d: str) -> tuple[float, int]:
-        rows = 0
-        ts = []
-        QUERIES[name](spark, d).count()  # warm-up, discarded (JVM,
-        #                                  codegen, python workers)
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, d)
-            rows = df.count()
-            ts.append(time.perf_counter() - t0)
-        ts.sort()
-        return ts[1], rows
+        # warm-up, discarded (JVM, codegen, python workers)
+        _timed(spark, name, d, lambda df: df.count())
+        runs = sorted(_timed(spark, name, d, lambda df: df.count()) for _ in range(3))
+        return runs[1]
 
     t1, r1 = run(d1)
     t10, r10 = run(d10)
@@ -355,35 +371,13 @@ def _worker_sv(name: str, sf_dir: str) -> None:
     built from."""
     import json
 
-    from pyspark.sql import SparkSession
-
-    from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules
-    from stateflow_flink_spark.session import apply_runtime_conf
-
-    load_all_modules()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"sv-{name}")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    apply_runtime_conf(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _worker_session(f"sv-{name}", driver_memory=None)
 
     def once() -> float:
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        if df.isStreaming:
-            df = spark.createDataFrame(df.collect(), df.schema)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        for t in spark.catalog.listTables():
-            if t.isTemporary and t.name.startswith("sfs_"):
-                spark.catalog.dropTempView(t.name)
-        return dt
+        return _timed(
+            spark, name, sf_dir,
+            lambda df: df.write.format("noop").mode("overwrite").save(),
+        )[0]
 
     once()  # warm-up, discarded
     print(json.dumps({"t": round(once(), 3)}))
@@ -471,36 +465,10 @@ def _worker_3p(name: str, runs: int, *dirs: str) -> None:
     smallest scale, then median-of-``runs`` wall clock per scale."""
     import json
 
-    from pyspark.sql import SparkSession
-
-    from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules
-    from stateflow_flink_spark.session import apply_runtime_conf
-
-    load_all_modules()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"3p-{name}")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    apply_runtime_conf(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _worker_session(f"3p-{name}", driver_memory="24g")
 
     def once(d: str) -> tuple[float, int]:
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, d)
-        if df.isStreaming:
-            df = spark.createDataFrame(df.collect(), df.schema)
-        rows = df.count()
-        dt = time.perf_counter() - t0
-        for t in spark.catalog.listTables():
-            if t.isTemporary and t.name.startswith("sfs_"):
-                spark.catalog.dropTempView(t.name)
-        return dt, rows
+        return _timed(spark, name, d, lambda df: df.count())
 
     once(dirs[0])  # warm-up, discarded
     out = []
