@@ -30,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules, run_query
-from stateflow_flink_spark.session import apply_runtime_conf
+from stateflow_flink_spark.session import configure
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -55,14 +55,14 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
     spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
+        configure(SparkSession.builder)
+        .master(f"local[{CPUS}]")
         .appName("stateflow-spark-bench")
         .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
-    apply_runtime_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
     def run(name: str) -> float:

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import TABLE_NAMES, TABLE_SCHEMAS
-from .session import stream_partitions
+from .session import session_token, stream_partitions
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
@@ -38,13 +38,13 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# (session id, sf_dir, table) -> resolved read schema.  The footer read
+# (session token, sf_dir, table) -> resolved read schema.  The footer read
 # for schema inference is a per-call driver-side file open; over a
 # 122-query suite that is ~120 redundant opens per table.  Caching the
 # *schema* (never the DataFrame — every call still gets a fresh plan
 # subtree with fresh expression IDs, so self-joins keep working) makes
 # repeat loads metadata-free.
-_SCHEMA_CACHE: dict[tuple[int, str, str], object] = {}
+_SCHEMA_CACHE: dict[tuple[str, str, str], object] = {}
 
 # sf_dir -> physical type string of events.ts in the parquet footer
 # ("timestamp[ns]" vs "timestamp[us]"...).  Fixture generations have
@@ -85,7 +85,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         nanos = _events_ts_is_nanos(path)
         if nanos:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (id(spark), sf_dir, name)
+    key = (session_token(spark), sf_dir, name)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         raw = spark.read.parquet(path)
@@ -116,7 +116,7 @@ def open_events_stream(
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         stream = spark.readStream.schema(EVENTS_RAW).parquet(stage_dir)
         return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    key = (id(spark), os.path.dirname(src_path), "events")
+    key = (session_token(spark), os.path.dirname(src_path), "events")
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(src_path).schema
@@ -211,7 +211,7 @@ def run_bounded(
 # df.rdd.getNumPartitions() materializes a physical plan driver-side on
 # every call; for the fixture tables the answer is a pure function of
 # (file, session core count), so cache it per (session, plan signature).
-_PARTS_CACHE: dict[tuple[int, str], int] = {}
+_PARTS_CACHE: dict[tuple[str, str], int] = {}
 
 
 def spread(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -229,7 +229,7 @@ def spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     # strip Catalyst expression ids (#123) — fresh per plan subtree,
     # irrelevant to partitioning
     sig = re.sub(r"#\d+", "", df._jdf.queryExecution().logical().treeString())
-    key = (id(spark), sig)
+    key = (session_token(spark), sig)
     parts = _PARTS_CACHE.get(key)
     if parts is None:
         parts = df.rdd.getNumPartitions()

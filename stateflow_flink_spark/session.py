@@ -16,6 +16,8 @@ deployment, not just local[32]:
     the DuckDB oracle must agree bit-for-bit.
   * Arrow enabled: every pandas_udf / applyInPandas crosses the
     JVM<->Python boundary in columnar batches.
+  * Python workers run ``worker_daemon``: a task no longer re-reads
+    pyspark.zip and the Spark jar, about 0.2 s per Python task.
 """
 
 from __future__ import annotations
@@ -36,6 +38,8 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
 
     Kept separate from :func:`get_spark` so the driver-owned session in
     ``__spark_entry__`` and test sessions share one config surface.
+    The Python-worker daemon is static conf, so a session built
+    elsewhere (:func:`apply_runtime_conf`) keeps ``pyspark.daemon``.
     """
     return (
         builder.config("spark.sql.session.timeZone", "UTC")
@@ -50,6 +54,7 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         # SF) broadcast automatically; AQE can also convert at runtime.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.python.daemon.module", "stateflow_flink_spark.worker_daemon")
     )
 
 

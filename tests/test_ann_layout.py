@@ -12,6 +12,7 @@ partitions' files, never the corpus.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stateflow_flink_spark.io import load
@@ -37,9 +38,14 @@ def _postings(spark, sf_dir):
     )
 
 
-def test_lsh_bucket_partitioned_probe_prunes_to_probe_budget(spark, tmp_path):
-    post = _postings(spark, SF_SMOKE).cache()
+@pytest.fixture
+def post(spark):
+    cached = _postings(spark, SF_SMOKE).cache()
+    yield cached
+    cached.unpersist()
 
+
+def test_lsh_bucket_partitioned_probe_prunes_to_probe_budget(spark, post, tmp_path):
     # the probe vector's plan: <= LSH_PROBES (tbl, bucket) pairs, from
     # driver-side arithmetic over its own projections (no corpus read)
     q = post.filter(F.col("vec_id") == 0).collect()
@@ -109,4 +115,3 @@ def test_lsh_bucket_partitioned_probe_prunes_to_probe_budget(spark, tmp_path):
     want = {r.vec_id for r in post.filter(F.expr(probe_pred)).collect()}
     got = {r.vec_id for r in rows}
     assert got == want and 0 in got  # probe's own bucket always probed
-    post.unpersist()

@@ -60,7 +60,9 @@ def _mk_event(rng: random.Random, i: int) -> tuple:
 def envelope_df(spark):
     rng = random.Random(42)
     rows = [_mk_event(rng, i) for i in range(500)]
-    return spark.createDataFrame(rows, EVENT_ENVELOPE).cache()
+    df = spark.createDataFrame(rows, EVENT_ENVELOPE).cache()
+    yield df
+    df.unpersist()
 
 
 def test_ingress_total_and_disjoint(spark, envelope_df):

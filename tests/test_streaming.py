@@ -169,11 +169,14 @@ def test_session_window_stream_equals_batch(spark):
 
 def test_flow_iteration_one_reply_per_event(spark):
     result = QUERIES["q_flow_iterate"](spark, SF_SMOKE).cache()
-    n_events = load(spark, SF_SMOKE, "events").count()
-    assert result.count() == n_events
-    assert result.select("event_id").distinct().count() == n_events
-    assert result.filter(F.col("reply") != "SuccessfulInvocation").count() == 0
-    assert result.filter(~F.col("n_hops").isin(1, 2, 3)).count() == 0
+    try:
+        n_events = load(spark, SF_SMOKE, "events").count()
+        assert result.count() == n_events
+        assert result.select("event_id").distinct().count() == n_events
+        assert result.filter(F.col("reply") != "SuccessfulInvocation").count() == 0
+        assert result.filter(~F.col("n_hops").isin(1, 2, 3)).count() == 0
+    finally:
+        result.unpersist()
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):

@@ -30,9 +30,12 @@ shuffle constants, and scheduler noise at these sub-second scales).
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -208,6 +211,22 @@ def gen_corpus(out_dir: str, n_docs: int, seed: int) -> None:
     events.to_parquet(os.path.join(out_dir, "events.parquet"), index=False)
 
 
+@contextmanager
+def _corpora(prefix: str, sizes) -> Iterator[list[str]]:
+    """One generated corpus per size (seed 1234), each in its own temp
+    dir, all removed once the pass that reads them is done."""
+    dirs: list[str] = []
+    try:
+        for n in sizes:
+            dirs.append(tempfile.mkdtemp(prefix=f"{prefix}{n}_"))
+            print(f"generating {n}-doc corpus at {dirs[-1]} ...", file=sys.stderr)
+            gen_corpus(dirs[-1], n, seed=1234)
+        yield dirs
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def _worker_session(app: str, driver_memory: str | None):
     """The private session every worker mode measures in.
 
@@ -220,12 +239,13 @@ def _worker_session(app: str, driver_memory: str | None):
     from pyspark.sql import SparkSession
 
     from stateflow_flink_spark.plans.registry import load_all_modules
-    from stateflow_flink_spark.session import apply_runtime_conf
+    from stateflow_flink_spark.session import configure
 
     load_all_modules()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        configure(SparkSession.builder)
+        .master(f"local[{cpus}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
@@ -234,7 +254,6 @@ def _worker_session(app: str, driver_memory: str | None):
     if driver_memory is not None:
         builder = builder.config("spark.driver.memory", driver_memory)
     spark = builder.getOrCreate()
-    apply_runtime_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -279,58 +298,54 @@ def main() -> None:
     import json
     import subprocess
 
-    dirs = {}
-    for scale, n in ((1, N_BASE), (SCALE, N_BASE * SCALE)):
-        d = tempfile.mkdtemp(prefix=f"sfs_stress_{scale}x_")
-        gen_corpus(d, n, seed=1234)  # same seed: 10x is a superset-alike
-        dirs[scale] = d
-
-    print(f"| query | {N_BASE} docs s | {N_BASE * SCALE} docs s | wall ratio "
-          "| rows 1x | rows 10x | rows ratio |")
-    print("|---|---|---|---|---|---|---|")
-    failures = []
-    for name in TARGETS:
-        try:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--worker", name,
-                 dirs[1], dirs[SCALE]],
-                capture_output=True, text=True,
-                # a hung operator IS the pathology this sweep hunts —
-                # bound it and report it instead of stalling the gate
-                timeout=int(os.environ.get("SPARK_GRAFT_SWEEP_TIMEOUT", "3600")),
+    # same seed at both sizes: the 10x corpus is a superset-alike
+    with _corpora("sfs_stress_", (N_BASE, N_BASE * SCALE)) as (d1, d10):
+        print(f"| query | {N_BASE} docs s | {N_BASE * SCALE} docs s | wall ratio "
+              "| rows 1x | rows 10x | rows ratio |")
+        print("|---|---|---|---|---|---|---|")
+        failures = []
+        for name in TARGETS:
+            try:
+                proc = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), "--worker", name,
+                     d1, d10],
+                    capture_output=True, text=True,
+                    # a hung operator IS the pathology this sweep hunts —
+                    # bound it and report it instead of stalling the gate
+                    timeout=int(os.environ.get("SPARK_GRAFT_SWEEP_TIMEOUT", "3600")),
+                )
+            except subprocess.TimeoutExpired:
+                print(f"| {name} | TIMEOUT | | | | | |")
+                failures.append((name, "timeout"))
+                continue
+            line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else ""
+            if proc.returncode != 0 or not line.startswith("{"):
+                print(f"| {name} | ERROR | | | | | |")
+                print(f"ERROR {name}: {proc.stderr[-400:]}", file=sys.stderr)
+                failures.append((name, "error"))
+                continue
+            m = json.loads(line)
+            t1, r1, t10, r10 = m["t1"], m["r1"], m["t10"], m["r10"]
+            ratio = t10 / t1 if t1 > 0 else float("inf")
+            rratio = (r10 / r1) if r1 else float("nan")
+            print(
+                f"| {name} | {t1:.2f} | {t10:.2f} | **{ratio:.1f}x** "
+                f"| {r1} | {r10} | {rratio:.1f}x |"
             )
-        except subprocess.TimeoutExpired:
-            print(f"| {name} | TIMEOUT | | | | | |")
-            failures.append((name, "timeout"))
-            continue
-        line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else ""
-        if proc.returncode != 0 or not line.startswith("{"):
-            print(f"| {name} | ERROR | | | | | |")
-            print(f"ERROR {name}: {proc.stderr[-400:]}", file=sys.stderr)
-            failures.append((name, "error"))
-            continue
-        m = json.loads(line)
-        t1, r1, t10, r10 = m["t1"], m["r1"], m["t10"], m["r10"]
-        ratio = t10 / t1 if t1 > 0 else float("inf")
-        rratio = (r10 / r1) if r1 else float("nan")
-        print(
-            f"| {name} | {t1:.2f} | {t10:.2f} | **{ratio:.1f}x** "
-            f"| {r1} | {r10} | {rratio:.1f}x |"
-        )
-        # An operator cannot emit R rows in under R work: when the TRUE
-        # result itself grows super-linearly (random 64-dim vectors
-        # crowd past the cosine threshold quadratically at large N),
-        # the fair bar is output growth x slack, not data growth x
-        # slack.  Wall-clock above BOTH bars is a real blowup.
-        bar = max(SUPRALINEAR_BAR, 2.0 * rratio if rratio == rratio else 0.0)
-        if ratio > bar:
-            failures.append((name, ratio))
-    if failures:
-        print(f"\nSUPER-LINEAR: {failures}", file=sys.stderr)
-        sys.exit(1)
-    print(f"\nAll {len(TARGETS)} queries within {SUPRALINEAR_BAR}x (or 2x "
-          f"their own output growth) at {SCALE}x data — no super-linear "
-          "blowup.")
+            # An operator cannot emit R rows in under R work: when the TRUE
+            # result itself grows super-linearly (random 64-dim vectors
+            # crowd past the cosine threshold quadratically at large N),
+            # the fair bar is output growth x slack, not data growth x
+            # slack.  Wall-clock above BOTH bars is a real blowup.
+            bar = max(SUPRALINEAR_BAR, 2.0 * rratio if rratio == rratio else 0.0)
+            if ratio > bar:
+                failures.append((name, ratio))
+        if failures:
+            print(f"\nSUPER-LINEAR: {failures}", file=sys.stderr)
+            sys.exit(1)
+        print(f"\nAll {len(TARGETS)} queries within {SUPRALINEAR_BAR}x (or 2x "
+              f"their own output growth) at {SCALE}x data — no super-linear "
+              "blowup.")
 
 
 # ---------------------------------------------------------------------------
@@ -487,71 +502,65 @@ def three_point() -> None:
     import json
     import subprocess
 
-    dirs = []
-    for n in _TP_SCALES:
-        d = tempfile.mkdtemp(prefix=f"sfs_3p_{n}_")
-        print(f"generating {n}-doc corpus at {d} ...", file=sys.stderr)
-        gen_corpus(d, n, seed=1234)
-        dirs.append(d)
-
-    print("| query | runs | 5k s | 50k s | 500k s | d1 ratio | d2 ratio "
-          "| rows 5k/50k/500k | verdict |")
-    print("|---|---|---|---|---|---|---|---|---|")
-    failures = []
-    for name in THREE_POINT_TARGETS:
-        runs = 7 if name == "q_dedup_minhash" else 3
-        try:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--worker-3p",
-                 name, str(runs), *dirs],
-                capture_output=True, text=True,
-                timeout=int(os.environ.get("SPARK_GRAFT_SWEEP_TIMEOUT", "3600")),
+    with _corpora("sfs_3p_", _TP_SCALES) as dirs:
+        print("| query | runs | 5k s | 50k s | 500k s | d1 ratio | d2 ratio "
+              "| rows 5k/50k/500k | verdict |")
+        print("|---|---|---|---|---|---|---|---|---|")
+        failures = []
+        for name in THREE_POINT_TARGETS:
+            runs = 7 if name == "q_dedup_minhash" else 3
+            try:
+                proc = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), "--worker-3p",
+                     name, str(runs), *dirs],
+                    capture_output=True, text=True,
+                    timeout=int(os.environ.get("SPARK_GRAFT_SWEEP_TIMEOUT", "3600")),
+                )
+            except subprocess.TimeoutExpired:
+                print(f"| {name} | {runs} | TIMEOUT | | | | | | |")
+                failures.append((name, "timeout"))
+                continue
+            line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else ""
+            if proc.returncode != 0 or not line.startswith("["):
+                print(f"| {name} | {runs} | ERROR | | | | | | |")
+                print(f"3P ERROR {name}: {proc.stderr[-400:]}", file=sys.stderr)
+                failures.append((name, "error"))
+                continue
+            m = json.loads(line)
+            t = [p["t"] for p in m]
+            r = [p["rows"] for p in m]
+            d1 = t[1] / t[0] if t[0] > 0 else float("inf")
+            d2 = t[2] / t[1] if t[1] > 0 else float("inf")
+            # Verdict bar, three clauses:
+            #   (a) d2 <= d1 x slack — decade ratios not growing (the
+            #       strictest reading of "sub-quadratic");
+            #   (b) d2 <= 10 x slack — a decade that costs at most the DATA
+            #       growth is at-most-linear BY DEFINITION; without this
+            #       clause a perfectly linear algorithm whose 5k/50k points
+            #       are fixed-cost-dominated (d1 ~ 1.5) would be flagged as
+            #       its ratios drift toward 10x while costs amortize;
+            #   (c) output-growth bound — when the TRUE result grows
+            #       super-linearly (random-vector cosine pairs crowd
+            #       quadratically), emitting R rows is Omega(R) work.
+            out_d2 = (r[2] / r[1]) if r[1] else float("nan")
+            bars = [_TP_DECADE_SLACK * d1, _TP_DECADE_SLACK * 10.0]
+            if out_d2 == out_d2:
+                bars.append(_TP_DECADE_SLACK * out_d2)
+            ok = d2 <= max(bars)
+            verdict = "sub-quadratic" if ok else "SUPER-LINEAR ONSET"
+            print(
+                f"| {name} | {runs} | {t[0]:.2f} | {t[1]:.2f} | {t[2]:.2f} "
+                f"| **{d1:.1f}x** | **{d2:.1f}x** | {r[0]}/{r[1]}/{r[2]} "
+                f"| {verdict} |"
             )
-        except subprocess.TimeoutExpired:
-            print(f"| {name} | {runs} | TIMEOUT | | | | | | |")
-            failures.append((name, "timeout"))
-            continue
-        line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else ""
-        if proc.returncode != 0 or not line.startswith("["):
-            print(f"| {name} | {runs} | ERROR | | | | | | |")
-            print(f"3P ERROR {name}: {proc.stderr[-400:]}", file=sys.stderr)
-            failures.append((name, "error"))
-            continue
-        m = json.loads(line)
-        t = [p["t"] for p in m]
-        r = [p["rows"] for p in m]
-        d1 = t[1] / t[0] if t[0] > 0 else float("inf")
-        d2 = t[2] / t[1] if t[1] > 0 else float("inf")
-        # Verdict bar, three clauses:
-        #   (a) d2 <= d1 x slack — decade ratios not growing (the
-        #       strictest reading of "sub-quadratic");
-        #   (b) d2 <= 10 x slack — a decade that costs at most the DATA
-        #       growth is at-most-linear BY DEFINITION; without this
-        #       clause a perfectly linear algorithm whose 5k/50k points
-        #       are fixed-cost-dominated (d1 ~ 1.5) would be flagged as
-        #       its ratios drift toward 10x while costs amortize;
-        #   (c) output-growth bound — when the TRUE result grows
-        #       super-linearly (random-vector cosine pairs crowd
-        #       quadratically), emitting R rows is Omega(R) work.
-        out_d2 = (r[2] / r[1]) if r[1] else float("nan")
-        bars = [_TP_DECADE_SLACK * d1, _TP_DECADE_SLACK * 10.0]
-        if out_d2 == out_d2:
-            bars.append(_TP_DECADE_SLACK * out_d2)
-        ok = d2 <= max(bars)
-        verdict = "sub-quadratic" if ok else "SUPER-LINEAR ONSET"
-        print(
-            f"| {name} | {runs} | {t[0]:.2f} | {t[1]:.2f} | {t[2]:.2f} "
-            f"| **{d1:.1f}x** | **{d2:.1f}x** | {r[0]}/{r[1]}/{r[2]} "
-            f"| {verdict} |"
-        )
-        if not ok:
-            failures.append((name, round(d2, 2)))
-    if failures:
-        print(f"\nSUPER-LINEAR ONSET: {failures}", file=sys.stderr)
-        sys.exit(1)
-    print(f"\nAll {len(THREE_POINT_TARGETS)} dedup-family queries hold "
-          "decade-over-decade (ratio(50k->500k) <= ratio(5k->50k) x "
-          f"{_TP_DECADE_SLACK} or bounded by their own output growth).")
+            if not ok:
+                failures.append((name, round(d2, 2)))
+        if failures:
+            print(f"\nSUPER-LINEAR ONSET: {failures}", file=sys.stderr)
+            sys.exit(1)
+        print(f"\nAll {len(THREE_POINT_TARGETS)} dedup-family queries hold "
+              "decade-over-decade (ratio(50k->500k) <= ratio(5k->50k) x "
+              f"{_TP_DECADE_SLACK} or bounded by their own output growth).")
 
 
 if __name__ == "__main__":
