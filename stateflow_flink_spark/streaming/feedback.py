@@ -16,10 +16,12 @@ route crosses ``streaming.routing`` — through the transport seam
 (``streaming/transport.py``), so the identical code path runs on
 directory-topics in-sandbox and ``format("kafka")`` in production.
 Both queries run one batch function, as the reference's one job runs
-every event through ``IngressRouter``, the invoke and ``EgressRouter``:
-the micro-batch that ingests a flow also hops it in place, up to
-``flow.MAX_FLOW_STEPS`` hops, so only flows past that bound cross the
-feedback edge.
+every event through ``IngressRouter``, the invoke and ``EgressRouter``.
+The invoke is the reference's per-event contract: ``advance`` is called
+once per event per hop, inside one ``flow.hop_flows`` stage over the
+whole micro-batch, so a batch runs the same number of Spark jobs
+whatever its flows' hop count, and only flows past
+``flow.MAX_FLOW_STEPS`` hops cross the feedback edge.
 
 Termination is the driver's concern (the reference's job runs forever;
 bounded fixtures need a drain): the loop stops once ``client_reply``
@@ -32,10 +34,8 @@ import os
 import shutil
 import tempfile
 import time
-from functools import reduce
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,8 +47,8 @@ from ..sources.kafka import (
     decode_frames,
     encode_frames,
 )
-from .flow import MAX_FLOW_STEPS
-from .routing import RETURN_NODE, route_egress, route_ingress
+from .flow import hop, hop_flows
+from .routing import route_egress, route_ingress
 
 
 def make_flow_requests(spark: SparkSession, flows: DataFrame) -> DataFrame:
@@ -77,70 +77,24 @@ def make_flow_requests(spark: SparkSession, flows: DataFrame) -> DataFrame:
     )
 
 
-def advance_envelope(env: DataFrame) -> DataFrame:
-    """One flow hop on the wire envelope (the stateful-apply stand-in,
-    SURVEY §3.3 step 2): burn one step off the cursor; an exhausted flow
-    becomes a Reply event (oneof flips request->reply, event.proto:52-56)
-    so route_egress sends it CLIENT (EgressRouter.java:36-42)."""
-    steps = F.col("current_fun_key").cast("long") - 1
-    done = steps <= 0
-    return env.withColumns(
-        {
-            "current_fun_key": steps.cast("string"),
-            "current_node_type": F.when(done, RETURN_NODE).otherwise("step"),
-            "reply": F.when(done, "SuccessfulInvocation").otherwise(F.col("reply")),
-            "request": F.when(done, F.lit(None).cast("string")).otherwise(
-                F.col("request")
-            ),
-        }
-    )
+def invoked_advance(latency) -> Callable[[dict], dict]:
+    """The per-event hop, :func:`flow.hop`, timed into ``latency`` (a
+    ``metrics.InvokeLatency``) exactly where the reference wraps its
+    Dropwizard metric around the lambda call
+    (``InvokeStatefulLambda.java:56-59`` build, ``:112`` update).
 
-
-def invoked_advance(latency=None) -> Callable[[DataFrame], DataFrame]:
-    """:func:`advance_envelope` as a PER-EVENT external function call —
-    the reference's InvokeStatefulLambda contract (one lambda call per
-    event, ``InvokeStatefulLambda.java:103-115``), with the latency
-    histogram wrapped around the call exactly where the reference wraps
-    its Dropwizard metric (``:56-59`` build, ``:112`` update).
-
-    ``latency`` is a ``metrics.InvokeLatency``; None runs the same
-    per-event path untimed.  Pass it as ``run_event_loop(...,
-    advance=invoked_advance(latency))``: every hop of every flow lands
-    one histogram sample, and after the loop drains
-    ``latency.snapshot()`` is the histogram the reference's metric
-    reporter would scrape."""
-
-    def hop(event: dict) -> dict:
-        steps = int(event["current_fun_key"]) - 1
-        done = steps <= 0
-        return {
-            **event,
-            "current_fun_key": str(steps),
-            "current_node_type": RETURN_NODE if done else "step",
-            "reply": "SuccessfulInvocation" if done else event["reply"],
-            "request": None if done else event["request"],
-        }
-
-    fn = latency.timed_stateless(hop) if latency is not None else hop
-    cols = EVENT_ENVELOPE.fieldNames()
-
-    def advance(env: DataFrame) -> DataFrame:
-        def run(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    [fn(ev) for ev in pdf.to_dict("records")], columns=cols
-                )
-
-        return env.mapInPandas(run, EVENT_ENVELOPE)
-
-    return advance
+    Pass it as ``run_event_loop(..., advance=invoked_advance(latency))``:
+    every hop of every flow lands one histogram sample, and after the
+    loop drains ``latency.snapshot()`` is the histogram the reference's
+    metric reporter would scrape."""
+    return latency.timed_stateless(hop)
 
 
 def run_event_loop(
     spark: SparkSession,
     transport,
     seed: DataFrame,
-    advance: Callable[[DataFrame], DataFrame] = advance_envelope,
+    advance: Callable[[dict], dict] = hop,
     expected_replies: int | None = None,
     timeout_s: float = 120.0,
     trigger_s: str = "250 milliseconds",
@@ -149,26 +103,30 @@ def run_event_loop(
 
     ``seed`` is an EVENT_ENVELOPE DataFrame of client requests (e.g.
     :func:`make_flow_requests` output, optionally mixed with Pings).
+    ``advance(event) -> event`` is one hop of one mid-flow event.
     Returns the decoded client replies.
 
     Data path (identical on DirectoryTransport and KafkaTransport):
 
       client --encode_frames--> client_request
       query A (client_request) and query B (internal), one batch function:
-        decode_frames -> route_ingress -> localCheckpoint
-          EGRESS   -> stamp out_reply                   (R3 ingress)
-          INTERNAL -> repeat {advance -> route_egress -> localCheckpoint}
-                      on the rows still INTERNAL, until none is left or
+        decode_frames -> route_ingress
+          EGRESS   -> stamp out_reply, pass through     (R3 ingress)
+          INTERNAL -> one hop stage: advance each event
+                      while it is mid-flow, up to
                       MAX_FLOW_STEPS hops               (R4+R11)
+        -> route_egress -> localCheckpoint, the batch's one checkpoint
         -> client_reply, one append per batch; internal (the feedback
            edge), only flows still mid-flow after the bound   (R13)
 
-    A flow of at most MAX_FLOW_STEPS hops is answered in the micro-batch
-    that ingests it and never touches ``internal``; a longer one crosses
-    it once per further run of MAX_FLOW_STEPS hops. Each batch pays its
-    trigger, decode, encode and appends once, not once per hop (the
-    Drizzle amortization of per-batch coordination). No hop here waits
-    on keyed state, so none has to cross the topic.
+    A data batch runs two Spark jobs, the checkpoint and the reply
+    append, plus the feedback append when a flow passes the bound,
+    whatever its flows' hop count (the Drizzle amortization of
+    per-batch coordination). A flow of at most MAX_FLOW_STEPS hops is
+    answered in the micro-batch that ingests it and never touches
+    ``internal``; a longer one crosses it once per further run of
+    MAX_FLOW_STEPS hops. No hop here waits on keyed state, so none has
+    to cross the topic.
     """
     base = tempfile.mkdtemp(prefix="sfs_wireloop_ck_")
     n_expected = expected_replies if expected_replies is not None else seed.count()
@@ -181,61 +139,48 @@ def run_event_loop(
     is_client = F.col("direction") == CLIENT
     is_internal = F.col("direction") == INTERNAL
 
-    def split(df: DataFrame, *directions: str) -> tuple[DataFrame, dict]:
-        """Checkpoint ``df`` eagerly, the split's only action, with an
-        observation counting its rows per direction on the way."""
-        sizes = Observation()
-        counted = df.observe(
-            sizes,
-            *(F.count_if(F.col("direction") == d).alias(d) for d in directions),
-        ).localCheckpoint()
-        return counted, sizes.get
-
     def loop_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed, counts = split(batch_df, EGRESS, INTERNAL)  # route ONCE
-        replies: list[DataFrame] = []
-        if counts.get(EGRESS):
-            # Ping / already-finished flows answer the client directly
-            # (IngressRouter.java:42-52, :79-90): stamp out_reply into
-            # the oneof before framing.
-            replies.append(
-                routed.filter(is_egress)
-                .withColumns(
-                    {
-                        "reply": F.col("out_reply"),
-                        "request": F.lit(None).cast("string"),
-                    }
-                )
-                .select(*env_cols)
+        # Ping / already-finished flows answer the client directly
+        # (IngressRouter.java:42-52, :79-90): stamp out_reply into the
+        # oneof, so the hop stage passes them through. ERROR rows (not
+        # requests) are dropped, as the ingress router rejects them.
+        events = (
+            batch_df.filter(is_egress | is_internal)
+            .withColumns(
+                {
+                    "reply": F.when(is_egress, F.col("out_reply")).otherwise(
+                        F.col("reply")
+                    ),
+                    "request": F.when(is_egress, F.lit(None)).otherwise(
+                        F.col("request")
+                    ),
+                }
             )
-        if counts.get(INTERNAL):
-            # Hop the batch's flows in place until none is left
-            # mid-flow, up to MAX_FLOW_STEPS hops, one action per hop.
-            frontier = routed.filter(is_internal).select(*env_cols)
-            for _ in range(MAX_FLOW_STEPS):
-                hopped, counts = split(
-                    route_egress(advance(frontier)), CLIENT, INTERNAL
-                )
-                if counts.get(CLIENT):
-                    replies.append(hopped.filter(is_client).select(*env_cols))
-                frontier = hopped.filter(is_internal).select(*env_cols)
-                if not counts.get(INTERNAL):
-                    break
-            else:
-                # THE FEEDBACK EDGE: flows still mid-flow after the
-                # bound go back into query B's source topic
-                # (StateFlowFlinkJob.java:127-132).
-                transport.append(
-                    encode_frames(frontier, TOPIC_INTERNAL), TOPIC_INTERNAL
-                )
-        if replies:
-            # every hop keeps the batch's partitions, so a union of k
-            # parts has k times as many: encode in the batch's count
-            done = reduce(DataFrame.unionByName, replies).coalesce(
-                replies[0].rdd.getNumPartitions()
+            .select(*env_cols)
+        )
+        sizes = Observation()
+        routed = (
+            route_egress(hop_flows(events, advance))
+            .observe(
+                sizes,
+                F.count_if(is_client).alias(CLIENT),
+                F.count_if(is_internal).alias(INTERNAL),
             )
+            .localCheckpoint()
+        )
+        counts = sizes.get
+        if counts[CLIENT]:
             transport.append(
-                encode_frames(done, TOPIC_CLIENT_REPLY), TOPIC_CLIENT_REPLY
+                encode_frames(routed.filter(is_client), TOPIC_CLIENT_REPLY),
+                TOPIC_CLIENT_REPLY,
+            )
+        if counts[INTERNAL]:
+            # THE FEEDBACK EDGE: flows still mid-flow after the bound go
+            # back into query B's source topic
+            # (StateFlowFlinkJob.java:127-132).
+            transport.append(
+                encode_frames(routed.filter(is_internal), TOPIC_INTERNAL),
+                TOPIC_INTERNAL,
             )
 
     # One query per source topic, both running loop_batch: query A
@@ -249,8 +194,8 @@ def run_event_loop(
         for name, topic in (("ck_a", TOPIC_CLIENT_REQUEST), ("ck_b", TOPIC_INTERNAL))
     ]
 
+    deadline = time.time() + timeout_s
     try:
-        deadline = time.time() + timeout_s
         done = 0
         while time.time() < deadline:
             done = transport.read_batch(spark, TOPIC_CLIENT_REPLY).count()
@@ -263,8 +208,13 @@ def run_event_loop(
             )
     finally:
         for q in queries:
+            # Stop between batches only, within what is left of
+            # timeout_s: a stop that interrupts foreachBatch kills the
+            # stream thread (StackOverflowError in Spark 4.1's
+            # StreamExecution.isInterruptionException).
+            while q.isActive and q.status["isTriggerActive"] and time.time() < deadline:
+                time.sleep(0.05)
             q.stop()
         # fresh per call, so nothing can resume from it
         shutil.rmtree(base, ignore_errors=True)
     return decode_frames(transport.read_batch(spark, TOPIC_CLIENT_REPLY))
-

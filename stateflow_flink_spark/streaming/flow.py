@@ -4,73 +4,80 @@ The reference iterates by producing mid-flow events back to the
 ``internal`` Kafka topic, which its own source re-consumes
 (``EgressRouter.java:49-63`` -> ``StateFlowFlinkJob.java:143-147`` ->
 ``:50``): a cycle through Kafka, one hop per flow step, terminating when
-the cursor reaches ``"RETURN"`` (``IngressRouter.java:79``).
+the cursor reaches ``"RETURN"`` (``IngressRouter.java:79``).  Each hop
+is one function call per event (``InvokeStatefulLambda.java:103-115``).
 
-Structured Streaming cannot express cycles inside one query (SURVEY.md
-§3.3), so the engine offers the two idiomatic mappings:
+A hop is therefore row-local, and :func:`hop_flows` runs every hop of
+every row in ONE ``mapInPandas`` stage: ``advance(event) -> event`` is
+called once per event per hop while the event is still mid-flow
+(``routing.mid_flow``, the egress router's INTERNAL rule), up to
+``MAX_FLOW_STEPS`` hops; every other row passes through unchanged.
+Structured Streaming cannot express the cycle inside one query (SURVEY.md
+§3.3); both mappings of it hop through this one stage:
 
-  * production: keep the feedback topic — two independent streaming
-    queries sharing ``internal`` (see streaming/feedback.py);
-  * bounded/batch: the driver-side loop below — repeatedly apply
-    route+advance to the not-yet-returned frontier, union the finished
-    rows, until the frontier is empty.  Each iteration is one Catalyst
-    job over a shrinking DataFrame; nothing is collected per row.
+  * production: the two streaming queries sharing ``internal``
+    (streaming/feedback.py) hop each micro-batch's flows in it, and only
+    flows still mid-flow after the bound cross the feedback edge;
+  * bounded/batch: ``q_flow_iterate`` hops a fixture's flows in it, and
+    a flow still mid-flow after the bound is an error.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from ..io import load, scratch_dir
+from ..io import load
 from ..plans.registry import query
+from ..schemas import INTERNAL
+from .routing import RETURN_NODE, mid_flow, route_egress
 
 MAX_FLOW_STEPS = 64  # safety bound, like any production feedback loop
 
 
-def iterate_flow(flows: DataFrame, advance, max_steps: int = MAX_FLOW_STEPS) -> DataFrame:
-    """Drive `flows` through `advance` until every row reaches RETURN.
+def hop(event: dict) -> dict:
+    """One flow hop on one event (the stateful-apply stand-in, SURVEY
+    §3.3 step 2): burn one step off the cursor, which carries the
+    remaining-step count in ``current_fun_key``; an exhausted flow
+    becomes a Reply event (oneof flips request->reply, event.proto:52-56)
+    so route_egress sends it CLIENT (EgressRouter.java:36-42)."""
+    steps = int(event["current_fun_key"]) - 1
+    done = steps <= 0
+    return {
+        **event,
+        "current_fun_key": str(steps),
+        "current_node_type": RETURN_NODE if done else "step",
+        "reply": "SuccessfulInvocation" if done else event["reply"],
+        "request": None if done else event["request"],
+    }
 
-    ``flows`` needs columns ``current_node_type`` + whatever ``advance``
-    uses; ``advance(df) -> df`` performs ONE flow step (the stateful
-    apply that moves the cursor — ref §3.3 step 2) and must add 1 to
-    ``n_hops``.  Returns the finished rows with a ``reply`` column.
 
-    Caching is bounded: at most TWO frontiers are pinned at any moment
-    (the one being advanced and its successor), and each step's finished
-    rows stream straight to a parquet staging dir (a distributed append
-    write — the batch analog of producing replies to the client topic),
-    so the returned DataFrame is a clean scan with no dependence on any
-    cached frontier.  A 64-step flow therefore holds 2 cached frontiers,
-    not 64, and nothing stays pinned after the call.
-    """
-    spark = flows.sparkSession
-    stage = scratch_dir("sfs_flow_done_")
-    frontier = flows
-    prev: DataFrame | None = None
-    for _ in range(max_steps):
-        frontier = advance(frontier).persist()
-        # stream this step's finished rows out; the write is the action
-        # that also materializes the frontier cache
-        (
-            frontier.filter(F.col("current_node_type") == "RETURN")
-            .withColumn("reply", F.lit("SuccessfulInvocation"))
-            .write.mode("append")
-            .parquet(stage)
-        )
-        nxt = frontier.filter(F.col("current_node_type") != "RETURN")
-        stop = nxt.isEmpty()  # reuses the cache populated just above
-        if prev is not None:
-            prev.unpersist()
-        prev = frontier
-        frontier = nxt
-        if stop:
-            break
-    else:
-        prev.unpersist()
-        raise RuntimeError(f"flow did not terminate within {max_steps} steps")
-    prev.unpersist()
-    return spark.read.parquet(stage)
+def hop_flows(events: DataFrame, advance: Callable[[dict], dict]) -> DataFrame:
+    """Hop every mid-flow row of ``events`` until it leaves the flow or
+    has taken ``MAX_FLOW_STEPS`` hops, in one stage with no action.
+
+    ``events`` needs ``request`` and ``reply`` (the mid-flow test) plus
+    whatever ``advance`` reads; the result has the same columns, each
+    nullable, since a hop may clear ``request``."""
+    cols = events.columns
+    schema = StructType([StructField(f.name, f.dataType) for f in events.schema])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for event in pdf.to_dict("records"):
+                for _ in range(MAX_FLOW_STEPS):
+                    if not mid_flow(event):
+                        break
+                    event = advance(event)
+                out.append(event)
+            yield pd.DataFrame(out, columns=cols)
+
+    return events.mapInPandas(run, schema)
 
 
 @query(
@@ -86,26 +93,29 @@ def q_flow_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded flow iteration (ref R4/R11/R13): each event becomes a
     synthetic (event_id % 3 + 1)-step flow; the loop must route every
     flow to RETURN and emit exactly one CLIENT reply per event_id.
-    The oracle is the closed form of the hop count."""
+    ``n_hops`` counts the hops :func:`hop_flows` ran; the oracle is its
+    closed form."""
     e = load(spark, sf_dir, "events")
     flows = e.select(
         "event_id",
-        (F.col("event_id") % 3 + 1).alias("steps_left"),
+        F.lit("EventFlow").alias("request"),
+        F.lit(None).cast("string").alias("reply"),
+        (F.col("event_id") % 3 + 1).cast("string").alias("current_fun_key"),
         F.lit("step").alias("current_node_type"),
         F.lit(0).cast("long").alias("n_hops"),
     )
 
-    def advance(df: DataFrame) -> DataFrame:
-        stepped = df.withColumns(
-            {
-                "steps_left": F.col("steps_left") - 1,
-                "n_hops": F.col("n_hops") + 1,
-            }
-        )
-        return stepped.withColumn(
-            "current_node_type",
-            F.when(F.col("steps_left") <= 0, "RETURN").otherwise("step"),
-        )
+    def counted_hop(event: dict) -> dict:
+        return {**hop(event), "n_hops": event["n_hops"] + 1}
 
-    result = iterate_flow(flows, advance)
-    return result.select("event_id", "n_hops", "reply")
+    hopped = route_egress(hop_flows(flows, counted_hop))
+    unfinished = F.raise_error(
+        F.lit(f"flow did not terminate within {MAX_FLOW_STEPS} steps")
+    )
+    return hopped.select(
+        "event_id",
+        "n_hops",
+        F.when(F.col("direction") == INTERNAL, unfinished)
+        .otherwise(F.col("reply"))
+        .alias("reply"),
+    )

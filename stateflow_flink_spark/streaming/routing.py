@@ -93,6 +93,12 @@ def route_egress(events: DataFrame) -> DataFrame:
     return events.withColumns({"direction": direction, "route_name": route_name})
 
 
+def mid_flow(event: dict) -> bool:
+    """:func:`route_egress`'s INTERNAL rule on one event: no reply yet
+    and still an EventFlow request, so the flow needs another hop."""
+    return event["reply"] is None and event["request"] == "EventFlow"
+
+
 def side_output(routed: DataFrame, route_name: str) -> DataFrame:
     """One 'side output' = one filtered view of the routed stream
     (the Spark replacement for Flink OutputTags,

@@ -12,6 +12,7 @@ that substitution is what test_kafka_transport_format_wiring pins.
 from __future__ import annotations
 
 import threading
+import time
 from collections import Counter
 
 import pytest
@@ -21,15 +22,17 @@ from stateflow_flink_spark.io import load
 from stateflow_flink_spark.schemas import EVENT_ENVELOPE
 from stateflow_flink_spark.sources.kafka import (
     KAFKA_RECORD,
+    TOPIC_CLIENT_REPLY,
     TOPIC_CLIENT_REQUEST,
     decode_frames,
+    encode_frames,
 )
 from stateflow_flink_spark.streaming.feedback import (
     invoked_advance,
     make_flow_requests,
     run_event_loop,
 )
-from stateflow_flink_spark.streaming.flow import MAX_FLOW_STEPS
+from stateflow_flink_spark.streaming.flow import MAX_FLOW_STEPS, hop
 from stateflow_flink_spark.streaming.transport import (
     DirectoryTransport,
     KafkaTransport,
@@ -91,7 +94,15 @@ def test_wire_loop_ping_answered_from_ingress(spark, tmp_path):
     (IngressRouter.java:42-52) — mixed seed of Pings and one-hop flows
     must yield exactly one reply each, with the right oneof member, and
     nothing crosses the internal topic: the flows finish in the batch
-    that ingests them."""
+    that ingests them.  ``advance`` is the reference's per-event invoke,
+    called only on a mid-flow event, so one that refuses a Ping, a Reply
+    or any other event changes nothing."""
+
+    def strict_hop(event: dict) -> dict:
+        if event["request"] != "EventFlow" or event["reply"] is not None:
+            raise ValueError(f"advance called on a non-flow event: {event}")
+        return hop(event)
+
     flows = spark.range(3).select(
         F.col("id").alias("event_id"), F.lit(1).alias("steps_left")
     )
@@ -99,7 +110,7 @@ def test_wire_loop_ping_answered_from_ingress(spark, tmp_path):
     pings = _pings(spark, 2)
     transport = DirectoryTransport(str(tmp_path))
     replies = run_event_loop(
-        spark, transport, seed.unionByName(pings), timeout_s=90.0
+        spark, transport, seed.unionByName(pings), advance=strict_hop, timeout_s=90.0
     )
     got = {r.event_id: r.reply for r in replies.collect()}
     assert got == {
@@ -110,6 +121,116 @@ def test_wire_loop_ping_answered_from_ingress(spark, tmp_path):
         "ping-1": "Pong",
     }
     assert transport.read_batch(spark, "internal").count() == 0
+
+
+class QueryEvents:
+    """A ``StreamingQueryListener`` registered for a ``with`` block: it
+    keeps each run's progress reports and termination exception, keyed
+    by run id, and on exit drains the listener bus so every event of the
+    block has been delivered."""
+
+    def __init__(self, spark) -> None:
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        self.spark = spark
+        self.progress: list = []
+        self.terminated: dict[str, str | None] = {}
+        events = self
+
+        class Listener(StreamingQueryListener):
+            def onQueryStarted(self, event) -> None:
+                pass
+
+            def onQueryProgress(self, event) -> None:
+                events.progress.append(event.progress)
+
+            def onQueryIdle(self, event) -> None:
+                pass
+
+            def onQueryTerminated(self, event) -> None:
+                events.terminated[str(event.runId)] = event.exception
+
+        self.listener = Listener()
+
+    def __enter__(self) -> "QueryEvents":
+        self.spark.streams.addListener(self.listener)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        self.spark.streams.removeListener(self.listener)
+
+
+class DrainDuringBatch(DirectoryTransport):
+    """DirectoryTransport whose first ``client_reply`` read, the drain's
+    first poll, waits until a query is processing a batch."""
+
+    def __init__(self, base: str) -> None:
+        super().__init__(base)
+        self.polled = False
+        self.batch_in_flight = False
+
+    def read_batch(self, spark, topic: str):
+        if topic == TOPIC_CLIENT_REPLY and not self.polled:
+            self.polled = True
+            deadline = time.time() + 60
+            while not self.batch_in_flight and time.time() < deadline:
+                self.batch_in_flight = any(
+                    q.status["message"] == "Processing new data"
+                    for q in spark.streams.active
+                )
+                time.sleep(0.01)
+        return super().read_batch(spark, topic)
+
+
+def test_wire_loop_stops_queries_between_batches(spark, tmp_path):
+    """A drain that returns while a batch is in flight must not stop a
+    query inside ``foreachBatch``: ``client_reply`` already holds the
+    expected count, so the drain returns during query A's first batch.
+    That batch still completes and appends its replies, and both
+    queries terminate without an exception."""
+    flows = spark.range(200).select(
+        F.col("id").alias("event_id"), (F.col("id") % 8 + 1).alias("steps_left")
+    )
+    seed = make_flow_requests(spark, flows)
+    transport = DrainDuringBatch(str(tmp_path))
+    transport.append(encode_frames(seed, TOPIC_CLIENT_REPLY), TOPIC_CLIENT_REPLY)
+    with QueryEvents(spark) as events:
+        replies = run_event_loop(spark, transport, seed, timeout_s=90.0)
+    assert transport.batch_in_flight
+    assert replies.count() == 2 * 200  # the pre-filled frames and the batch's
+    assert len(events.terminated) == 2
+    assert list(events.terminated.values()) == [None, None]
+
+
+def test_wire_loop_batch_jobs_do_not_grow_with_hops(spark, tmp_path):
+    """A data batch hops all its flows in one stage: query A's batch of
+    1-hop flows and its batch of 8-hop flows each run two Spark jobs,
+    the checkpoint and the reply append. The stream thread runs a
+    batch's jobs under the query's run id as job group."""
+
+    def jobs_of_ingesting_batch(steps: int, base: str) -> int:
+        flows = spark.range(40).select(
+            F.col("id").alias("event_id"), F.lit(steps).alias("steps_left")
+        )
+        with QueryEvents(spark) as events:
+            run_event_loop(
+                spark,
+                DirectoryTransport(base),
+                make_flow_requests(spark, flows),
+                timeout_s=90.0,
+            )
+        (run_id,) = {
+            str(p.runId)
+            for p in events.progress
+            if p.numInputRows > 0 and TOPIC_CLIENT_REQUEST in p.sources[0].description
+        }
+        tracker = spark.sparkContext.statusTracker()
+        return len(tracker.getJobIdsForGroup(run_id))
+
+    one = jobs_of_ingesting_batch(1, str(tmp_path / "one"))
+    eight = jobs_of_ingesting_batch(8, str(tmp_path / "eight"))
+    assert (one, eight) == (2, 2)
 
 
 class CountingTransport(DirectoryTransport):
