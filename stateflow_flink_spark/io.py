@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from .schemas import TABLE_NAMES, TABLE_SCHEMAS
 from .session import session_token, stream_partitions
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -185,17 +184,16 @@ def run_bounded(
     frame: DataFrame,
     name: str,
     mode: str = "append",
-    partitions: int | str | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Drain a streaming frame with one ``availableNow`` run into the
     memory sink ``name`` and return the sink's table.
 
-    ``partitions`` pins the state partition count for the run (see
-    ``session.stream_partitions``); ``checkpoint_dir`` lets a later run
-    resume the same state.
+    The run's state-partition count is the session's
+    ``defaultParallelism`` (``session.stream_partitions``);
+    ``checkpoint_dir`` lets a later run resume the same state.
     """
-    with stream_partitions(spark, partitions):
+    with stream_partitions(spark):
         writer = (
             frame.writeStream.format("memory")
             .queryName(name)

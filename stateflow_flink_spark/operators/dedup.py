@@ -209,17 +209,6 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_signature(sh: Column, k: int = MINHASH_K) -> Column:
-    """k min-hashes of a hashed-shingle set: sig[i] = min over shingles
-    of xxhash64(i, shingle_hash).  Pure JVM expression, and the k re-
-    hashes run over 8-byte longs (strings were hashed once upstream) —
-    at 100 TB this is the whole trick: fixed k longs per doc instead of
-    the shingle set."""
-    return F.array(
-        *[F.array_min(F.transform(sh, lambda s: F.xxhash64(F.lit(i), s))) for i in range(k)]
-    )
-
-
 def minhash_band_buckets(
     docsh: DataFrame, bands: int = MINHASH_BANDS, keep: list[str] | None = None
 ) -> DataFrame:

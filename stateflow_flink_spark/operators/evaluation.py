@@ -191,8 +191,6 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PR_THRESHOLDS = [k / 10.0 for k in range(1, 10)]  # pred >= 0.1 .. 0.9
-
 _PR_ORACLE = f"""
     WITH scored AS ({_SCORED_SQL}),
     q AS (

@@ -249,8 +249,6 @@ def q_mix_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from ..numerics import sql_sum as _sql_sum
 
-MIX_ALPHA_NOTE = "weights ∝ sqrt(domain token count), normalized"
-
 
 @query(
     "q_mix_weights",

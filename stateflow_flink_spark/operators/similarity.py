@@ -90,11 +90,8 @@ EMB_BLOCKS = 8  # block-GEMM grid for exact all-pairs; ~n_executors at scale
 # O(n²) foot-gun gate: the exact all-pairs twins exist to VERIFY the
 # bucketed scale paths, not to run at corpus scale — past this many
 # vectors they refuse instead of silently scheduling ~n²/2 cosines.
-# Override (e.g. on a cluster sized for a deliberate exact audit) via
-# the env var; the LSH/IVF twins have no cap.
-EXACT_PAIRS_CAP = int(
-    __import__("os").environ.get("SPARK_GRAFT_EXACT_PAIRS_CAP", "250000")
-)
+# The LSH/IVF twins have no cap.
+EXACT_PAIRS_CAP = 250_000
 
 
 def guard_exact_pairs(e: DataFrame, query_name: str, scale_twin: str) -> None:
@@ -110,8 +107,7 @@ def guard_exact_pairs(e: DataFrame, query_name: str, scale_twin: str) -> None:
             f"{query_name} is the exact O(n²) verification twin and is "
             f"capped at {EXACT_PAIRS_CAP} vectors (corpus has {n}): "
             f"~{n * (n - 1) // 2:.2e} pairs would be scheduled. Use "
-            f"{scale_twin} at this scale, or raise "
-            f"SPARK_GRAFT_EXACT_PAIRS_CAP for a deliberate exact audit."
+            f"{scale_twin} at this scale."
         )
 
 
@@ -121,9 +117,7 @@ def guard_exact_pairs(e: DataFrame, query_name: str, scale_twin: str) -> None:
 # O(n²), but both grow linearly in the probe count.  Past the cap they
 # refuse and point at the IVF-batched serving path instead of silently
 # scheduling a corpus scan per probe.
-BRUTE_PROBE_CAP = int(
-    __import__("os").environ.get("SPARK_GRAFT_BRUTE_PROBE_CAP", "4096")
-)
+BRUTE_PROBE_CAP = 4096
 
 
 def guard_probe_count(probes: DataFrame, query_name: str, scale_twin: str) -> None:
@@ -140,8 +134,7 @@ def guard_probe_count(probes: DataFrame, query_name: str, scale_twin: str) -> No
             f"{query_name} scores every probe against the FULL corpus "
             f"(brute force) and is capped at {BRUTE_PROBE_CAP} probes: "
             f"that schedules probes x corpus cosines. Use "
-            f"{scale_twin} at this probe volume, or raise "
-            f"SPARK_GRAFT_BRUTE_PROBE_CAP for a deliberate exact audit."
+            f"{scale_twin} at this probe volume."
         )
 
 
@@ -1709,7 +1702,6 @@ _KNN_GRAPH_ORACLE = f"""
 """
 
 
-KNN_GRAPH_SCALE_CONF = "spark.stateflow.knnGraph.scalePath"
 _KG_PROBE_CELLS = 4  # IVF cells probed per query on the scale path
 
 
@@ -1933,13 +1925,9 @@ def q_knn_graph_mutual(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed edge list on the reversed key, emitting each unordered
     edge once.  The edge list is pinned first so the two join branches
     don't re-run the GEMM.  Same O(n²) gate as the other exact twins;
-    set ``spark.stateflow.knnGraph.scalePath=true`` (or run
-    q_knn_graph_mutual_ann) to feed the mutual join from the IVF
-    candidate stage instead — the runnable 100 TB path."""
-    scale = (
-        str(spark.conf.get(KNN_GRAPH_SCALE_CONF, "false")).lower() == "true"
-    )
-    return knn_graph_mutual(spark, sf_dir, scale_path=scale)
+    q_knn_graph_mutual_ann feeds the mutual join from the IVF candidate
+    stage instead — the runnable 100 TB path."""
+    return knn_graph_mutual(spark, sf_dir, scale_path=False)
 
 
 _KNN_GRAPH_ANN_ORACLE = f"""

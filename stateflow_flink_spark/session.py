@@ -26,11 +26,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partition default for local test runs. On a real cluster this
-# is overridden (rule of thumb: ~2-3x total executor cores, with AQE
-# coalescing down); AQE's advisoryPartitionSizeInBytes then controls the
-# effective post-shuffle partition size regardless of this number.
-_LOCAL_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
+# Shuffle partition default for local test runs. On a real cluster the
+# deployment sets spark.sql.shuffle.partitions (rule of thumb: ~2-3x total
+# executor cores, with AQE coalescing down); AQE's
+# advisoryPartitionSizeInBytes then controls the effective post-shuffle
+# partition size regardless of this number.
+_LOCAL_SHUFFLE_PARTITIONS = "32"
 
 
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
@@ -87,42 +88,6 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Streaming stateful operators hash-partition their STATE by
-# spark.sql.shuffle.partitions at first checkpoint, and that number is
-# frozen into the checkpoint — AQE never coalesces it.  It is therefore
-# its own deployment knob: at 100 TB you run thousands of state
-# partitions (throughput / state-size bound), overriding via
-# SPARK_GRAFT_STREAM_PARTITIONS.
-#
-# The r14 sweep split the family in two (measured at sf0.1 AND sf1):
-#   * JVM stateful ops (windowed aggregates, stream-stream joins,
-#     dropDuplicates) are STATE-STORE-COMMIT-bound: going 8 -> 32
-#     partitions makes them 2-3x SLOWER at both scales (stream_left
-#     1.97 -> 5.89 s at sf0.1, 2.68 -> 5.68 s at sf1) — more stores,
-#     same work.  They keep this default (8, the r5 sweep's number).
-#   * Python-stateful (applyInPandasWithState) ops keyed by a
-#     high-cardinality key are PYTHON-WORKER-bound and want one
-#     partition per core — see python_state_partitions below.
-_STREAM_PARTITIONS = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-
-
-def python_state_partitions(spark: SparkSession) -> int | str:
-    """State-partition count for applyInPandasWithState operators over
-    a high-cardinality key (user_id: 1.5k groups at sf0.1, 15k at sf1).
-
-    Their per-batch cost is the Python side (per-group serializer
-    round-trips + the fold), which parallelizes across state
-    partitions, so the scale-adaptive choice is one partition per core
-    (guide §2 — not a constant tuned for either local mode or the
-    cluster).  Measured r14, 8 -> defaultParallelism(32): sf1 fold
-    9.8 -> 5.2 s, scd2 11.4 -> 5.7 s (~2x); sf0.1 is also faster
-    across the family (sessionize 2.08 -> 1.58, anomaly 2.11 -> 1.58,
-    cep 1.73 -> 1.42, 5-run medians).  The env override (same knob as
-    everything else) wins when set, so a cluster deployment sizes both
-    families together."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    return env or spark.sparkContext.defaultParallelism
-
 # Reliable-checkpoint knob for iteratively-reused frames (pagerank /
 # triangles / star contraction).  Conf name, or the env var of the same
 # intent; when neither is set, `pin` uses localCheckpoint.
@@ -174,7 +139,30 @@ def session_token(spark: SparkSession) -> str:
         return f"py-{id(spark)}"
 
 
-class rocksdb_state:
+class conf_scope:
+    """Context manager setting the session confs in ``confs`` for the
+    block; on exit each one is restored, or unset if it was unset
+    before."""
+
+    def __init__(self, spark: SparkSession, confs: dict[str, str]) -> None:
+        self._spark = spark
+        self._confs = confs
+        self._saved: dict[str, str | None] = {}
+
+    def __enter__(self) -> None:
+        for key, value in self._confs.items():
+            self._saved[key] = self._spark.conf.get(key, None)
+            self._spark.conf.set(key, value)
+
+    def __exit__(self, *exc) -> None:
+        for key, saved in self._saved.items():
+            if saved is None:
+                self._spark.conf.unset(key)
+            else:
+                self._spark.conf.set(key, saved)
+
+
+class rocksdb_state(conf_scope):
     """Context manager switching the streaming state-store provider to
     RocksDB for queries started within it, restoring the prior provider
     afterwards.
@@ -202,40 +190,34 @@ class rocksdb_state:
     )
 
     def __init__(self, spark: SparkSession) -> None:
-        self._spark = spark
-        self._saved: dict[str, str | None] = {}
-
-    def __enter__(self) -> None:
-        for key, value in ((self._KEY, self.PROVIDER), (self._CHANGELOG, "true")):
-            try:
-                self._saved[key] = self._spark.conf.get(key)
-            except Exception:
-                self._saved[key] = None
-            self._spark.conf.set(key, value)
-
-    def __exit__(self, *exc) -> None:
-        for key, saved in self._saved.items():
-            if saved is None:
-                self._spark.conf.unset(key)
-            else:
-                self._spark.conf.set(key, saved)
+        super().__init__(spark, {self._KEY: self.PROVIDER, self._CHANGELOG: "true"})
 
 
-class stream_partitions:
-    """Context manager pinning shuffle partitions (= streaming state
-    partition count) for the duration of one bounded streaming query,
-    restoring the batch setting afterwards.  Each registry streaming
-    query starts from a fresh checkpoint, so the pinned number never
-    conflicts with a prior run's state layout."""
+class stream_partitions(conf_scope):
+    """Context manager pinning shuffle partitions, which a streaming
+    stateful operator freezes into its checkpoint as its state-partition
+    count, for one bounded streaming query; the batch setting comes back
+    afterwards.
 
-    def __init__(self, spark: SparkSession, n: str | int | None = None) -> None:
-        self._spark = spark
-        self._n = str(n or _STREAM_PARTITIONS)
-        self._saved: str | None = None
+    The count is the session's ``defaultParallelism`` whether the state
+    lives in Python (``applyInPandasWithState``) or the JVM (aggregates,
+    joins, ``dropDuplicates``): one partition per core, as Flink derives
+    keyed-state placement from the job's parallelism.  AQE never
+    coalesces state partitions, so the number is set here, not left to
+    the batch default.  Each registry streaming query starts from a
+    fresh checkpoint, so the count never conflicts with a prior run's
+    state layout.
 
-    def __enter__(self) -> None:
-        self._saved = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._n)
+    Measured: Python-state folds are worker-bound and gain from every
+    core (MinHash stream dedup at sf0.1 on 32 cores: 17.6 s at 8
+    partitions, 7.1 s at 32); on ``local[4]`` the JVM stream-stream
+    join ran 3.61 s at 8 partitions and 3.06 s at 4.  JVM state is
+    store-commit-bound, so on a wide host it pays per partition: on 32
+    cores the r14 sweep measured the left stream-stream join at 1.97 s
+    with 8 partitions and 5.89 s with 32."""
 
-    def __exit__(self, *exc) -> None:
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._saved)
+    def __init__(self, spark: SparkSession) -> None:
+        super().__init__(
+            spark,
+            {"spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism)},
+        )

@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from ..io import run_bounded, staged_stream
 from ..operators.cep import _CEP_ORACLE
 from ..plans.registry import query
-from ..session import python_state_partitions
 from .state import keyed_fold
 
 _CEP_OUTPUT = (
@@ -98,6 +97,4 @@ def q_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = apply_cep_stream(
             events.select("user_id", "ts", "event_id", "event_type")
         )
-        return run_bounded(
-            spark, result, "sfs_stream_cep", partitions=python_state_partitions(spark)
-        )
+        return run_bounded(spark, result, "sfs_stream_cep")

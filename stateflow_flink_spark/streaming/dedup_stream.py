@@ -192,17 +192,7 @@ def run_minhash_dedup_stream(
     flag table (memory sink).  ``checkpoint_dir`` resumes bucket state
     across runs — the unbounded-ingest path the resume test exercises."""
     flags = apply_minhash_dedup_stream(docs)
-    # Unlike the scalar fold queries (state-store COUNT is pure fixed
-    # overhead there — session.stream_partitions defaults lower), this op does
-    # real Python work per bucket group, so it wants every core: at
-    # sf0.1 with 32 cores, 8 partitions run 17.6 s, 32 run 7.1 s.
-    return run_bounded(
-        spark,
-        flags,
-        query_name,
-        partitions=spark.sparkContext.defaultParallelism,
-        checkpoint_dir=checkpoint_dir,
-    )
+    return run_bounded(spark, flags, query_name, checkpoint_dir=checkpoint_dir)
 
 
 def dedup_verdicts(flags: DataFrame) -> DataFrame:

@@ -77,19 +77,6 @@ def make_flow_requests(spark: SparkSession, flows: DataFrame) -> DataFrame:
     )
 
 
-def invoked_advance(latency) -> Callable[[dict], dict]:
-    """The per-event hop, :func:`flow.hop`, timed into ``latency`` (a
-    ``metrics.InvokeLatency``) exactly where the reference wraps its
-    Dropwizard metric around the lambda call
-    (``InvokeStatefulLambda.java:56-59`` build, ``:112`` update).
-
-    Pass it as ``run_event_loop(..., advance=invoked_advance(latency))``:
-    every hop of every flow lands one histogram sample, and after the
-    loop drains ``latency.snapshot()`` is the histogram the reference's
-    metric reporter would scrape."""
-    return latency.timed_stateless(hop)
-
-
 def run_event_loop(
     spark: SparkSession,
     transport,

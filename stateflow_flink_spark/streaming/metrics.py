@@ -91,7 +91,14 @@ class InvokeLatency:
     def timed_stateless(self, fn: Callable[[dict], dict]) -> Callable[[dict], dict]:
         """Wrap a StatelessFn so every call lands one histogram sample —
         failures included (the reference updates the histogram before
-        inspecting the reply, InvokeStatelessLambda.java:93-95)."""
+        inspecting the reply, InvokeStatelessLambda.java:93-95).
+
+        ``run_event_loop(..., advance=latency.timed_stateless(flow.hop))``
+        times every hop of every flow exactly where the reference wraps
+        its Dropwizard metric around the lambda call
+        (``InvokeStatefulLambda.java:56-59`` build, ``:112`` update);
+        after the loop drains, ``snapshot()`` is the histogram the
+        reference's metric reporter would scrape."""
 
         def call(event: dict) -> dict:
             t0 = time.perf_counter()

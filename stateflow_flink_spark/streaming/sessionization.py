@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from ..io import load, run_bounded, staged_stream
 from ..plans.registry import query
-from ..session import python_state_partitions
 from .state import keyed_fold
 
 _EPOCH = "TIMESTAMP '1970-01-01 00:00:00'"
@@ -212,9 +211,4 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     open) session."""
     with staged_stream(spark, sf_dir, "events") as events:
         result = apply_sessionize_stream(events.select("user_id", "ts", "event_id"))
-        return run_bounded(
-            spark,
-            result,
-            "sfs_stream_sessionize",
-            partitions=python_state_partitions(spark),
-        )
+        return run_bounded(spark, result, "sfs_stream_sessionize")

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from ..io import run_bounded, staged_stream
 from ..numerics import sql_wsum
 from ..plans.registry import query
-from ..session import python_state_partitions, stream_partitions  # noqa: F401 (re-exported)
+from ..session import stream_partitions  # noqa: F401 (re-exported)
 
 # ---------------------------------------------------------------------------
 # Callable registry — the in-process replacement for the AWS Lambda hop.
@@ -263,13 +263,7 @@ def run_stateful_stream(
     per-key state lifetime (see apply_stateful); ``latency`` records
     the per-invoke histogram (see metrics.InvokeLatency)."""
     result = apply_stateful(events, operator_name, ttl_ms=ttl_ms, latency=latency)
-    return run_bounded(
-        spark,
-        result,
-        query_name,
-        partitions=python_state_partitions(spark),
-        checkpoint_dir=checkpoint_dir,
-    )
+    return run_bounded(spark, result, query_name, checkpoint_dir=checkpoint_dir)
 
 
 @query(
@@ -421,9 +415,7 @@ def q_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = apply_scd2_stream(
             events.select("user_id", "event_type", "ts", "event_id")
         )
-        return run_bounded(
-            spark, result, "sfs_scd2_stream", partitions=python_state_partitions(spark)
-        )
+        return run_bounded(spark, result, "sfs_scd2_stream")
 
 
 # ---------------------------------------------------------------------------
@@ -517,9 +509,7 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = apply_ewma_stream(
             events.select("user_id", "ts", "event_id", "value")
         )
-        summaries = run_bounded(
-            spark, result, "sfs_stream_ewma", partitions=python_state_partitions(spark)
-        )
+        summaries = run_bounded(spark, result, "sfs_stream_ewma")
     latest = Window.partitionBy("user_id").orderBy(
         F.desc("last_ts"), F.desc("last_event_id")
     )
@@ -766,9 +756,7 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = apply_anomaly_stream(
             events.select("user_id", "ts", "event_id", "value")
         )
-        return run_bounded(
-            spark, result, "sfs_stream_anomaly", partitions=python_state_partitions(spark)
-        )
+        return run_bounded(spark, result, "sfs_stream_anomaly")
 
 
 # ---------------------------------------------------------------------------
@@ -885,12 +873,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         ops = events.filter(F.col("event_type").isin("purchase", "error")).select(
             "user_id", "ts", "event_id", "event_type", "value"
         )
-        rows = run_bounded(
-            spark,
-            apply_cdc_stream(ops),
-            "sfs_stream_cdc_apply",
-            partitions=python_state_partitions(spark),
-        )
+        rows = run_bounded(spark, apply_cdc_stream(ops), "sfs_stream_cdc_apply")
     latest = Window.partitionBy("user_id").orderBy(F.desc("n_applied"))
     return (
         rows

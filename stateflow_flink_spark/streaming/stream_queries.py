@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ..io import load, run_bounded, scratch_dir, staged_stream
 from ..plans.registry import query
-from ..session import stream_partitions
+from ..session import conf_scope, stream_partitions
 
 
 @query(
@@ -241,13 +241,8 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the default — its outer rows are emitted BY that no-data batch.
         # An unbounded deployment leaves the default on; state eviction
         # there rides later data batches anyway.
-        _NDMB = "spark.sql.streaming.noDataMicroBatches.enabled"
-        saved = spark.conf.get(_NDMB)
-        try:
-            spark.conf.set(_NDMB, "false")
+        with conf_scope(spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}):
             return run_bounded(spark, joined, "sfs_stream_stream_join")
-        finally:
-            spark.conf.set(_NDMB, saved)
 
 
 

@@ -1,6 +1,6 @@
 """Round-14 gates: the sf1-driven restructures (simhash distinct-sig
-probe + emit-once, tfidf distinct-text scoring), the scale-adaptive
-streaming knobs, and exchange/scan ceilings for the four r13 pins the
+probe + emit-once, tfidf distinct-text scoring), the derived streaming
+state partitions, and exchange/scan ceilings for the four r13 pins the
 r13 judge asked to be gated (VERDICT item 8).
 
 Ceilings are measured initial-plan counts at SF_SMOKE plus ~20% slack
@@ -128,49 +128,31 @@ def test_tfidf_scores_distinct_texts(spark):
     assert "InMemoryTableScan" in plan, "postings/group caches missing"
 
 
-def test_stream_partition_split_jvm_vs_python_stateful(spark):
-    """r14 sweep: JVM stateful ops are store-commit-bound (keep the low
-    default), Python-stateful ops are worker-bound (one partition per
-    core, scale-adaptive per guide §2).  Gate both halves + the env
-    override + restore."""
-    from stateflow_flink_spark.session import (
-        python_state_partitions,
-        stream_partitions,
-    )
+def test_stream_state_partitions_follow_default_parallelism(spark):
+    """One state-partition rule: every bounded streaming query's state
+    operators run with ``defaultParallelism`` partitions, whether the
+    state is Python (the user-keyed fold, the 5-key HLL) or the JVM
+    (the stream-stream join), and the batch shuffle setting is back
+    afterwards."""
+    from stateflow_flink_spark.plans.registry import run_query
 
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    with stream_partitions(spark):  # JVM family default
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == saved
-    # Python-stateful family scales with the session
-    assert str(python_state_partitions(spark)) == str(
-        spark.sparkContext.defaultParallelism
-    )
-    with stream_partitions(spark, python_state_partitions(spark)):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-            spark.sparkContext.defaultParallelism
-        )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == saved
-    # every user-keyed apws runner passes the python knob; the 3-group
-    # HLL and every JVM-stateful runner keep the default
-    import inspect
+    from .test_wire_loop import QueryEvents
 
-    from stateflow_flink_spark.streaming import (
-        cep,
-        sessionization,
-        state,
-        stream_queries,
-    )
-
-    for fn in (state.run_stateful_stream, state.q_scd2_stream,
-               state.q_stream_ewma, state.q_stream_anomaly,
-               state.q_stream_cdc_apply, sessionization.q_stream_sessionize,
-               cep.q_stream_cep):
-        assert "python_state_partitions" in inspect.getsource(fn), fn
-    for fn in (state.q_stream_hll, stream_queries.q_stream_watermark,
-               stream_queries.q_stream_stream_join,
-               stream_queries.q_stream_stream_left):
-        assert "python_state_partitions" not in inspect.getsource(fn), fn
+    batch = spark.conf.get("spark.sql.shuffle.partitions")
+    names = ("q_stateful_fold_stream", "q_stream_hll", "q_stream_stream_join")
+    seen = {}
+    for name in names:
+        with QueryEvents(spark) as events:
+            run_query(spark, name, SF_SMOKE, lambda df: df.count())
+        seen[name] = {
+            op.numShufflePartitions
+            for p in events.progress
+            for op in p.stateOperators
+        }
+    assert seen == {
+        name: {spark.sparkContext.defaultParallelism} for name in names
+    }
+    assert spark.conf.get("spark.sql.shuffle.partitions") == batch
 
 
 def test_minhash_state_buckets_scale_derived(spark):
@@ -194,8 +176,14 @@ def test_stream_stream_inner_join_skips_cleanup_batch_left_keeps_it(spark):
 
     src_inner = inspect.getsource(sq.q_stream_stream_join)
     src_left = inspect.getsource(sq.q_stream_stream_left)
-    assert "noDataMicroBatches" in src_inner and "finally" in src_inner
+    assert "noDataMicroBatches" in src_inner and "conf_scope" in src_inner
     assert "noDataMicroBatches" not in src_left, (
         "the left join must never disable the no-data batch: outer rows "
         "are emitted by it"
     )
+    from stateflow_flink_spark.plans.registry import run_query
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key, None)
+    run_query(spark, "q_stream_stream_join", SF_SMOKE, lambda df: df.count())
+    assert spark.conf.get(key, None) == before

@@ -28,7 +28,6 @@ from stateflow_flink_spark.sources.kafka import (
     encode_frames,
 )
 from stateflow_flink_spark.streaming.feedback import (
-    invoked_advance,
     make_flow_requests,
     run_event_loop,
 )
@@ -313,7 +312,7 @@ def test_wire_loop_answers_flows_in_the_ingesting_batch(spark, tmp_path):
 
 
 def test_event_loop_populates_invoke_latency_histogram(spark, tmp_path):
-    """With ``advance=invoked_advance(lat)`` every hop of the live cycle
+    """With ``advance=lat.timed_stateless(hop)`` every hop of the live cycle
     runs as a per-event invoked call and lands one histogram sample:
     after the drain the driver-side snapshot holds EXACTLY one sample
     per hop (the sum of steps over the seeds), mean/max are sane, and
@@ -334,7 +333,7 @@ def test_event_loop_populates_invoke_latency_histogram(spark, tmp_path):
         spark,
         DirectoryTransport(str(tmp_path)),
         make_flow_requests(spark, flows),
-        advance=invoked_advance(lat),
+        advance=lat.timed_stateless(hop),
         timeout_s=90.0,
     )
     rows = replies.collect()
