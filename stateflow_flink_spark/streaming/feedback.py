@@ -11,16 +11,17 @@ sharing the feedback topic; the topic itself remains the cycle's
 buffer, exactly as in the reference.
 
 :func:`run_event_loop` is that cycle at the wire level: every topic byte
-is a framed Event proto, every read crosses ``decode_frames``, every
-route crosses ``streaming.routing`` — through the transport seam
+is a framed Event proto, through the transport seam
 (``streaming/transport.py``), so the identical code path runs on
 directory-topics in-sandbox and ``format("kafka")`` in production.
-Both queries run one batch function, as the reference's one job runs
-every event through ``IngressRouter``, the invoke and ``EgressRouter``.
-The invoke is the reference's per-event contract: ``advance`` is called
-once per event per hop, inside one ``flow.hop_flows`` stage over the
-whole micro-batch, so a batch runs the same number of Spark jobs
-whatever its flows' hop count, and only flows past
+Both queries read their topic's raw Kafka records and run one batch
+function, as the reference's one chained task runs every event through
+``Event.parseFrom``, ``IngressRouter``, the invoke, ``EgressRouter`` and
+``toByteString``: ``flow.hop_frames`` does all five per record in one
+``mapInPandas`` stage over the whole micro-batch, so a batch crosses
+into Python once. The invoke is the reference's per-event contract:
+``advance`` is called once per event per hop, so a batch runs the same
+number of Spark jobs whatever its flows' hop count, and only flows past
 ``flow.MAX_FLOW_STEPS`` hops cross the feedback edge.
 
 Termination is the driver's concern (the reference's job runs forever;
@@ -39,7 +40,6 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import CLIENT, EGRESS, EVENT_ENVELOPE, INTERNAL
 from ..sources.kafka import (
     TOPIC_CLIENT_REPLY,
     TOPIC_CLIENT_REQUEST,
@@ -47,8 +47,7 @@ from ..sources.kafka import (
     decode_frames,
     encode_frames,
 )
-from .flow import hop, hop_flows
-from .routing import route_egress, route_ingress
+from .flow import hop, hop_frames
 
 
 def make_flow_requests(spark: SparkSession, flows: DataFrame) -> DataFrame:
@@ -97,12 +96,14 @@ def run_event_loop(
 
       client --encode_frames--> client_request
       query A (client_request) and query B (internal), one batch function:
-        decode_frames -> route_ingress
-          EGRESS   -> stamp out_reply, pass through     (R3 ingress)
-          INTERNAL -> one hop stage: advance each event
-                      while it is mid-flow, up to
-                      MAX_FLOW_STEPS hops               (R4+R11)
-        -> route_egress -> localCheckpoint, the batch's one checkpoint
+        hop_frames, one Python pass per record:
+          decode_event -> routing.ingress
+            ERROR    -> dropped, as is a NULL value        (R2+R3)
+            EGRESS   -> stamp the reply, pass through      (R3 ingress)
+            INTERNAL -> advance the event while it is
+                        mid-flow, up to MAX_FLOW_STEPS hops (R4+R11)
+          -> routing.egress_topic -> encode_event
+        -> localCheckpoint, the batch's one checkpoint
         -> client_reply, one append per batch; internal (the feedback
            edge), only flows still mid-flow after the bound   (R13)
 
@@ -121,59 +122,29 @@ def run_event_loop(
     # Seed: the client produces proto-framed requests to client_request.
     transport.append(encode_frames(seed, TOPIC_CLIENT_REQUEST), TOPIC_CLIENT_REQUEST)
 
-    env_cols = EVENT_ENVELOPE.fieldNames()
-    is_egress = F.col("direction") == EGRESS
-    is_client = F.col("direction") == CLIENT
-    is_internal = F.col("direction") == INTERNAL
+    out_topics = (TOPIC_CLIENT_REPLY, TOPIC_INTERNAL)
 
     def loop_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Ping / already-finished flows answer the client directly
-        # (IngressRouter.java:42-52, :79-90): stamp out_reply into the
-        # oneof, so the hop stage passes them through. ERROR rows (not
-        # requests) are dropped, as the ingress router rejects them.
-        events = (
-            batch_df.filter(is_egress | is_internal)
-            .withColumns(
-                {
-                    "reply": F.when(is_egress, F.col("out_reply")).otherwise(
-                        F.col("reply")
-                    ),
-                    "request": F.when(is_egress, F.lit(None)).otherwise(
-                        F.col("request")
-                    ),
-                }
-            )
-            .select(*env_cols)
-        )
         sizes = Observation()
-        routed = (
-            route_egress(hop_flows(events, advance))
+        frames = (
+            hop_frames(batch_df, advance)
             .observe(
-                sizes,
-                F.count_if(is_client).alias(CLIENT),
-                F.count_if(is_internal).alias(INTERNAL),
+                sizes, *[F.count_if(F.col("topic") == t).alias(t) for t in out_topics]
             )
             .localCheckpoint()
         )
         counts = sizes.get
-        if counts[CLIENT]:
-            transport.append(
-                encode_frames(routed.filter(is_client), TOPIC_CLIENT_REPLY),
-                TOPIC_CLIENT_REPLY,
-            )
-        if counts[INTERNAL]:
-            # THE FEEDBACK EDGE: flows still mid-flow after the bound go
-            # back into query B's source topic
-            # (StateFlowFlinkJob.java:127-132).
-            transport.append(
-                encode_frames(routed.filter(is_internal), TOPIC_INTERNAL),
-                TOPIC_INTERNAL,
-            )
+        # One append per non-empty topic: the replies, then THE FEEDBACK
+        # EDGE, flows still mid-flow after the bound going back into
+        # query B's source topic (StateFlowFlinkJob.java:127-132).
+        for topic in out_topics:
+            if counts[topic]:
+                transport.append(frames.filter(F.col("topic") == topic), topic)
 
     # One query per source topic, both running loop_batch: query A
     # ingests client_request, query B the feedback edge.
     queries = [
-        route_ingress(decode_frames(transport.read_stream(spark, topic)))
+        transport.read_stream(spark, topic)
         .writeStream.foreachBatch(loop_batch)
         .option("checkpointLocation", os.path.join(base, name))
         .trigger(processingTime=trigger_s)

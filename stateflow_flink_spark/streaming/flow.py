@@ -7,19 +7,22 @@ The reference iterates by producing mid-flow events back to the
 the cursor reaches ``"RETURN"`` (``IngressRouter.java:79``).  Each hop
 is one function call per event (``InvokeStatefulLambda.java:103-115``).
 
-A hop is therefore row-local, and :func:`hop_flows` runs every hop of
-every row in ONE ``mapInPandas`` stage: ``advance(event) -> event`` is
-called once per event per hop while the event is still mid-flow
-(``routing.mid_flow``, the egress router's INTERNAL rule), up to
-``MAX_FLOW_STEPS`` hops; every other row passes through unchanged.
-Structured Streaming cannot express the cycle inside one query (SURVEY.md
-§3.3); both mappings of it hop through this one stage:
+A hop is therefore row-local. :func:`run_flow` is the one hop loop:
+``advance(event) -> event`` is called once per event per hop while the
+event is still mid-flow (``routing.mid_flow``, the egress router's
+INTERNAL rule), up to ``MAX_FLOW_STEPS`` hops. Structured Streaming
+cannot express the cycle inside one query (SURVEY.md §3.3); both
+mappings of it run this loop inside one ``mapInPandas`` stage:
 
-  * production: the two streaming queries sharing ``internal``
-    (streaming/feedback.py) hop each micro-batch's flows in it, and only
+  * production: :func:`hop_frames` is the reference's chained task on
+    each micro-batch of the two streaming queries sharing ``internal``
+    (streaming/feedback.py): per Kafka record it decodes the Event,
+    applies the ingress rule, hops, applies the egress rule and encodes
+    the frame for its topic, so a batch crosses into Python once. Only
     flows still mid-flow after the bound cross the feedback edge;
-  * bounded/batch: ``q_flow_iterate`` hops a fixture's flows in it, and
-    a flow still mid-flow after the bound is an error.
+  * bounded/batch: ``q_flow_iterate`` hops a fixture's flows with
+    :func:`hop_flows` over decoded columns, and a flow still mid-flow
+    after the bound is an error.
 """
 
 from __future__ import annotations
@@ -29,12 +32,13 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from ..io import load
 from ..plans.registry import query
 from ..schemas import INTERNAL
-from .routing import RETURN_NODE, mid_flow, route_egress
+from ..sources.proto import decode_event, encode_event
+from .routing import RETURN_NODE, egress_topic, ingress, mid_flow, route_egress
 
 MAX_FLOW_STEPS = 64  # safety bound, like any production feedback loop
 
@@ -56,9 +60,29 @@ def hop(event: dict) -> dict:
     }
 
 
+# Kafka (key, value, topic) frames, as a transport appends them.
+FRAME = StructType(
+    [
+        StructField("key", BinaryType()),
+        StructField("value", BinaryType()),
+        StructField("topic", StringType()),
+    ]
+)
+
+
+def run_flow(event: dict, advance: Callable[[dict], dict]) -> dict:
+    """Hop one event until it leaves the flow or has taken
+    ``MAX_FLOW_STEPS`` hops; an event not mid-flow is returned as is."""
+    for _ in range(MAX_FLOW_STEPS):
+        if not mid_flow(event):
+            break
+        event = advance(event)
+    return event
+
+
 def hop_flows(events: DataFrame, advance: Callable[[dict], dict]) -> DataFrame:
-    """Hop every mid-flow row of ``events`` until it leaves the flow or
-    has taken ``MAX_FLOW_STEPS`` hops, in one stage with no action.
+    """:func:`run_flow` on every row of ``events``, in one stage with no
+    action.
 
     ``events`` needs ``request`` and ``reply`` (the mid-flow test) plus
     whatever ``advance`` reads; the result has the same columns, each
@@ -68,16 +92,42 @@ def hop_flows(events: DataFrame, advance: Callable[[dict], dict]) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for event in pdf.to_dict("records"):
-                for _ in range(MAX_FLOW_STEPS):
-                    if not mid_flow(event):
-                        break
-                    event = advance(event)
-                out.append(event)
+            out = [run_flow(event, advance) for event in pdf.to_dict("records")]
             yield pd.DataFrame(out, columns=cols)
 
     return events.mapInPandas(run, schema)
+
+
+def hop_frames(frames: DataFrame, advance: Callable[[dict], dict]) -> DataFrame:
+    """Kafka records -> the :data:`FRAME` rows they produce, in one
+    ``mapInPandas`` stage with no action.
+
+    Per record, the reference's chained task: ``decode_event``
+    (KafkaDeserializeProto.java:11-13), ``routing.ingress``,
+    :func:`run_flow`, ``routing.egress_topic``, then ``encode_event``
+    keyed by the event_id's UTF-8 bytes (KafkaSerializeProto.java:24-30).
+    A NULL value (a Kafka tombstone) and an event either router rejects
+    produce no frame."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            keys, values, topics = [], [], []
+            for value in pdf["value"]:
+                if value is None:
+                    continue
+                event = ingress(decode_event(bytes(value)))
+                if event is None:
+                    continue
+                event = run_flow(event, advance)
+                topic = egress_topic(event)
+                if topic is None:
+                    continue
+                keys.append(event["event_id"].encode("utf-8"))
+                values.append(encode_event(event))
+                topics.append(topic)
+            yield pd.DataFrame({"key": keys, "value": values, "topic": topics})
+
+    return frames.select("value").mapInPandas(run, FRAME)
 
 
 @query(

@@ -1,11 +1,22 @@
-"""Content-based routing — IngressRouter / EgressRouter as projections.
+"""Content-based routing — IngressRouter / EgressRouter, per event and
+as projections.
 
 The reference routes row-at-a-time in ``ProcessFunction``s with side
 outputs (``IngressRouter.java:17-71``, ``EgressRouter.java:15-63``).
-The Spark-native equivalent: routing is a pure PROJECTION (a when-chain
-computing direction/route_name/route_key columns), and "side outputs"
-are N filtered views over the single routed stream — Catalyst collapses
-each filter into the scan, so fan-out costs one pass, not N.
+Each decision table is spelled twice here, and ``tests/test_routing.py``
+pins the two spellings equal:
+
+  * per event — :func:`ingress`, :func:`egress_topic` and
+    :func:`mid_flow` on one flat EVENT_ENVELOPE dict. This is what the
+    event loop runs: ``flow.hop_frames`` routes each decoded frame in
+    the same Python pass that hops and re-encodes it;
+  * as Column projections — :func:`route_ingress` / :func:`route_egress`,
+    a when-chain computing direction/route_name/route_key columns, with
+    "side outputs" as N filtered views over the single routed stream
+    (Catalyst collapses each filter into the scan, so fan-out costs one
+    pass, not N). These are the reference the per-event forms are
+    tested against; ``q_flow_iterate`` routes its hopped flows with
+    :func:`route_egress`.
 
 Decision tables implemented 1:1:
 
@@ -31,6 +42,7 @@ from pyspark.sql import functions as F
 from ..io import load
 from ..plans.registry import query
 from ..schemas import CLIENT, EGRESS, INTERNAL
+from ..sources.kafka import TOPIC_CLIENT_REPLY, TOPIC_INTERNAL
 
 ERROR = "ERROR"
 RETURN_NODE = "RETURN"
@@ -88,15 +100,42 @@ def route_egress(events: DataFrame) -> DataFrame:
     is_flow = F.col("request") == "EventFlow"
     direction = F.when(is_reply, CLIENT).when(is_flow, INTERNAL).otherwise(ERROR)
     route_name = (
-        F.when(is_reply, "client_reply").when(is_flow, "internal").otherwise(None)
+        F.when(is_reply, TOPIC_CLIENT_REPLY)
+        .when(is_flow, TOPIC_INTERNAL)
+        .otherwise(None)
     )
     return events.withColumns({"direction": direction, "route_name": route_name})
+
+
+def ingress(event: dict) -> dict | None:
+    """:func:`route_ingress` on one event: None for ERROR (not a
+    request); a Ping or a flow at RETURN answers the client, its reply
+    stamped and its request cleared (EGRESS); every other event passes
+    through unchanged (INTERNAL)."""
+    request = event["request"]
+    if request is None:
+        return None
+    if request == "Ping":
+        return {**event, "reply": "Pong", "request": None}
+    if request == "EventFlow" and event["current_node_type"] == RETURN_NODE:
+        return {**event, "reply": "SuccessfulInvocation", "request": None}
+    return event
 
 
 def mid_flow(event: dict) -> bool:
     """:func:`route_egress`'s INTERNAL rule on one event: no reply yet
     and still an EventFlow request, so the flow needs another hop."""
     return event["reply"] is None and event["request"] == "EventFlow"
+
+
+def egress_topic(event: dict) -> str | None:
+    """:func:`route_egress` on one event: the topic it goes to, or None
+    for ERROR (neither a reply nor a flow request)."""
+    if event["reply"] is not None:
+        return TOPIC_CLIENT_REPLY
+    if mid_flow(event):
+        return TOPIC_INTERNAL
+    return None
 
 
 def side_output(routed: DataFrame, route_name: str) -> DataFrame:

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from stateflow_flink_spark.schemas import EVENT_ENVELOPE, REPLIES, REQUESTS
 from stateflow_flink_spark.streaming.routing import (
     ERROR,
+    egress_topic,
+    ingress,
     route_egress,
     route_ingress,
     side_output,
@@ -159,3 +161,35 @@ def test_egress_decision_table(spark, envelope_df):
         routed.filter(F.col("direction") == ERROR).count()
         == envelope_df.count() - n_reply - n_flow
     )
+
+
+def test_per_event_routers_match_the_projections(spark, envelope_df):
+    """The per-event routers the event loop runs (``ingress``,
+    ``egress_topic``) and the Column projections are one decision table
+    each: on every row, ERROR <=> None, EGRESS <=> the reply stamped
+    from ``out_reply`` with the request cleared, and CLIENT / INTERNAL
+    <=> the ``client_reply`` / ``internal`` topic."""
+    cols = EVENT_ENVELOPE.fieldNames()
+    rows = route_egress(
+        route_ingress(envelope_df).withColumnsRenamed(
+            {"direction": "in_direction", "route_name": "in_route_name"}
+        )
+    ).collect()
+    assert len(rows) == 500
+    seen = set()
+    for r in rows:
+        event = {c: r[c] for c in cols}
+        routed = ingress(event)
+        assert (routed is None) == (r.in_direction == ERROR), r
+        if r.in_direction == "EGRESS":
+            assert routed == {**event, "reply": r.out_reply, "request": None}, r
+        elif r.in_direction == "INTERNAL":
+            assert routed == event, r
+        assert egress_topic(event) == {
+            "CLIENT": "client_reply",
+            "INTERNAL": "internal",
+        }.get(r.direction), r
+        seen.add((r.in_direction, r.direction))
+    # every ingress outcome and every egress outcome occurs
+    assert {d for d, _ in seen} == {"EGRESS", "INTERNAL", ERROR}
+    assert {d for _, d in seen} == {"CLIENT", "INTERNAL", ERROR}

@@ -3,8 +3,8 @@ the transport seam (streaming/transport.py + feedback.run_event_loop).
 
 Every byte crossing a topic in these tests is an Event proto framed
 exactly like the reference producer (key = event_id UTF-8, value =
-Event bytes — KafkaSerializeProto.java:24-30); every read goes through
-sources.kafka.decode_frames, every route through streaming.routing.
+Event bytes — KafkaSerializeProto.java:24-30); every loop batch decodes,
+routes, hops and re-encodes its records in one flow.hop_frames pass.
 Swapping DirectoryTransport for KafkaTransport changes no loop code —
 that substitution is what test_kafka_transport_format_wiring pins.
 """
@@ -27,11 +27,12 @@ from stateflow_flink_spark.sources.kafka import (
     decode_frames,
     encode_frames,
 )
+from stateflow_flink_spark.sources.proto import decode_event, encode_event
 from stateflow_flink_spark.streaming.feedback import (
     make_flow_requests,
     run_event_loop,
 )
-from stateflow_flink_spark.streaming.flow import MAX_FLOW_STEPS, hop
+from stateflow_flink_spark.streaming.flow import MAX_FLOW_STEPS, hop, hop_frames
 from stateflow_flink_spark.streaming.transport import (
     DirectoryTransport,
     KafkaTransport,
@@ -76,6 +77,11 @@ def test_wire_loop_drains_every_flow_exactly_once(spark, tmp_path):
     assert [bytes(k).decode() for (k,) in internal.select("key").collect()] == [
         str(long_id)
     ]
+    reply_frames = transport.read_batch(spark, TOPIC_CLIENT_REPLY).collect()
+    assert all(
+        bytes(f.key) == decode_event(bytes(f.value))["event_id"].encode("utf-8")
+        for f in reply_frames
+    )
 
 
 def _pings(spark, n: int):
@@ -120,6 +126,62 @@ def test_wire_loop_ping_answered_from_ingress(spark, tmp_path):
         "ping-1": "Pong",
     }
     assert transport.read_batch(spark, "internal").count() == 0
+
+
+def test_wire_loop_drops_what_ingress_rejects(spark, tmp_path):
+    """A Reply-only Event frame (not a request) and a record with a NULL
+    value (a Kafka tombstone) next to the seed's flows yield no reply
+    and no ``internal`` frame; every seeded flow still gets exactly one
+    reply."""
+    stray = spark.createDataFrame(
+        [
+            (b"stray-reply", encode_event(
+                {"event_id": "stray-reply", "reply": "SuccessfulInvocation"}
+            )),
+            (b"tombstone", None),
+        ],
+        "key binary, value binary",
+    )
+    transport = DirectoryTransport(str(tmp_path))
+    transport.append(stray, TOPIC_CLIENT_REQUEST)
+    flows = spark.range(5).select(
+        F.col("id").alias("event_id"), (F.col("id") % 3 + 1).alias("steps_left")
+    )
+    replies = run_event_loop(
+        spark, transport, make_flow_requests(spark, flows), timeout_s=90.0
+    )
+    got = Counter(r.event_id for r in replies.collect())
+    assert got == Counter(str(i) for i in range(5))
+    assert transport.read_batch(spark, "internal").count() == 0
+
+
+def test_hop_frames_is_one_python_pass(spark):
+    """Decode, both routers, the hops and encode run in one
+    ``mapInPandas``: no pandas or Python UDF may come back into the
+    plan, which is the batch's only crossing into Python."""
+    frames = spark.createDataFrame(
+        [
+            (str(i).encode("utf-8"), encode_event({
+                "event_id": str(i),
+                "request": "EventFlow",
+                "current_fun_key": "2",
+                "current_node_type": "step",
+            }))
+            for i in range(4)
+        ],
+        "key binary, value binary",
+    )
+    hopped = hop_frames(frames, hop)
+    plan = hopped._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    got = hopped.collect()
+    assert {(bytes(f.key), f.topic) for f in got} == {
+        (str(i).encode("utf-8"), TOPIC_CLIENT_REPLY) for i in range(4)
+    }
+    assert {decode_event(bytes(f.value))["reply"] for f in got} == {
+        "SuccessfulInvocation"
+    }
 
 
 class QueryEvents:
