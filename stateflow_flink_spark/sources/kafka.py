@@ -21,15 +21,19 @@ Everything that needs a live broker is isolated behind ``.load()`` on
 a reader returned unloaded, and behind ``streaming.transport``'s
 ``KafkaTransport`` (the ``spark-sql-kafka`` package resolves them on a
 real cluster; it is absent in this sandbox).
-The framing projections — encode/decode and key derivation — are
-plain DataFrame transforms over the public Kafka record schema and
-are unit-tested broker-free on static frames.
+The framing stages — :func:`encode_frames` and :func:`decode_frames` —
+are each one ``mapInPandas`` stage calling the proto3 codec of
+:mod:`.proto` per record, the shape ``flow.hop_frames`` has, over the
+public Kafka record schema; they are unit-tested broker-free on static
+frames.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamReader
 from pyspark.sql.types import (
     BinaryType,
@@ -41,7 +45,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .proto import envelope_struct, from_proto, to_proto
+from ..schemas import EVENT_ENVELOPE
+from .proto import decode_event, encode_event
 
 TOPIC_INTERNAL = "internal"
 TOPIC_CLIENT_REQUEST = "client_request"
@@ -62,6 +67,18 @@ KAFKA_RECORD = StructType(
         StructField("timestampType", IntegerType()),
     ]
 )
+
+# Kafka (key, value, topic) frames, as a transport appends them.
+FRAME = StructType(
+    [
+        StructField("key", BinaryType()),
+        StructField("value", BinaryType()),
+        StructField("topic", StringType()),
+    ]
+)
+
+_ENVELOPE_COLS = [f.name for f in EVENT_ENVELOPE.fields]
+_SOURCE_COLS = ("topic", "partition", "offset")
 
 
 # ---------------------------------------------------------------------------
@@ -95,27 +112,59 @@ def kafka_reader(
 # ---------------------------------------------------------------------------
 
 
+def frame_batch(events: Iterable[tuple[dict, str]]) -> pd.DataFrame:
+    """``(event, topic)`` pairs -> one batch of :data:`FRAME` rows: key =
+    the event_id's UTF-8 bytes (NULL for a NULL event_id), value =
+    ``encode_event`` — the producer framing of
+    ``KafkaSerializeProto.java:24-30``."""
+    rows = [
+        (
+            None if event["event_id"] is None else event["event_id"].encode("utf-8"),
+            encode_event(event),
+            topic,
+        )
+        for event, topic in events
+    ]
+    return pd.DataFrame(rows, columns=FRAME.fieldNames())
+
+
 def decode_frames(raw: DataFrame) -> DataFrame:
-    """Kafka records -> flat EVENT_ENVELOPE columns + source metadata.
+    """Kafka records -> flat EVENT_ENVELOPE columns + the source metadata
+    ``raw`` carries (``topic``, ``partition``, ``offset``), in one
+    ``mapInPandas`` stage.
 
     Value-only deserialization like the reference
     (``setValueOnlyDeserializer``, StateFlowFlinkJob.java:53): the key
     is transport framing, not payload — event identity rides inside the
-    proto.  Decode is the Arrow-batched proto3 codec of
-    :mod:`.proto`."""
-    return raw.select(
-        from_proto(F.col("value")).alias("e"), "topic", "partition", "offset"
-    ).select("e.*", "topic", "partition", "offset")
+    proto.  Each value is ``decode_event``-ed (``Event.parseFrom``,
+    KafkaDeserializeProto.java:11-13); a NULL value (a Kafka tombstone)
+    decodes to an all-NULL envelope row."""
+    meta = [c for c in _SOURCE_COLS if c in raw.columns]
+    schema = StructType(
+        EVENT_ENVELOPE.fields + [StructField(c, raw.schema[c].dataType) for c in meta]
+    )
+    blank = dict.fromkeys(_ENVELOPE_COLS)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = pd.DataFrame(
+                [blank if v is None else decode_event(bytes(v)) for v in pdf["value"]],
+                columns=_ENVELOPE_COLS,
+            )
+            for c in meta:
+                out[c] = pdf[c].to_numpy()
+            yield out
+
+    return raw.select("value", *meta).mapInPandas(run, schema)
 
 
 def encode_frames(events: DataFrame, topic: str) -> DataFrame:
-    """Flat EVENT_ENVELOPE columns -> Kafka (key, value, topic) rows.
+    """Flat EVENT_ENVELOPE columns (selected by name) -> Kafka
+    :data:`FRAME` rows for ``topic``, in one ``mapInPandas`` stage, framed
+    by :func:`frame_batch`."""
 
-    key = UTF-8 bytes of event_id, value = Event proto bytes — the exact
-    producer framing of ``KafkaSerializeProto.java:24-30``."""
-    return events.select(
-        F.encode(F.col("event_id"), "utf-8").alias("key"),
-        to_proto(envelope_struct()).alias("value"),
-        F.lit(topic).alias("topic"),
-    )
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield frame_batch((event, topic) for event in pdf.to_dict("records"))
 
+    return events.select(*_ENVELOPE_COLS).mapInPandas(run, FRAME)

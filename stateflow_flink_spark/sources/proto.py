@@ -8,18 +8,19 @@ out, with the message shapes in ``event.proto:49-58`` (Event),
 ``:77-81`` (EventRequestReply, the lambda-invocation envelope).
 
 This container has neither ``protoc`` nor the ``google.protobuf``
-runtime, and Spark's ``from_protobuf``/``to_protobuf`` need a compiled
-descriptor set — so the codec below implements the (public, stable)
+runtime, and Spark's protobuf functions (``pyspark.sql.protobuf``) need a
+compiled descriptor set — so the codec below implements the (public, stable)
 proto3 wire format directly: varints, tag = (field_number << 3) | wire
 type, length-delimited submessages.  That is ~100 lines for the four
 message shapes, gives bytes→Event→bytes identity against any conformant
 proto3 serializer that writes fields in field-number order (protobuf-java
 does), and needs no codegen.
 
-Spark surface: Arrow-batched pandas UDFs (`from_proto` / `to_proto`)
-mapping ``binary`` ⇄ the flat ``EVENT_ENVELOPE`` struct — the decode
-runs once per Kafka record batch, vectorized at the batch level, exactly
-where a ``from_protobuf`` call would sit in the plan.
+Spark surface: none here.  ``sources.kafka.encode_frames`` /
+``decode_frames`` and ``streaming.flow.hop_frames`` call
+:func:`encode_event` / :func:`decode_event` per record inside one
+``mapInPandas`` stage each, where Spark's protobuf functions would
+sit in the plan.
 
 Canonical flat-envelope conventions (proto3 semantics):
   * absent scalar fields decode to proto3 defaults ("" / False / b"");
@@ -33,16 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType
-
-from ..schemas import EVENT_ENVELOPE, REPLIES, REQUESTS
-
-_ENVELOPE_COLS = tuple(f.name for f in EVENT_ENVELOPE.fields)
+from ..schemas import REPLIES, REQUESTS
 
 # wire types (proto3 encoding spec)
 _VARINT = 0
@@ -266,44 +258,3 @@ def decode_event_request_reply(buf: bytes) -> tuple[dict | None, bytes, str]:
             operator_name = val.decode("utf-8")
     return event, state, operator_name
 
-
-# ---------------------------------------------------------------------------
-# Spark surface — Arrow-batched codec UDFs
-# ---------------------------------------------------------------------------
-
-
-@pandas_udf(BinaryType())
-def _to_proto(rows: pd.DataFrame) -> pd.Series:
-    return pd.Series(
-        [encode_event(r) for r in rows.to_dict("records")], dtype=object
-    )
-
-
-@pandas_udf(EVENT_ENVELOPE)
-def _from_proto(vals: pd.Series) -> pd.DataFrame:
-    out = [
-        decode_event(bytes(v)) if v is not None else dict.fromkeys(_ENVELOPE_COLS)
-        for v in vals
-    ]
-    return pd.DataFrame(out, columns=list(_ENVELOPE_COLS))
-
-
-def to_proto(envelope: Column) -> Column:
-    """``struct<EVENT_ENVELOPE>`` column -> proto ``binary`` column —
-    the engine-side twin of ``event.toByteString()``
-    (KafkaSerializeProto.java:29)."""
-    return _to_proto(envelope)
-
-
-def from_proto(value: Column) -> Column:
-    """proto ``binary`` column -> ``struct<EVENT_ENVELOPE>`` column —
-    the engine-side twin of ``Event.parseFrom``
-    (KafkaDeserializeProto.java:11-13).  NULL bytes (Kafka tombstones)
-    decode to an all-NULL struct."""
-    return _from_proto(value)
-
-
-def envelope_struct() -> Column:
-    """The canonical struct projection over flat envelope columns, in
-    EVENT_ENVELOPE field order — use as ``to_proto(envelope_struct())``."""
-    return F.struct(*[F.col(c) for c in _ENVELOPE_COLS])

@@ -11,8 +11,10 @@ StateFlowFlinkJob.java:53 — then projected back to scalars.  The DuckDB
 oracle is the same projection STRAIGHT off the events table: any codec
 or framing defect breaks the value hash.
 
-Scale: the codec UDFs are Arrow-batched (one Python call per batch, not
-per row); encode/decode is a projection — no shuffle, rides the scan.
+Scale: both queries run the codec through the frame stages
+``encode_frames`` / ``decode_frames``, one ``mapInPandas`` stage each
+(one Python call per Arrow batch, not per row) — no shuffle, rides the
+scan.
 """
 
 from __future__ import annotations
@@ -23,7 +25,6 @@ from pyspark.sql import functions as F
 from ..io import load, spread
 from ..plans.registry import query
 from .kafka import TOPIC_CLIENT_REPLY, decode_frames, encode_frames
-from .proto import envelope_struct, from_proto, to_proto
 
 # events -> EVENT_ENVELOPE lift, shared by both queries (and their
 # oracles, which repeat the same CASE/CAST expressions in SQL).  signup
@@ -45,7 +46,7 @@ _LIFT_SQL = """
 
 
 def _lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread: the codec UDF is the expensive stage; see io.spread
+    # spread: the codec stage is the expensive one; see io.spread
     e = spread(load(spark, sf_dir, "events"), spark)
     is_signup = F.col("event_type") == "signup"
     return e.select(
@@ -84,11 +85,9 @@ def q_proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exercises encode_event/decode_event (the proto3 wire codec, ref R2 —
     Event.parseFrom / event.toByteString, KafkaDeserializeProto.java:11-13)
-    over every fixture event, including the oneof discriminator
-    (request set, reply absent) and bytes payload."""
-    env = _lift(spark, sf_dir)
-    wire = env.select(to_proto(envelope_struct()).alias("value"))
-    back = wire.select(from_proto(F.col("value")).alias("e")).select("e.*")
+    through the frame stages over every fixture event, including the
+    oneof discriminator (request set, reply absent) and bytes payload."""
+    back = decode_frames(encode_frames(_lift(spark, sf_dir), TOPIC_CLIENT_REPLY))
     return back.select(
         *_ROUNDTRIP_COLS, F.decode("payload", "utf-8").alias("props")
     )

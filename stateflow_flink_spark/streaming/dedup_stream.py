@@ -182,19 +182,6 @@ def apply_minhash_dedup_stream(docs: DataFrame) -> DataFrame:
     return keyed_fold(keyed, "skey", step, _FLAG_OUTPUT, "blob binary", order=None)
 
 
-def run_minhash_dedup_stream(
-    spark: SparkSession,
-    docs: DataFrame,
-    query_name: str = "sfs_minhash_stream",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """One bounded pass of the incremental dedup; returns the PER-BAND
-    flag table (memory sink).  ``checkpoint_dir`` resumes bucket state
-    across runs — the unbounded-ingest path the resume test exercises."""
-    flags = apply_minhash_dedup_stream(docs)
-    return run_bounded(spark, flags, query_name, checkpoint_dir=checkpoint_dir)
-
-
 def dedup_verdicts(flags: DataFrame) -> DataFrame:
     """Collapse per-band flags to the per-doc verdict: min earlier
     near-dup partner over all bands (NULL -> first-seen survivor)."""
@@ -212,5 +199,5 @@ def q_dedup_minhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics on the dedup surface) — every document flagged with its
     smallest earlier near-dup partner, or survivor."""
     with staged_stream(spark, sf_dir, "documents") as docs:
-        flags = run_minhash_dedup_stream(spark, docs)
+        flags = run_bounded(spark, apply_minhash_dedup_stream(docs), "sfs_minhash_stream")
     return dedup_verdicts(flags)

@@ -47,33 +47,9 @@ from ..sources.kafka import (
     decode_frames,
     encode_frames,
 )
-from .flow import hop, hop_frames
+from .flow import hop, hop_frames, make_flow_requests
 
-
-def make_flow_requests(spark: SparkSession, flows: DataFrame) -> DataFrame:
-    """Build EVENT_ENVELOPE EventFlow requests from ``(event_id,
-    steps_left)`` rows — the client's seed producing to client_request.
-
-    The flow cursor rides the envelope's EventFlowNode columns
-    (event.proto:44-47): ``current_fun_key`` carries the remaining-step
-    counter as a decimal string (the reference packs its flow graph into
-    the payload; a counter-in-key is this fixture's bounded stand-in),
-    ``current_node_type`` is the cursor the routers read
-    (IngressRouter.java:79-99)."""
-    return flows.select(
-        F.col("event_id").cast("string").alias("event_id"),
-        F.lit("flows").alias("fun_namespace"),
-        F.lit("flow").alias("fun_name"),
-        F.lit(True).alias("fun_stateful"),
-        F.col("event_id").cast("string").alias("fun_key"),
-        F.lit("EventFlow").alias("request"),
-        F.lit(None).cast("string").alias("reply"),
-        F.lit(b"").alias("payload"),
-        F.lit("flows").alias("current_fun_namespace"),
-        F.lit("step_fun").alias("current_fun_name"),
-        F.col("steps_left").cast("string").alias("current_fun_key"),
-        F.lit("step").alias("current_node_type"),
-    )
+TRIGGER = "250 milliseconds"  # each query's processing-time trigger
 
 
 def run_event_loop(
@@ -83,7 +59,6 @@ def run_event_loop(
     advance: Callable[[dict], dict] = hop,
     expected_replies: int | None = None,
     timeout_s: float = 120.0,
-    trigger_s: str = "250 milliseconds",
 ) -> DataFrame:
     """Run the production-shaped two-query cycle over a transport.
 
@@ -147,7 +122,7 @@ def run_event_loop(
         transport.read_stream(spark, topic)
         .writeStream.foreachBatch(loop_batch)
         .option("checkpointLocation", os.path.join(base, name))
-        .trigger(processingTime=trigger_s)
+        .trigger(processingTime=TRIGGER)
         .start()
         for name, topic in (("ck_a", TOPIC_CLIENT_REQUEST), ("ck_b", TOPIC_INTERNAL))
     ]

@@ -12,7 +12,8 @@ A hop is therefore row-local. :func:`run_flow` is the one hop loop:
 event is still mid-flow (``routing.mid_flow``, the egress router's
 INTERNAL rule), up to ``MAX_FLOW_STEPS`` hops. Structured Streaming
 cannot express the cycle inside one query (SURVEY.md §3.3); both
-mappings of it run this loop inside one ``mapInPandas`` stage:
+mappings of it run this loop inside the one ``mapInPandas`` stage
+:func:`hop_frames`:
 
   * production: :func:`hop_frames` is the reference's chained task on
     each micro-batch of the two streaming queries sharing ``internal``
@@ -20,9 +21,10 @@ mappings of it run this loop inside one ``mapInPandas`` stage:
     applies the ingress rule, hops, applies the egress rule and encodes
     the frame for its topic, so a batch crosses into Python once. Only
     flows still mid-flow after the bound cross the feedback edge;
-  * bounded/batch: ``q_flow_iterate`` hops a fixture's flows with
-    :func:`hop_flows` over decoded columns, and a flow still mid-flow
-    after the bound is an error.
+  * bounded/batch: ``q_flow_iterate`` frames a fixture's flows with
+    ``encode_frames``, hops them through the same :func:`hop_frames`
+    and decodes the frames it emits; a flow still mid-flow after the
+    bound is an error.
 """
 
 from __future__ import annotations
@@ -32,13 +34,19 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from ..io import load
 from ..plans.registry import query
-from ..schemas import INTERNAL
-from ..sources.proto import decode_event, encode_event
-from .routing import RETURN_NODE, egress_topic, ingress, mid_flow, route_egress
+from ..sources.kafka import (
+    FRAME,
+    TOPIC_CLIENT_REQUEST,
+    TOPIC_INTERNAL,
+    decode_frames,
+    encode_frames,
+    frame_batch,
+)
+from ..sources.proto import decode_event
+from .routing import RETURN_NODE, egress_topic, ingress, mid_flow
 
 MAX_FLOW_STEPS = 64  # safety bound, like any production feedback loop
 
@@ -60,14 +68,30 @@ def hop(event: dict) -> dict:
     }
 
 
-# Kafka (key, value, topic) frames, as a transport appends them.
-FRAME = StructType(
-    [
-        StructField("key", BinaryType()),
-        StructField("value", BinaryType()),
-        StructField("topic", StringType()),
-    ]
-)
+def make_flow_requests(spark: SparkSession, flows: DataFrame) -> DataFrame:
+    """Build EVENT_ENVELOPE EventFlow requests from ``(event_id,
+    steps_left)`` rows — the client's seed producing to client_request.
+
+    The flow cursor rides the envelope's EventFlowNode columns
+    (event.proto:44-47): ``current_fun_key`` carries the remaining-step
+    counter as a decimal string (the reference packs its flow graph into
+    the payload; a counter-in-key is this fixture's bounded stand-in),
+    ``current_node_type`` is the cursor the routers read
+    (IngressRouter.java:79-99)."""
+    return flows.select(
+        F.col("event_id").cast("string").alias("event_id"),
+        F.lit("flows").alias("fun_namespace"),
+        F.lit("flow").alias("fun_name"),
+        F.lit(True).alias("fun_stateful"),
+        F.col("event_id").cast("string").alias("fun_key"),
+        F.lit("EventFlow").alias("request"),
+        F.lit(None).cast("string").alias("reply"),
+        F.lit(b"").alias("payload"),
+        F.lit("flows").alias("current_fun_namespace"),
+        F.lit("step_fun").alias("current_fun_name"),
+        F.col("steps_left").cast("string").alias("current_fun_key"),
+        F.lit("step").alias("current_node_type"),
+    )
 
 
 def run_flow(event: dict, advance: Callable[[dict], dict]) -> dict:
@@ -80,52 +104,32 @@ def run_flow(event: dict, advance: Callable[[dict], dict]) -> dict:
     return event
 
 
-def hop_flows(events: DataFrame, advance: Callable[[dict], dict]) -> DataFrame:
-    """:func:`run_flow` on every row of ``events``, in one stage with no
-    action.
-
-    ``events`` needs ``request`` and ``reply`` (the mid-flow test) plus
-    whatever ``advance`` reads; the result has the same columns, each
-    nullable, since a hop may clear ``request``."""
-    cols = events.columns
-    schema = StructType([StructField(f.name, f.dataType) for f in events.schema])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [run_flow(event, advance) for event in pdf.to_dict("records")]
-            yield pd.DataFrame(out, columns=cols)
-
-    return events.mapInPandas(run, schema)
-
-
 def hop_frames(frames: DataFrame, advance: Callable[[dict], dict]) -> DataFrame:
     """Kafka records -> the :data:`FRAME` rows they produce, in one
     ``mapInPandas`` stage with no action.
 
     Per record, the reference's chained task: ``decode_event``
     (KafkaDeserializeProto.java:11-13), ``routing.ingress``,
-    :func:`run_flow`, ``routing.egress_topic``, then ``encode_event``
-    keyed by the event_id's UTF-8 bytes (KafkaSerializeProto.java:24-30).
+    :func:`run_flow`, ``routing.egress_topic``, then the producer framing
+    of ``kafka.frame_batch`` (KafkaSerializeProto.java:24-30).
     A NULL value (a Kafka tombstone) and an event either router rejects
     produce no frame."""
 
+    def routed(values: pd.Series) -> Iterator[tuple[dict, str]]:
+        for value in values:
+            if value is None:
+                continue
+            event = ingress(decode_event(bytes(value)))
+            if event is None:
+                continue
+            event = run_flow(event, advance)
+            topic = egress_topic(event)
+            if topic is not None:
+                yield event, topic
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            keys, values, topics = [], [], []
-            for value in pdf["value"]:
-                if value is None:
-                    continue
-                event = ingress(decode_event(bytes(value)))
-                if event is None:
-                    continue
-                event = run_flow(event, advance)
-                topic = egress_topic(event)
-                if topic is None:
-                    continue
-                keys.append(event["event_id"].encode("utf-8"))
-                values.append(encode_event(event))
-                topics.append(topic)
-            yield pd.DataFrame({"key": keys, "value": values, "topic": topics})
+            yield frame_batch(routed(pdf["value"]))
 
     return frames.select("value").mapInPandas(run, FRAME)
 
@@ -143,29 +147,24 @@ def q_flow_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded flow iteration (ref R4/R11/R13): each event becomes a
     synthetic (event_id % 3 + 1)-step flow; the loop must route every
     flow to RETURN and emit exactly one CLIENT reply per event_id.
-    ``n_hops`` counts the hops :func:`hop_flows` ran; the oracle is its
-    closed form."""
+    ``n_hops`` counts the hops :func:`hop_frames` ran, in the opaque
+    ``payload``; the oracle is its closed form."""
     e = load(spark, sf_dir, "events")
-    flows = e.select(
-        "event_id",
-        F.lit("EventFlow").alias("request"),
-        F.lit(None).cast("string").alias("reply"),
-        (F.col("event_id") % 3 + 1).cast("string").alias("current_fun_key"),
-        F.lit("step").alias("current_node_type"),
-        F.lit(0).cast("long").alias("n_hops"),
-    )
+    flows = e.select("event_id", (F.col("event_id") % 3 + 1).alias("steps_left"))
+    requests = encode_frames(make_flow_requests(spark, flows), TOPIC_CLIENT_REQUEST)
 
     def counted_hop(event: dict) -> dict:
-        return {**hop(event), "n_hops": event["n_hops"] + 1}
+        n_hops = int(event["payload"] or b"0") + 1
+        return {**hop(event), "payload": str(n_hops).encode("utf-8")}
 
-    hopped = route_egress(hop_flows(flows, counted_hop))
+    hopped = decode_frames(hop_frames(requests, counted_hop))
     unfinished = F.raise_error(
         F.lit(f"flow did not terminate within {MAX_FLOW_STEPS} steps")
     )
     return hopped.select(
-        "event_id",
-        "n_hops",
-        F.when(F.col("direction") == INTERNAL, unfinished)
+        F.col("event_id").cast(e.schema["event_id"].dataType).alias("event_id"),
+        F.decode("payload", "utf-8").cast("long").alias("n_hops"),
+        F.when(F.col("topic") == TOPIC_INTERNAL, unfinished)
         .otherwise(F.col("reply"))
         .alias("reply"),
     )

@@ -70,7 +70,6 @@ _CREATE_OUT = "event_id bigint, fun_key string, reply string"
 def invoke_stateless(
     df: DataFrame,
     operator_name: str,
-    max_in_flight: int = MAX_IN_FLIGHT,
     timeout_s: float = CALL_TIMEOUT_S,
     latency=None,
 ) -> DataFrame:
@@ -97,7 +96,7 @@ def invoke_stateless(
         fn = latency.timed_stateless(fn)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pool = ThreadPoolExecutor(max_workers=max_in_flight)
+        pool = ThreadPoolExecutor(max_workers=MAX_IN_FLIGHT)
         try:
             for pdf in batches:
                 futures = {
@@ -105,8 +104,8 @@ def invoke_stateless(
                     for ev in pdf.to_dict("records")
                 }
                 # batch deadline: every call gets timeout_s of wall even
-                # when queued behind max_in_flight concurrent slots
-                deadline = timeout_s * max(1, math.ceil(len(futures) / max_in_flight))
+                # when queued behind MAX_IN_FLIGHT concurrent slots
+                deadline = timeout_s * max(1, math.ceil(len(futures) / MAX_IN_FLIGHT))
                 outs = []
                 pending = set(futures)
                 try:

@@ -15,8 +15,7 @@ pins the two spellings equal:
     "side outputs" as N filtered views over the single routed stream
     (Catalyst collapses each filter into the scan, so fan-out costs one
     pass, not N). These are the reference the per-event forms are
-    tested against; ``q_flow_iterate`` routes its hopped flows with
-    :func:`route_egress`.
+    tested against.
 
 Decision tables implemented 1:1:
 

@@ -250,19 +250,16 @@ def apply_stateful(
 def run_stateful_stream(
     spark: SparkSession,
     events: DataFrame,
-    operator_name: str = "engine/Fold",
     query_name: str = "sfs_stateful_fold_stream",
     checkpoint_dir: str | None = None,
-    ttl_ms: int | None = None,
     latency=None,
 ) -> DataFrame:
-    """Run the keyed stateful operator over a (bounded) event stream and
-    materialize the result via the memory sink.  ``checkpoint_dir``
-    lets callers resume the SAME state across multiple availableNow
-    runs (the restart path TTL tests exercise); ``ttl_ms`` bounds
-    per-key state lifetime (see apply_stateful); ``latency`` records
-    the per-invoke histogram (see metrics.InvokeLatency)."""
-    result = apply_stateful(events, operator_name, ttl_ms=ttl_ms, latency=latency)
+    """Run the ``engine/Fold`` keyed stateful operator over a (bounded)
+    event stream and materialize the result via the memory sink.
+    ``checkpoint_dir`` lets callers resume the SAME state across
+    multiple availableNow runs; ``latency`` records the per-invoke
+    histogram (see metrics.InvokeLatency)."""
+    result = apply_stateful(events, "engine/Fold", latency=latency)
     return run_bounded(spark, result, query_name, checkpoint_dir=checkpoint_dir)
 
 

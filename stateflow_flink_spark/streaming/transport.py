@@ -17,11 +17,12 @@ schema (``sources.kafka.KAFKA_RECORD``) — between topics:
     one partition, so one event's re-emitted hops stay ordered);
     ``offset`` is a unique monotonic stamp per append.
 
-Everything above the seam — proto framing (``encode_frames`` /
-``decode_frames``), ingress/egress routing, the two-query cycle in
-:func:`streaming.feedback.run_event_loop` — is byte-for-byte the same
-code on both wires, so the in-sandbox live tests execute the exact
-production path minus only the socket.
+Everything above the seam — proto framing (the ``encode_frames`` /
+``decode_frames`` stages), the one ``flow.hop_frames`` stage that
+decodes, routes, hops and re-encodes each record, and the two-query
+cycle in :func:`streaming.feedback.run_event_loop` — is byte-for-byte
+the same code on both wires, so the broker-free live tests execute the
+exact production path minus only the socket.
 """
 
 from __future__ import annotations
@@ -36,6 +37,8 @@ from pyspark.sql import functions as F
 
 from ..sources.kafka import DEFAULT_BOOTSTRAP, KAFKA_RECORD, kafka_reader
 
+N_PARTITIONS = 4  # a DirectoryTransport topic's partition count
+
 
 class DirectoryTransport:
     """Broker-free topic transport: parquet directories of Kafka-shaped
@@ -43,9 +46,8 @@ class DirectoryTransport:
     event loop relies on: append-only logs, key-hash partitioning, and
     replayability (a reader can re-scan from the beginning)."""
 
-    def __init__(self, base: str, n_partitions: int = 4) -> None:
+    def __init__(self, base: str) -> None:
         self.base = base
-        self.n_partitions = n_partitions
         self._epoch = 0  # producer-epoch counter (driver-side; appends
         # run in foreachBatch on the driver, so increments are ordered)
         # two streaming-query threads share one transport (the feedback
@@ -70,7 +72,7 @@ class DirectoryTransport:
         ``_spark_metadata`` log would make readers trust that log alone
         and never see other writers' appends — a topic must accept
         producers from any query (the feedback edge depends on it).
-        ``partition = hash(key) % N`` mirrors Kafka's sticky key
+        ``partition = hash(key) % N_PARTITIONS`` mirrors Kafka's sticky key
         partitioner (different hash function, same one-key-one-partition
         contract); ``offset`` is (producer-epoch << 40) | within-write-id
         — unique and append-ordered per topic rather than per-partition-
@@ -83,7 +85,7 @@ class DirectoryTransport:
             "key",
             "value",
             F.lit(topic).alias("topic"),
-            F.pmod(F.xxhash64("key"), F.lit(self.n_partitions))
+            F.pmod(F.xxhash64("key"), F.lit(N_PARTITIONS))
             .cast("int")
             .alias("partition"),
             (

@@ -5,6 +5,11 @@ static DataFrames with the public Kafka record schema."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 import pandas as pd
 import pytest
 from hypothesis import given, settings
@@ -23,6 +28,8 @@ from stateflow_flink_spark.sources.proto import (
     encode_event,
     encode_event_request_reply,
 )
+
+from .conftest import REPO
 
 _COLS = [f.name for f in EVENT_ENVELOPE.fields]
 
@@ -230,4 +237,52 @@ def test_decode_null_value_tombstone(spark):
     )
     row = decode_frames(spark.createDataFrame(records, KAFKA_RECORD)).collect()[0]
     assert row.event_id is None and row.payload is None
+
+
+_RESTART = textwrap.dedent(
+    """
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
+
+    from stateflow_flink_spark.schemas import EVENT_ENVELOPE
+    from stateflow_flink_spark.session import configure
+    from stateflow_flink_spark.sources.kafka import (
+        TOPIC_CLIENT_REQUEST, decode_frames, encode_frames,
+    )
+
+    rows = [
+        {"event_id": str(i), "request": "Ping" if i % 2 else "EventFlow"}
+        for i in range(10)
+    ]
+    for _ in range(2):
+        spark = configure(
+            SparkSession.builder.master("local[2]").appName("codec-restart")
+        ).getOrCreate()
+        frames = encode_frames(
+            spark.createDataFrame(rows, EVENT_ENVELOPE), TOPIC_CLIENT_REQUEST
+        ).withColumns({"partition": F.lit(0), "offset": F.lit(0).cast("long")})
+        pings = decode_frames(frames).filter(F.col("request") == "Ping")
+        print("pings", pings.count(), flush=True)
+        spark.stop()
+    """
+)
+
+
+def test_codec_survives_a_session_restart(tmp_path):
+    """A second session in the same process runs the codec as cleanly as
+    the first: nothing codec-side may stay bound to the stopped
+    context, whose accumulator channel is closed (Spark logs ``Failed
+    to update accumulator`` for every task that reports into it)."""
+    env = {**os.environ, "PYTHONPATH": str(REPO)}
+    done = subprocess.run(
+        [sys.executable, "-c", _RESTART],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-4000:]
+    assert done.stdout.split("\n").count("pings 5") == 2, done.stdout
+    assert "Failed to update accumulator" not in done.stderr, done.stderr[-4000:]
 

@@ -267,9 +267,9 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
 
 
 def test_flow_iteration_cache_is_bounded(spark):
-    """iterate_flow must not pin one cached frontier per step: finished
-    rows are checkpointed eagerly and every frontier is unpersisted, so
-    the persistent-RDD census returns to its starting point."""
+    """q_flow_iterate must not pin a cached frame: every hop of every
+    flow runs inside one ``hop_frames`` stage, so the persistent-RDD
+    census returns to its starting point."""
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     out = QUERIES["q_flow_iterate"](spark, SF_SMOKE)
     assert out.count() > 0

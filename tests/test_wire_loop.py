@@ -155,10 +155,22 @@ def test_wire_loop_drops_what_ingress_rejects(spark, tmp_path):
     assert transport.read_batch(spark, "internal").count() == 0
 
 
+def _assert_one_python_pass(df) -> None:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
 def test_hop_frames_is_one_python_pass(spark):
     """Decode, both routers, the hops and encode run in one
     ``mapInPandas``: no pandas or Python UDF may come back into the
-    plan, which is the batch's only crossing into Python."""
+    plan, which is the batch's only crossing into Python.  The codec's
+    frame stages, ``encode_frames`` and ``decode_frames``, each cross
+    into Python once too."""
+    seed = make_flow_requests(
+        spark, spark.range(4).selectExpr("id AS event_id", "2 AS steps_left")
+    )
+    _assert_one_python_pass(encode_frames(seed, TOPIC_CLIENT_REQUEST))
     frames = spark.createDataFrame(
         [
             (str(i).encode("utf-8"), encode_event({
@@ -171,10 +183,9 @@ def test_hop_frames_is_one_python_pass(spark):
         ],
         "key binary, value binary",
     )
+    _assert_one_python_pass(decode_frames(frames))
     hopped = hop_frames(frames, hop)
-    plan = hopped._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    _assert_one_python_pass(hopped)
     got = hopped.collect()
     assert {(bytes(f.key), f.topic) for f in got} == {
         (str(i).encode("utf-8"), TOPIC_CLIENT_REPLY) for i in range(4)
@@ -420,7 +431,7 @@ def test_directory_transport_record_shape_and_key_partitioning(spark, tmp_path):
     schema and honor the one-key-one-partition contract the loop's
     per-event ordering relies on.  A topic nothing was written to yet
     reads as zero rows of that schema."""
-    transport = DirectoryTransport(str(tmp_path), n_partitions=4)
+    transport = DirectoryTransport(str(tmp_path))
     empty = transport.read_batch(spark, TOPIC_CLIENT_REQUEST)
     assert empty.schema == KAFKA_RECORD
     assert empty.count() == 0
