@@ -7,7 +7,9 @@ into the parquet reader — verify with ``df.explain("formatted")``
 (``PushedFilters`` / ``ReadSchema`` rows).
 
 Streaming queries open a table with :func:`staged_stream` and drain it
-with :func:`run_bounded`, the one memory-sink ``availableNow`` runner.
+with :func:`run_bounded`, the one ``availableNow`` runner, into a memory
+sink or a ``foreachBatch`` function; it owns the run's checkpoint
+unless the caller passes one to resume from.
 A query that writes files its returned frame reads puts them in a
 :func:`scratch_dir`.
 """
@@ -19,7 +21,7 @@ import os
 import re
 import shutil
 import tempfile
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -182,28 +184,42 @@ def released_scratch() -> Iterator[None]:
 def run_bounded(
     spark: SparkSession,
     frame: DataFrame,
-    name: str,
+    sink: str | Callable[[DataFrame, int], None],
     mode: str = "append",
     checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Drain a streaming frame with one ``availableNow`` run into the
-    memory sink ``name`` and return the sink's table.
+) -> DataFrame | None:
+    """Drain a streaming frame with one ``availableNow`` run.
 
-    The run's state-partition count is the session's
-    ``defaultParallelism`` (``session.stream_partitions``);
-    ``checkpoint_dir`` lets a later run resume the same state.
+    ``sink`` is either a memory-sink query name, and the run returns the
+    sink's table, or a ``foreachBatch`` function ``(batch, batch_id)``,
+    and the run returns ``None``.  The run's state-partition count is the
+    session's ``defaultParallelism`` (``session.stream_partitions``).
+
+    A caller's ``checkpoint_dir`` is used and left in place, so a later
+    run over it resumes the same state and input position.  Without one
+    the run makes a fresh ``sfs_run_ckpt_*`` dir and removes it when the
+    run ends, also when it fails.  Spark resumes a memory sink only in
+    ``complete`` mode; an ``append`` run that must resume uses a
+    ``foreachBatch`` sink.
     """
-    with stream_partitions(spark):
+    owned = checkpoint_dir is None
+    ckpt = tempfile.mkdtemp(prefix="sfs_run_ckpt_") if owned else checkpoint_dir
+    try:
         writer = (
-            frame.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
+            frame.writeStream.outputMode(mode)
             .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
         )
-        if checkpoint_dir is not None:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        writer.start().awaitTermination()
-    return spark.table(name)
+        if callable(sink):
+            writer = writer.foreachBatch(sink)
+        else:
+            writer = writer.format("memory").queryName(sink)
+        with stream_partitions(spark):
+            writer.start().awaitTermination()
+    finally:
+        if owned:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return None if callable(sink) else spark.table(sink)
 
 
 # df.rdd.getNumPartitions() materializes a physical plan driver-side on

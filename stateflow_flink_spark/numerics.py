@@ -41,6 +41,8 @@ query and oracle stay structurally in lockstep.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -93,3 +95,11 @@ def sql_wsum(expr: str, over: str) -> str:
         f"(CAST(SUM(CAST(({expr}) * {_SCALE_LIT} AS DECIMAL(38,0))) {over} AS DOUBLE)"
         f" / {_SCALE_LIT})"
     )
+
+
+def half_up(x: float) -> int:
+    """Spark's double -> DECIMAL(38,0) cast, in Python: BigDecimal rounds
+    HALF_UP on the double's shortest decimal repr, which ``repr`` gives,
+    so Python folds that scale values this way match the cast bit for
+    bit."""
+    return int(Decimal(repr(x)).to_integral_value(rounding=ROUND_HALF_UP))

@@ -156,8 +156,17 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-@pandas_udf(DoubleType())
-def cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
+def cosine_arrow(a: Column, b: Column) -> Column:
+    """Column form of the kernel :func:`_cosine_arrow`.
+
+    Every UDF here is built per call, not at import: a module-level UDF
+    keeps the JVM function of the first session it ran in, and after
+    ``spark.stop()`` and a new session in the same process its tasks
+    report into the stopped context's accumulator channel."""
+    return pandas_udf(_cosine_arrow, DoubleType())(a, b)
+
+
+def _cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-batched twin of :func:`cosine` — identical semantics
     (float64 of float32 products, NULL on a zero-norm side), ~50x the
     throughput: the zip_with/aggregate spelling is CodegenFallback
@@ -299,15 +308,21 @@ def _sparse_planes() -> tuple[np.ndarray, np.ndarray]:
     return idx, sgn
 
 
-@pandas_udf(
-    StructType(
-        [
-            StructField("proj", ArrayType(DoubleType())),
-            StructField("bk", ArrayType(LongType())),
-        ]
-    )
+_LSH_FEATURES = StructType(
+    [
+        StructField("proj", ArrayType(DoubleType())),
+        StructField("bk", ArrayType(LongType())),
+    ]
 )
-def lsh_features(emb: pd.Series) -> pd.DataFrame:
+
+
+def lsh_features(emb: Column) -> Column:
+    """``struct<proj, bk>`` per vector from :func:`_lsh_features`, built
+    per call (see :func:`cosine_arrow`)."""
+    return pandas_udf(_lsh_features, _LSH_FEATURES)(emb)
+
+
+def _lsh_features(emb: pd.Series) -> pd.DataFrame:
     """All LSH_PLANES sparse projections AND the LSH_TABLES bucket ids
     per vector, one Arrow-batched kernel.
 
@@ -684,13 +699,17 @@ def _emb_lsh_bucket_matrix(embs: np.ndarray) -> np.ndarray:
     return bits.reshape(len(q), EMB_LSH_TABLES, EMB_LSH_BITS) @ pow2
 
 
-@pandas_udf(ArrayType(LongType()))
-def emb_lsh_buckets(emb: pd.Series) -> pd.Series:
-    """Column form of the bucket projection (tests, ad-hoc probes).  The
-    operator itself uses the mapInPandas spelling below: a filter on a
-    UDF column makes ExtractPythonUDFs evaluate the UDF once for the
-    filter and AGAIN for the surviving projection, while mapInPandas is
-    one opaque node the optimizer cannot split (plan-gated)."""
+def emb_lsh_buckets(emb: Column) -> Column:
+    """Column form of the bucket projection (tests, ad-hoc probes), built
+    per call (see :func:`cosine_arrow`).  The operator itself uses the
+    mapInPandas spelling below: a filter on a UDF column makes
+    ExtractPythonUDFs evaluate the UDF once for the filter and AGAIN for
+    the surviving projection, while mapInPandas is one opaque node the
+    optimizer cannot split (plan-gated)."""
+    return pandas_udf(_emb_lsh_buckets, ArrayType(LongType()))(emb)
+
+
+def _emb_lsh_buckets(emb: pd.Series) -> pd.Series:
     if len(emb) == 0:
         return pd.Series([], dtype="object")
     return pd.Series(list(_emb_lsh_bucket_matrix(np.stack(emb.to_numpy()))))

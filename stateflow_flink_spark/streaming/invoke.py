@@ -93,7 +93,7 @@ def invoke_stateless(
     # worker process's registry only has import-time registrations
     fn = get_stateless(operator_name)
     if latency is not None:
-        fn = latency.timed_stateless(fn)
+        fn = latency.timed(fn)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pool = ThreadPoolExecutor(max_workers=MAX_IN_FLIGHT)

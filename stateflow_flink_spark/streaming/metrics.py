@@ -25,9 +25,12 @@ import threading
 import time
 from bisect import bisect_left
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 # Upper bounds in ms; one implicit +inf bucket at the end.  Spans the
 # sub-ms in-process call to the reference's 2 s remote timeout.
@@ -88,34 +91,23 @@ class InvokeLatency:
         with self._lock_handle():
             self._acc.add(upd)
 
-    def timed_stateless(self, fn: Callable[[dict], dict]) -> Callable[[dict], dict]:
-        """Wrap a StatelessFn so every call lands one histogram sample —
+    def timed(self, fn: Callable[..., T]) -> Callable[..., T]:
+        """Wrap an invoked function, stateless ``(event)`` or stateful
+        ``(event, state)``, so every call lands one histogram sample —
         failures included (the reference updates the histogram before
         inspecting the reply, InvokeStatelessLambda.java:93-95).
 
-        ``run_event_loop(..., advance=latency.timed_stateless(flow.hop))``
-        times every hop of every flow exactly where the reference wraps
-        its Dropwizard metric around the lambda call
+        ``run_event_loop(..., advance=latency.timed(flow.hop))`` times
+        every hop of every flow exactly where the reference wraps its
+        Dropwizard metric around the lambda call
         (``InvokeStatefulLambda.java:56-59`` build, ``:112`` update);
         after the loop drains, ``snapshot()`` is the histogram the
         reference's metric reporter would scrape."""
 
-        def call(event: dict) -> dict:
+        def call(*args) -> T:
             t0 = time.perf_counter()
             try:
-                return fn(event)
-            finally:
-                self.record(time.perf_counter() - t0)
-
-        return call
-
-    def timed_stateful(
-        self, fn: Callable[[dict, bytes], tuple[dict, bytes]]
-    ) -> Callable[[dict, bytes], tuple[dict, bytes]]:
-        def call(event: dict, state: bytes) -> tuple[dict, bytes]:
-            t0 = time.perf_counter()
-            try:
-                return fn(event, state)
+                return fn(*args)
             finally:
                 self.record(time.perf_counter() - t0)
 

@@ -41,9 +41,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import run_bounded, staged_stream
-from ..numerics import sql_wsum
+from ..numerics import half_up, sql_wsum
 from ..plans.registry import query
-from ..session import stream_partitions  # noqa: F401 (re-exported)
 
 # ---------------------------------------------------------------------------
 # Callable registry — the in-process replacement for the AWS Lambda hop.
@@ -214,9 +213,9 @@ def apply_stateful(
         # stateful invoke in the histogram.  The vectorized twin does
         # one invoke per (key, batch), so it records one sample per
         # call either way — the histogram counts INVOKES, not rows.
-        fn = latency.timed_stateful(fn)
+        fn = latency.timed(fn)
         if vfn is not None:
-            vfn = latency.timed_stateful(vfn)
+            vfn = latency.timed(vfn)
 
     def step(_, pdf: pd.DataFrame, stored):
         now_ms = int(time.time() * 1000)
@@ -247,22 +246,6 @@ def apply_stateful(
     )
 
 
-def run_stateful_stream(
-    spark: SparkSession,
-    events: DataFrame,
-    query_name: str = "sfs_stateful_fold_stream",
-    checkpoint_dir: str | None = None,
-    latency=None,
-) -> DataFrame:
-    """Run the ``engine/Fold`` keyed stateful operator over a (bounded)
-    event stream and materialize the result via the memory sink.
-    ``checkpoint_dir`` lets callers resume the SAME state across
-    multiple availableNow runs; ``latency`` records the per-invoke
-    histogram (see metrics.InvokeLatency)."""
-    result = apply_stateful(events, "engine/Fold", latency=latency)
-    return run_bounded(spark, result, query_name, checkpoint_dir=checkpoint_dir)
-
-
 @query(
     "q_stateful_fold_stream",
     f"""
@@ -279,7 +262,7 @@ def q_stateful_fold_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_stateful_fold (ref R9) — same oracle: the
     ValueState fold must agree exactly with the batch window fold."""
     with staged_stream(spark, sf_dir, "events") as events:
-        return run_stateful_stream(spark, events)
+        return run_bounded(spark, apply_stateful(events), "sfs_stateful_fold_stream")
 
 
 # ---------------------------------------------------------------------------
@@ -435,27 +418,21 @@ def apply_ewma_stream(events: DataFrame) -> DataFrame:
     the trailing window (weights 2^(K-rank), same arithmetic as the
     batch query — two final double divisions, bit-identical).
 
-    Value scaling matches Spark's double->DECIMAL(38,0) cast exactly:
-    BigDecimal rounds HALF_UP on the double's shortest decimal repr,
-    and Python's Decimal(repr(x)) is the same shortest repr, so the
-    state integers equal the batch query's `xs` column bit for bit.
+    Value scaling matches Spark's double->DECIMAL(38,0) cast exactly
+    (``numerics.half_up``), so the state integers equal the batch
+    query's `xs` column bit for bit.
 
     Arrival order never matters: the trailing window is "newest K by
     (ts, event_id) among events seen so far", so the final summary per
     user equals the batch answer under any batching/replay."""
     import pickle
-    from decimal import ROUND_HALF_UP, Decimal
 
     from ..operators.timeseries import EWMA_WINDOW
 
     def step(user_id, pdf: pd.DataFrame, stored):
         top: list = pickle.loads(stored[0]) if stored is not None else []
         for row in pdf.itertuples():
-            xs = int(
-                Decimal(repr(float(row.value) * 1_000_000)).to_integral_value(
-                    rounding=ROUND_HALF_UP
-                )
-            )
+            xs = half_up(float(row.value) * 1_000_000)
             top.append((row.ts.value // 1000, int(row.event_id), xs))
         top.sort(key=lambda t: (-t[0], -t[1]))
         del top[EWMA_WINDOW:]
@@ -604,13 +581,8 @@ def apply_hll_stream(events: DataFrame) -> DataFrame:
         v = _HLL_M - nz
         if v > 0:
             import math
-            from decimal import ROUND_HALF_UP, Decimal
 
-            est = int(
-                Decimal(repr(_HLL_M * math.log(_HLL_M / v))).to_integral_value(
-                    rounding=ROUND_HALF_UP
-                )
-            )
+            est = half_up(_HLL_M * math.log(_HLL_M / v))
         else:
             est = None
         summary = pd.DataFrame(
@@ -701,22 +673,17 @@ def apply_anomaly_stream(events: DataFrame) -> DataFrame:
     Append mode needs no latest-pick.
 
     Integer-exact across engines: values scale by 1e6 through the
-    shared Decimal(repr(x)) HALF_UP recipe, the flag inequality
+    shared ``numerics.half_up`` cast, the flag inequality
     (n*x - s)^2 > Z2 * (n*ssq - s^2) is pure integer arithmetic —
     Python ints are unbounded, the oracle computes in HUGEINT — so no
     sqrt, no division, no float ever enters the comparison."""
     import pickle
-    from decimal import ROUND_HALF_UP, Decimal
 
     def step(user_id, pdf: pd.DataFrame, stored):
         n, s, ssq = pickle.loads(stored[0]) if stored is not None else (0, 0, 0)
         out_e, out_n, out_f = [], [], []
         for row in pdf.itertuples():
-            x = int(
-                Decimal(repr(float(row.value) * 1_000_000)).to_integral_value(
-                    rounding=ROUND_HALF_UP
-                )
-            )
+            x = half_up(float(row.value) * 1_000_000)
             flag = n >= _ANOM_MIN_N and (n * x - s) ** 2 > _ANOM_Z2 * (
                 n * ssq - s * s
             )
@@ -818,9 +785,8 @@ def apply_cdc_stream(events: DataFrame) -> DataFrame:
     run produces the same final table as the single-batch run).
 
     Cents conversion matches Spark's double→DECIMAL(38,0) cast exactly
-    (Decimal(repr(x)) HALF_UP — the apply_ewma_stream recipe), so the
-    fold is bit-identical to the batch oracle's arithmetic."""
-    from decimal import ROUND_HALF_UP, Decimal
+    (``numerics.half_up``), so the fold is bit-identical to the batch
+    oracle's arithmetic."""
 
     def step(user_id, pdf: pd.DataFrame, stored):
         bal, present, n_applied = stored if stored is not None else (0, False, 0)
@@ -828,11 +794,7 @@ def apply_cdc_stream(events: DataFrame) -> DataFrame:
             if row.event_type == "error":
                 bal, present = 0, False
             else:
-                cents = int(
-                    Decimal(repr(float(row.value) * 100)).to_integral_value(
-                        rounding=ROUND_HALF_UP
-                    )
-                )
+                cents = half_up(float(row.value) * 100)
                 bal, present = (bal if present else 0) + cents, True
             n_applied += 1
         current = pd.DataFrame(

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ..io import load, run_bounded, scratch_dir, staged_stream
 from ..plans.registry import query
-from ..session import conf_scope, stream_partitions
+from ..session import conf_scope
 
 
 @query(
@@ -266,9 +266,6 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_distinct per type must equal the batch truth (the oracle).  At
     100 TB the same layout doubles as ingestion-time partitioning —
     downstream readers prune by batch directory."""
-    import shutil
-    import tempfile
-
     out = scratch_dir("sfs_fb_sink_")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
@@ -276,20 +273,9 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         # N rewrites batch=N, never appends beside it
         df.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
 
-    ckpt = tempfile.mkdtemp(prefix="sfs_fb_ckpt_")
-    try:
-        with staged_stream(spark, sf_dir, "events") as stream, stream_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(write_batch)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # fresh per call, so nothing can resume from it; the sink stays,
-        # the returned frame reads it
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # the sink stays, the returned frame reads it
+    with staged_stream(spark, sf_dir, "events") as stream:
+        run_bounded(spark, stream, write_batch)
     sunk = spark.read.option("basePath", out).parquet(f"{out}/batch=*")
     return sunk.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -414,9 +400,6 @@ def run_incremental_rollup(
     the fixture-scale query path.  Exposed separately so tests can feed a
     deliberately multi-batch source (maxFilesPerTrigger) through the
     merge path and replay individual batches."""
-    import shutil
-    import tempfile
-
     if root is None:
         root = scratch_dir("sfs_rollup_")
 
@@ -429,20 +412,7 @@ def run_incremental_rollup(
         merge_rollup_batch(root, df, bid)
         written.append(bid)
 
-    ckpt = tempfile.mkdtemp(prefix="sfs_rollup_ckpt_")
-    try:
-        with stream_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(_merge)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # fresh per call, so nothing can resume from it; the rollup
-        # root stays, the returned frame reads it
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_bounded(spark, stream, _merge)
     if written:
         final = max(written)
     else:

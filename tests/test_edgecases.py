@@ -826,17 +826,10 @@ def test_scd2_equal_timestamp_changes_are_total_ordered(spark, tmp_path):
     staged = str(tmp_path / "staged")
     spark.createDataFrame(rows, schema).coalesce(1).write.parquet(staged)
     stream = apply_scd2_stream(spark.readStream.schema(schema).parquet(staged))
-    from stateflow_flink_spark.session import stream_partitions
+    from stateflow_flink_spark.io import run_bounded
 
     got: list = []
-    with stream_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(lambda df, bid: got.extend(df.collect()))
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
+    run_bounded(spark, stream, lambda df, bid: got.extend(df.collect()))
     closed = [r for r in batch if not r.is_current]
     assert [(r.event_type, r.version, r.valid_to) for r in got] == [
         (r.event_type, r.version, r.valid_to) for r in closed

@@ -268,21 +268,65 @@ _RESTART = textwrap.dedent(
 )
 
 
+def _run_script(script: str, cwd) -> subprocess.CompletedProcess:
+    """Run ``script`` in a fresh interpreter with the package importable."""
+    return subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=cwd,
+        env={**os.environ, "PYTHONPATH": str(REPO)},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+
+
 def test_codec_survives_a_session_restart(tmp_path):
     """A second session in the same process runs the codec as cleanly as
     the first: nothing codec-side may stay bound to the stopped
     context, whose accumulator channel is closed (Spark logs ``Failed
     to update accumulator`` for every task that reports into it)."""
-    env = {**os.environ, "PYTHONPATH": str(REPO)}
-    done = subprocess.run(
-        [sys.executable, "-c", _RESTART],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
+    done = _run_script(_RESTART, tmp_path)
     assert done.returncode == 0, done.stderr[-4000:]
     assert done.stdout.split("\n").count("pings 5") == 2, done.stdout
     assert "Failed to update accumulator" not in done.stderr, done.stderr[-4000:]
 
+
+_UDF_RESTART = textwrap.dedent(
+    """
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
+
+    from stateflow_flink_spark.operators.similarity import (
+        DIM, cosine_arrow, emb_lsh_buckets, lsh_features,
+    )
+    from stateflow_flink_spark.session import configure
+
+    for _ in range(2):
+        spark = configure(
+            SparkSession.builder.master("local[2]").appName("udf-restart")
+        ).getOrCreate()
+        e = F.transform(
+            F.sequence(F.lit(1), F.lit(DIM)),
+            lambda i: ((i * (F.col("id") + 1)) % 7 - 3).cast("float"),
+        )
+        vecs = spark.range(8).select(e.alias("e"))
+        rows = vecs.select(
+            cosine_arrow(F.col("e"), F.col("e")).alias("c"),
+            lsh_features(F.col("e")).alias("f"),
+            emb_lsh_buckets(F.col("e")).alias("b"),
+        ).collect()
+        print("rows", len(rows), flush=True)
+        spark.stop()
+    """
+)
+
+
+def test_similarity_udfs_survive_a_session_restart(tmp_path):
+    """The similarity module's Arrow UDFs (``cosine_arrow``,
+    ``lsh_features``, ``emb_lsh_buckets``) run as cleanly in a second
+    session of the same process as in the first: none may stay bound to
+    the stopped context's accumulator channel."""
+    done = _run_script(_UDF_RESTART, tmp_path)
+    assert done.returncode == 0, done.stderr[-4000:]
+    assert done.stdout.split("\n").count("rows 8") == 2, done.stdout
+    assert "Failed to update accumulator" not in done.stderr, done.stderr[-4000:]

@@ -168,16 +168,16 @@ def test_invoke_latency_histogram_stateful_stream(spark):
     """The stateful path (InvokeStatefulLambda.java:56-59, :112): after
     a full streaming loop run the metric is populated — one sample per
     (key, batch) invoke on the vectorized fold."""
-    from stateflow_flink_spark.io import staged_stream
+    from stateflow_flink_spark.io import run_bounded, staged_stream
     from stateflow_flink_spark.streaming.metrics import InvokeLatency
-    from stateflow_flink_spark.streaming.state import run_stateful_stream
+    from stateflow_flink_spark.streaming.state import apply_stateful
 
     from .conftest import SF_SMOKE
 
     lat = InvokeLatency(spark, "stateful_invoke")
     with staged_stream(spark, SF_SMOKE, "events") as events:
-        out = run_stateful_stream(
-            spark, events, query_name="sfs_metric_fold_stream", latency=lat
+        out = run_bounded(
+            spark, apply_stateful(events, latency=lat), "sfs_metric_fold_stream"
         )
     n_users = out.select("user_id").distinct().count()
     snap = lat.snapshot()

@@ -16,8 +16,9 @@ import datetime as dt
 import glob
 import time
 
-from stateflow_flink_spark.session import rocksdb_state, stream_partitions
-from stateflow_flink_spark.streaming.state import apply_stateful, run_stateful_stream
+from stateflow_flink_spark.io import run_bounded
+from stateflow_flink_spark.session import rocksdb_state
+from stateflow_flink_spark.streaming.state import apply_stateful
 
 _SCHEMA = "ts timestamp, event_id bigint, user_id bigint, event_type string, value double"
 
@@ -36,20 +37,19 @@ def _stream(spark, staged: str):
 
 def _run_resumable(spark, staged: str, ckpt: str, ttl_ms: int) -> list:
     """One availableNow pass over the staged dir, resuming from `ckpt`.
-    foreachBatch (not the memory sink — it refuses checkpoint recovery,
-    which the TTL restart scenario needs) collects the batch rows."""
-    rows: list = []
+    A foreachBatch sink (an append memory sink cannot resume, which the
+    TTL restart scenario needs) collects the batch rows."""
     result = apply_stateful(_stream(spark, staged), ttl_ms=ttl_ms)
-    with stream_partitions(spark):
-        q = (
-            result.writeStream.foreachBatch(
-                lambda df, bid: rows.extend(df.collect())
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
+    return _run_collect(spark, result, ckpt)
+
+
+def _run_collect(spark, result, ckpt: str) -> list:
+    """Rows of one availableNow run of ``result`` that resumes from, and
+    leaves its state in, ``ckpt``."""
+    rows: list = []
+    run_bounded(
+        spark, result, lambda df, bid: rows.extend(df.collect()), checkpoint_dir=ckpt
+    )
     return rows
 
 
@@ -96,16 +96,16 @@ def test_rocksdb_provider_is_result_identical(spark, tmp_path):
     rows = [_ev(i, uid=i % 3, v=0.5 * i) for i in range(1, 13)]
     _write_events(spark, staged, rows)
 
-    heap = run_stateful_stream(
-        spark, _stream(spark, staged), query_name="prov_heap",
+    heap = run_bounded(
+        spark, apply_stateful(_stream(spark, staged)), "prov_heap",
         checkpoint_dir=str(tmp_path / "ck_heap"),
     )
     heap_rows = sorted(tuple(r) for r in heap.collect())
 
     with rocksdb_state(spark):
         assert spark.conf.get(rocksdb_state._KEY) == rocksdb_state.PROVIDER
-        rocks = run_stateful_stream(
-            spark, _stream(spark, staged), query_name="prov_rocks",
+        rocks = run_bounded(
+            spark, apply_stateful(_stream(spark, staged)), "prov_rocks",
             checkpoint_dir=str(tmp_path / "ck_rocks"),
         )
     rocks_rows = sorted(tuple(r) for r in rocks.collect())
@@ -131,19 +131,7 @@ def test_scd2_stream_carries_open_version_across_runs(spark, tmp_path):
     staged, ckpt = str(tmp_path / "staged"), str(tmp_path / "ckpt")
 
     def run() -> list:
-        rows: list = []
-        result = apply_scd2_stream(_stream(spark, staged))
-        with stream_partitions(spark):
-            q = (
-                result.writeStream.foreachBatch(
-                    lambda df, bid: rows.extend(df.collect())
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        return rows
+        return _run_collect(spark, apply_scd2_stream(_stream(spark, staged)), ckpt)
 
     def ev(eid, etype):
         return (_dt.datetime(2024, 1, 1, 0, 0, eid), eid, 1, etype, 1.0)
@@ -175,19 +163,7 @@ def test_scd2_stream_late_cross_batch_event_cannot_invert_interval(spark, tmp_pa
     staged, ckpt = str(tmp_path / "staged"), str(tmp_path / "ckpt")
 
     def run() -> list:
-        rows: list = []
-        result = apply_scd2_stream(_stream(spark, staged))
-        with stream_partitions(spark):
-            q = (
-                result.writeStream.foreachBatch(
-                    lambda df, bid: rows.extend(df.collect())
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        return rows
+        return _run_collect(spark, apply_scd2_stream(_stream(spark, staged)), ckpt)
 
     def ev(eid, sec, etype):
         return (_dt.datetime(2024, 1, 1, 0, 0, sec), eid, 1, etype, 1.0)
@@ -242,20 +218,10 @@ def test_minhash_dedup_stream_state_survives_restart(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(staged)
 
     def run() -> pd.DataFrame:
-        got: list = []
         flags = apply_minhash_dedup_stream(
             spark.readStream.schema(doc_schema).parquet(staged)
         )
-        with stream_partitions(spark):
-            q = (
-                flags.writeStream.foreachBatch(
-                    lambda df, bid: got.extend(df.collect())
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
+        got = _run_collect(spark, flags, ckpt)
         pdf = pd.DataFrame(got, columns=["doc_id", "dup_of"])
         return pdf.groupby("doc_id", as_index=False)["dup_of"].min()
 
@@ -324,20 +290,10 @@ def test_anomaly_stream_state_survives_restart(spark, tmp_path):
     staged, ckpt = str(tmp_path / "staged"), str(tmp_path / "ckpt")
 
     def run() -> pd.DataFrame:
-        got: list = []
         flags = apply_anomaly_stream(
             _stream(spark, staged).select("user_id", "ts", "event_id", "value")
         )
-        with stream_partitions(spark):
-            q = (
-                flags.writeStream.foreachBatch(
-                    lambda df, bid: got.extend(df.collect())
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
+        got = _run_collect(spark, flags, ckpt)
         return pd.DataFrame(
             got, columns=["user_id", "event_id", "n_prior", "is_anomaly"]
         ).set_index("event_id")
@@ -378,22 +334,12 @@ def test_cdc_apply_stream_state_survives_restart(spark, tmp_path):
     staged, ckpt = str(tmp_path / "staged"), str(tmp_path / "ckpt")
 
     def run() -> pd.DataFrame:
-        got: list = []
         rows = apply_cdc_stream(
             _stream(spark, staged).select(
                 "user_id", "ts", "event_id", "event_type", "value"
             )
         )
-        with stream_partitions(spark):
-            q = (
-                rows.writeStream.foreachBatch(
-                    lambda df, bid: got.extend(df.collect())
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
+        got = _run_collect(spark, rows, ckpt)
         return pd.DataFrame(
             got, columns=["user_id", "balance", "is_present", "n_applied"]
         ).set_index("user_id")
@@ -457,25 +403,18 @@ def test_cep_stream_pending_match_survives_restart(spark, tmp_path):
 
     from stateflow_flink_spark.streaming.cep import apply_cep_stream
 
+    from .test_wire_loop import QueryEvents
+
     staged, ckpt = str(tmp_path / "staged"), str(tmp_path / "ckpt")
     progress: list = []
 
     def run() -> pd.DataFrame:
-        got: list = []
         rows = apply_cep_stream(
             _stream(spark, staged).select("user_id", "ts", "event_id", "event_type")
         )
-        with stream_partitions(spark):
-            q = (
-                rows.writeStream.foreachBatch(
-                    lambda df, bid: got.extend(df.collect())
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        progress.append(q.lastProgress)
+        with QueryEvents(spark) as events:
+            got = _run_collect(spark, rows, ckpt)
+        progress.append(events.progress[-1])
         return pd.DataFrame(
             got,
             columns=["user_id", "start_event_id", "end_event_id",
@@ -535,20 +474,10 @@ def test_sessionize_stream_open_session_survives_restart(spark, tmp_path):
     staged, ckpt = str(tmp_path / "staged"), str(tmp_path / "ckpt")
 
     def run() -> pd.DataFrame:
-        got: list = []
         rows = apply_sessionize_stream(
             _stream(spark, staged).select("user_id", "ts", "event_id")
         )
-        with stream_partitions(spark):
-            q = (
-                rows.writeStream.foreachBatch(
-                    lambda df, bid: got.extend(df.collect())
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
+        got = _run_collect(spark, rows, ckpt)
         return pd.DataFrame(
             got, columns=["user_id", "session_start", "n_events", "duration_sec"]
         )

@@ -19,7 +19,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from stateflow_flink_spark.io import load
+from stateflow_flink_spark.io import load, run_bounded
 from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules
 from stateflow_flink_spark.schemas import EVENTS_RAW
 from stateflow_flink_spark.streaming.sessionization import session_window_stream
@@ -364,6 +364,31 @@ def test_foreach_batch_queries_release_their_checkpoints(
     assert any(d.startswith("sfs_rollup_") for d in left), left
 
 
+def test_run_bounded_removes_its_checkpoint_when_a_batch_fails(
+    spark, tmp_path, monkeypatch
+):
+    """A ``foreachBatch`` function that raises on the first batch fails
+    the run: ``run_bounded`` re-raises, and the checkpoint dir it made
+    for the run is gone afterwards."""
+    from pyspark.errors import StreamingQueryException
+
+    staged = str(tmp_path / "staged")
+    load(spark, SF_SMOKE, "events").limit(10).write.parquet(staged)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    during: list[str] = []
+
+    def fail(df, batch_id):
+        during.extend(p.name for p in tmp_path.iterdir())
+        raise RuntimeError("first batch fails")
+
+    stream = spark.readStream.schema(spark.read.parquet(staged).schema).parquet(staged)
+    with pytest.raises(StreamingQueryException, match="first batch fails"):
+        run_bounded(spark, stream, fail)
+    assert [d for d in during if d.startswith("sfs_run_ckpt_")], during
+    left = sorted(p.name for p in tmp_path.iterdir())
+    assert not [d for d in left if "_ckpt_" in d], left
+
+
 def test_run_query_releases_what_the_query_created(
     spark, duck, tmp_path, monkeypatch
 ):
@@ -458,13 +483,7 @@ def test_incremental_rollup_replayed_batch_is_idempotent(spark, tmp_path):
         sink_rows[batch_id] = df.count()
 
     for attempt in range(2):
-        q = (
-            stream.writeStream.foreachBatch(count_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
+        run_bounded(spark, stream, count_batch, checkpoint_dir=ckpt)
         if attempt == 0:
             first_total = sum(sink_rows.values())
     assert sum(sink_rows.values()) == first_total  # restart added nothing
@@ -712,10 +731,7 @@ def test_cdc_apply_query_is_batching_invariant(spark, tmp_path):
 
     from stateflow_flink_spark.io import load
     from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules
-    from stateflow_flink_spark.streaming.state import (
-        apply_cdc_stream,
-        stream_partitions,
-    )
+    from stateflow_flink_spark.streaming.state import apply_cdc_stream
 
     load_all_modules()
     from .conftest import SF_SMOKE
@@ -754,18 +770,9 @@ def test_cdc_apply_query_is_batching_invariant(spark, tmp_path):
             .option("maxFilesPerTrigger", max_files)
             .parquet(staged)
         )
-        with stream_partitions(spark):
-            q = (
-                result.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
         latest = Window.partitionBy("user_id").orderBy(F.desc("n_applied"))
         return (
-            spark.table(name)
+            run_bounded(spark, result, name)
             .withColumn("_r", F.row_number().over(latest))
             .filter(F.col("_r") == 1)
             .select("user_id", "balance", "is_present")

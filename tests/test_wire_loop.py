@@ -385,7 +385,7 @@ def test_wire_loop_answers_flows_in_the_ingesting_batch(spark, tmp_path):
 
 
 def test_event_loop_populates_invoke_latency_histogram(spark, tmp_path):
-    """With ``advance=lat.timed_stateless(hop)`` every hop of the live cycle
+    """With ``advance=lat.timed(hop)`` every hop of the live cycle
     runs as a per-event invoked call and lands one histogram sample:
     after the drain the driver-side snapshot holds EXACTLY one sample
     per hop (the sum of steps over the seeds), mean/max are sane, and
@@ -406,7 +406,7 @@ def test_event_loop_populates_invoke_latency_histogram(spark, tmp_path):
         spark,
         DirectoryTransport(str(tmp_path)),
         make_flow_requests(spark, flows),
-        advance=lat.timed_stateless(hop),
+        advance=lat.timed(hop),
         timeout_s=90.0,
     )
     rows = replies.collect()
