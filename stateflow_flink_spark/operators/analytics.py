@@ -498,77 +498,6 @@ _RFM_ORACLE = f"""
 """
 
 
-RFM_SCALE_PATH_CONF = "spark.stateflow.rfm.scalePath"
-
-
-def rfm_segment(spark: SparkSession, sf_dir: str, scale_path: bool) -> DataFrame:
-    """Both spellings of the RFM quartile scorer (shared base rollup).
-
-    ``scale_path=False`` — exact NTILE(4): a total-order sort of the
-    customer aggregate; deterministic, oracle-checkable, fine while
-    customers fit one sort partition (dimension cardinality).
-
-    ``scale_path=True`` — the 100 TB spelling the exact form's docstring
-    promises: percentile_approx quartile BOUNDS (one partial-aggregating
-    pass over the same rollup) broadcast back as a CASE — no global
-    sort, no single-reducer window anywhere.  Contract difference is
-    ties only: NTILE force-splits equal values across quartiles to keep
-    bucket sizes exactly n/4, the bounds CASE scores equal values
-    equally (arguably the more defensible segmentation; the equivalence
-    test pins the agreement)."""
-    o = load(spark, sf_dir, "orders")
-    base = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
-        F.max("o_orderdate").alias("last_order"),
-        F.count(F.lit(1)).alias("frequency"),
-        exact_sum("o_totalprice").alias("monetary"),
-    )
-    if not scale_path:
-        wr = Window.orderBy(F.desc("last_order"), F.asc("custkey"))
-        wf = Window.orderBy(F.desc("frequency"), F.asc("custkey"))
-        wm = Window.orderBy(F.desc("monetary"), F.asc("custkey"))
-        return base.select(
-            "custkey",
-            "last_order",
-            "frequency",
-            "monetary",
-            F.ntile(4).over(wr).cast("long").alias("r_quartile"),
-            F.ntile(4).over(wf).cast("long").alias("f_quartile"),
-            F.ntile(4).over(wm).cast("long").alias("m_quartile"),
-        )
-    # Scale path: 1 = best quartile means value >= p75 ascending-bound.
-    # Dates score on their epoch-day integer so one numeric bounds frame
-    # serves all three metrics.
-    metrics = base.withColumn(
-        "recency_d", F.datediff("last_order", F.lit("1970-01-01")).cast("double")
-    )
-    probs = [0.25, 0.5, 0.75]
-    bounds = metrics.agg(
-        F.percentile_approx("recency_d", probs, 100_000).alias("rb"),
-        F.percentile_approx(F.col("frequency").cast("double"), probs, 100_000).alias("fb"),
-        F.percentile_approx("monetary", probs, 100_000).alias("mb"),
-    )
-
-    def case4(v, b):  # descending quartile: >= p75 -> 1 ... < p25 -> 4
-        return (
-            F.when(v >= b[2], F.lit(1))
-            .when(v >= b[1], F.lit(2))
-            .when(v >= b[0], F.lit(3))
-            .otherwise(F.lit(4))
-            .cast("long")
-        )
-
-    j = metrics.crossJoin(F.broadcast(bounds))
-    return j.select(
-        "custkey",
-        "last_order",
-        "frequency",
-        "monetary",
-        case4(F.col("recency_d"), F.col("rb")).alias("r_quartile"),
-        case4(F.col("frequency").cast("double"), F.col("fb")).alias("f_quartile"),
-        case4(F.col("monetary"), F.col("mb")).alias("m_quartile"),
-    )
-
-
 @query("q_rfm_segmentation", _RFM_ORACLE)
 def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation — the warehouse-marketing staple:
@@ -580,14 +509,25 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one partial-aggregated groupBy collapses orders to one
     row per customer BEFORE any window; the three NTILEs then rank the
     #customers frame.  Global NTILE is a single-partition sort of the
-    aggregate (fine at dimension cardinality); at 100 TB customers, set
-    ``spark.stateflow.rfm.scalePath=true`` for the approx-percentile
-    quartile BOUNDS + broadcast CASE spelling (rfm_segment) — same
-    schema, no global sort."""
-    scale = (
-        str(spark.conf.get(RFM_SCALE_PATH_CONF, "false")).lower() == "true"
+    aggregate, fine at dimension cardinality."""
+    o = load(spark, sf_dir, "orders")
+    base = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
+        F.max("o_orderdate").alias("last_order"),
+        F.count(F.lit(1)).alias("frequency"),
+        exact_sum("o_totalprice").alias("monetary"),
     )
-    return rfm_segment(spark, sf_dir, scale_path=scale)
+    wr = Window.orderBy(F.desc("last_order"), F.asc("custkey"))
+    wf = Window.orderBy(F.desc("frequency"), F.asc("custkey"))
+    wm = Window.orderBy(F.desc("monetary"), F.asc("custkey"))
+    return base.select(
+        "custkey",
+        "last_order",
+        "frequency",
+        "monetary",
+        F.ntile(4).over(wr).cast("long").alias("r_quartile"),
+        F.ntile(4).over(wf).cast("long").alias("f_quartile"),
+        F.ntile(4).over(wm).cast("long").alias("m_quartile"),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -653,8 +653,8 @@ def q_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct bigram), so the per-doc frame takes exactly ONE join —
     # joining c1 after dg⋈cg would re-shuffle the corpus-sized frame a
     # second time for a lookup the bigram table can answer alone
-    # (isolated-stage profile, tools/SWEEP_r8.md: the two big-frame
-    # joins were the only stage scaling worse than 5x at 10x data).
+    # (an isolated-stage profile found the two big-frame joins the
+    # only stage scaling worse than 5x at 10x data).
     pg = (
         cg.withColumn("w1", F.substring_index(F.col("g"), " ", 1))
         .join(c1, "w1")
@@ -1106,45 +1106,30 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (weights are 6-dp-quantized idf times integer tf; numerators and
     norms sum those as DECIMAL(38,0)) so the cosine is a fixed sequence
     of correctly-rounded ops on identical operands in both engines."""
-    # r14 restructure (guide §8 — decide on a lightweight proxy, move
-    # heavy rows once; same pattern as the q_dedup_simhash rewrite):
-    # byte-identical documents have identical shingle vectors, identical
-    # TF-IDF weights, identical norms, and cosine 1.0 with each other —
-    # yet the r13 spelling scored every DOC pair, so a family of g exact
-    # copies inflated every shared term's df and the pair join/aggregate
-    # quadratically.  Measured at sf1 (where 50k docs collapse to 29k
-    # distinct texts): the (da,db) aggregate carried 121M join rows into
-    # 101M distinct pairs, 16.5 s of the query's 35 s, for 230k output
-    # rows.  The pair scoring now runs over DISTINCT TEXTS (grouped by
-    # the raw text — no hash-collision exposure), with df/idf still
-    # counting DOCS (sum of group sizes, identical integers), and doc
-    # pairs materialize once at the end:
-    #   within — docs sharing one text: num = sum(wq^2) = s exactly, so
-    #     the cosine expression is evaluated on the same (num, sa, sb)
-    #     integers the old doc-level join produced;
-    #   cross  — scored distinct-text pairs fanned out to their doc-id
-    #     lists, least/greatest orientation (u < v on text reps
-    #     partitions the pair space, so each doc pair appears once).
-    # Oracle unchanged; parity green at sf0.01 and row-identical at
-    # sf0.1 (the collapse is a near-no-op there: 4992 distinct of 5000).
+    # Byte-identical documents have identical weights, norms and cosine
+    # 1.0, so pairs are scored over DISTINCT texts (grouped by the raw
+    # text, no hash-collision exposure), with df/idf still counting docs
+    # (sum of group sizes); doc pairs materialize once at the end, as in
+    # q_dedup_simhash.  At sf1 the doc-level spelling carried 121M join
+    # rows into 101M distinct pairs for 230k output rows.  Each doc
+    # stays one (rep, doc_id) row, so no row holds a text's id list.
     d = spread(load(spark, sf_dir, "documents"), spark)
+    # corpus-sized, intra-query (registry.run_query releases both, so
+    # measured runs stay cold): g feeds the gram pass and the doc count,
+    # members the within-text pairs and both sides of the cross fan-out
     g = (
         d.groupBy("text")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.collect_list("doc_id").alias("ids"),
-            F.count(F.lit(1)).alias("n_g"),
-        )
-        # corpus-sized, intra-query (registry.run_query releases it, so
-        # measured runs stay cold): read by the gram pass, the doc-count aggregate and
-        # both pair expansions below
+        .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n_g"))
         .cache()
+    )
+    members = (
+        d.join(g.select("text", "rep"), "text").select("rep", "doc_id").cache()
     )
     grams = g.select(
         "rep", "n_g", F.explode(grams_all(F.col("text"), _TC_N)).alias("term")
     )
     tf = grams.groupBy("rep", "n_g", "term").agg(F.count(F.lit(1)).alias("tf"))
-    # df counts DOCS (sum of text-group sizes), exactly as before
+    # df counts DOCS (sum of text-group sizes)
     df = tf.groupBy("term").agg(F.sum("n_g").alias("df"))
     keep = df.filter(F.col("df") <= _TC_DF_CAP)
     n = g.agg(F.sum("n_g").alias("n_docs"))
@@ -1167,10 +1152,9 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Three consumers read this frame (the norms aggregate and both
         # sides of the term-keyed pair join); without the cache each one
-        # re-runs the shingle explode + tf/df aggregates + idf join —
-        # the q_dedup_fuzzy `ds.cache()` discipline applied here (r13
-        # optimization round, guide §1.2/§5; registry.run_query releases
-        # it, so every measured run stays cold).
+        # re-runs the shingle explode + tf/df aggregates + idf join
+        # (registry.run_query releases it, so every measured run stays
+        # cold).
         .cache()
     )
     norms = w.groupBy("rep").agg(
@@ -1193,20 +1177,16 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = F.col("num").cast("double") / (
         F.sqrt(F.col("sa").cast("double")) * F.sqrt(F.col("sb").cast("double"))
     )
-    gl = g.select("rep", "ids", "n_g")
+    # cross: scored distinct-text pairs fanned out to their docs;
+    # least/greatest orients each doc pair once, since ra < rb
+    # partitions the pair space
     cross = (
         pairs.join(na, "ra")
         .join(nb, "rb")
         .filter(cos >= _TC_TAU)
         .select("ra", "rb", "num", "sa", "sb")
-        .join(gl.select(F.col("rep").alias("ra"), F.col("ids").alias("ids_a")), "ra")
-        .join(gl.select(F.col("rep").alias("rb"), F.col("ids").alias("ids_b")), "rb")
-        .select(
-            F.explode("ids_a").alias("id_a"), "ids_b", "num", "sa", "sb"
-        )
-        .select(
-            "id_a", F.explode("ids_b").alias("id_b"), "num", "sa", "sb"
-        )
+        .join(members.select(F.col("rep").alias("ra"), F.col("doc_id").alias("id_a")), "ra")
+        .join(members.select(F.col("rep").alias("rb"), F.col("doc_id").alias("id_b")), "rb")
         .select(
             F.least("id_a", "id_b").alias("doc_a"),
             F.greatest("id_a", "id_b").alias("doc_b"),
@@ -1215,26 +1195,19 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sb",
         )
     )
+    # within: docs sharing one text; num = sum over kept terms of
+    # wq*wq = s, the numerator the doc-level join summed
     within = (
-        gl.filter(F.col("n_g") >= 2)
+        members.select("rep", F.col("doc_id").alias("doc_a"))
+        .join(members.select("rep", F.col("doc_id").alias("doc_b")), "rep")
+        .filter(F.col("doc_a") < F.col("doc_b"))
         .join(norms, "rep")
-        # num = sum over kept terms of wq*wq = s: the identical-text
-        # pair's numerator, same decimal the doc-level join summed
         .select(
-            "ids",
+            "doc_a",
+            "doc_b",
             F.col("s").alias("num"),
             F.col("s").alias("sa"),
             F.col("s").alias("sb"),
-        )
-        .select(F.explode("ids").alias("id_a"), "ids", "num", "sa", "sb")
-        .select("id_a", F.explode("ids").alias("id_b"), "num", "sa", "sb")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            F.col("id_a").alias("doc_a"),
-            F.col("id_b").alias("doc_b"),
-            "num",
-            "sa",
-            "sb",
         )
     )
     return (

@@ -995,7 +995,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): the docs parquet is one split at fixture scale, so the
     # explode+md5 map pass — the query's dominant stage — otherwise runs
     # on ONE task regardless of cores (isolated-stage profile: 7.7x at
-    # 10x docs for that stage alone; tools/SWEEP_r8.md).
+    # 10x docs for that stage alone).
     d = spread(load(spark, sf_dir, "documents"), spark).withColumn(
         "toks", F.split(F.col("text"), " ")
     )
@@ -1873,13 +1873,12 @@ def _ensure_maintained_index(
         d = spread(load(spark, sf_dir, "documents"), spark)
         bkt = _inc_hash_bucket("doc_id")
         # The bands and signatures writes are INDEPENDENT consumers of
-        # the corpus shingle frame, kept that way on purpose: at scale
-        # they run as overlapped jobs (guide §2.6), and the r13 sweep
-        # measured the derive-bands-from-the-written-signature-table
-        # alternative (one shingle pass, but serialized writes + a
-        # table read-back) at a consistent 1.2-1.4x PENALTY across two
-        # full-bench windows — the second shingle pass is cheaper than
-        # losing the write overlap (receipt in OPTIMIZATION_r13.md).
+        # the corpus shingle frame, kept that way on purpose: they run as
+        # overlapped jobs, and deriving bands from the written signature
+        # table (one shingle pass, but serialized writes + a table
+        # read-back) measured 1.2-1.4x slower across two full-bench
+        # windows — the second shingle pass is cheaper than losing the
+        # write overlap.
         corpus = d.filter(bkt < _MAINT_CORPUS_TO).select(
             "doc_id", hashed_shingles(F.col("text")).alias("sh")
         )

@@ -1819,9 +1819,9 @@ def _knn_topk_ivf(e: DataFrame) -> DataFrame:
     The r8 shape scored the same cosines through a
     crossJoin(broadcast) that MATERIALIZED n x sqrt(n)
     embedding-carrying rows and shuffled them all through a vec_id
-    window just to pick the top {_KG_PROBE_CELLS} — the stage
-    profiling blamed for the 7.4x-vs-4x-theory constant
-    (SWEEP_r8 §8).  Now the only corpus-sized shuffle left is the
+    window just to pick the top {_KG_PROBE_CELLS} — the stage a
+    profile blamed for its 7.4x wall at 10x data, against 4x in
+    theory.  Now the only corpus-sized shuffle left is the
     cell-keyed exchange the algorithm actually needs, carrying
     n x {_KG_PROBE_CELLS} rows.  Scores stay float64 GEMM + 6 dp
     rounding + cent_id-ascending ties — byte-identical to the

@@ -11,11 +11,10 @@ pins the two spellings equal:
     event loop runs: ``flow.hop_frames`` routes each decoded frame in
     the same Python pass that hops and re-encodes it;
   * as Column projections — :func:`route_ingress` / :func:`route_egress`,
-    a when-chain computing direction/route_name/route_key columns, with
-    "side outputs" as N filtered views over the single routed stream
-    (Catalyst collapses each filter into the scan, so fan-out costs one
-    pass, not N). These are the reference the per-event forms are
-    tested against.
+    a when-chain computing direction/route_name/route_key columns. A
+    Flink side output (an ``OutputTag``, ``StateFlowFlinkJob.java:57-66``)
+    is a ``filter`` on ``route_name`` over the routed stream. These are
+    the reference the per-event forms are tested against.
 
 Decision tables implemented 1:1:
 
@@ -135,13 +134,6 @@ def egress_topic(event: dict) -> str | None:
     if mid_flow(event):
         return TOPIC_INTERNAL
     return None
-
-
-def side_output(routed: DataFrame, route_name: str) -> DataFrame:
-    """One 'side output' = one filtered view of the routed stream
-    (the Spark replacement for Flink OutputTags,
-    StateFlowFlinkJob.java:57-66)."""
-    return routed.filter(F.col("route_name") == route_name)
 
 
 @query(

@@ -1713,14 +1713,14 @@ def test_hapax_ratio_matches_pandas(spark):
 def test_ttr_zero_shuffle_and_bounds(spark):
     """TTR plan must contain NO exchange (narrow map only), values in
     (0, 1], and types never exceed tokens."""
-    from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules
+    from stateflow_flink_spark.plans.registry import QUERIES
 
-    load_all_modules()
     from .conftest import SF_SMOKE
+    from .helpers import plan_text
 
-    df = QUERIES["q_ttr"](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(spark, "q_ttr")
     assert "Exchange" not in plan, "q_ttr must be a zero-shuffle map"
+    df = QUERIES["q_ttr"](spark, SF_SMOKE)
     pdf = df.toPandas()
     assert (pdf["n_types"] <= pdf["n_tokens"]).all()
     assert ((pdf["ttr"] > 0) & (pdf["ttr"] <= 1)).all()

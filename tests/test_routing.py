@@ -20,7 +20,6 @@ from stateflow_flink_spark.streaming.routing import (
     ingress,
     route_egress,
     route_ingress,
-    side_output,
 )
 
 KEYS = ["k1", "k2", "k3", ""]
@@ -146,7 +145,8 @@ def test_keyed_vs_create_split(spark, envelope_df):
         == create.count()
     )
     # side outputs are disjoint filtered views
-    assert side_output(route_ingress(envelope_df), "ns/Fun").count() == keyed.count()
+    routed = route_ingress(envelope_df)
+    assert routed.filter(F.col("route_name") == "ns/Fun").count() == keyed.count()
 
 
 def test_egress_decision_table(spark, envelope_df):

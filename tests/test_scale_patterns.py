@@ -482,59 +482,6 @@ def test_reservoir_sample_is_mergeable_across_deltas(spark, tmp_path):
     assert merged == sample(rng_keys)
 
 
-def test_rfm_scale_path_matches_ntile_up_to_ties(spark):
-    """The approx-quantile-bounds RFM spelling (rfm_segment scale_path)
-    must reproduce the exact NTILE segmentation up to tie handling:
-    value-deterministic (equal metric => equal quartile), monotone in
-    the metric, never more than one quartile off NTILE's force-split,
-    and in high agreement where the metric is near-continuous."""
-    import pandas as pd
-
-    from stateflow_flink_spark.operators.analytics import rfm_segment
-
-    from .conftest import SF_SMOKE
-
-    exact = rfm_segment(spark, SF_SMOKE, scale_path=False).toPandas()
-    scale = rfm_segment(spark, SF_SMOKE, scale_path=True).toPandas()
-    assert sorted(exact.columns) == sorted(scale.columns)
-    m = exact.merge(scale, on="custkey", suffixes=("_e", "_s"))
-    assert len(m) == len(exact) > 0
-
-    for metric, qcol, floor_agree in (
-        ("monetary", "m_quartile", 0.99),
-        ("last_order", "r_quartile", 0.95),
-        ("frequency", "f_quartile", 0.80),
-    ):
-        agree = (m[f"{qcol}_e"] == m[f"{qcol}_s"]).mean()
-        assert agree >= floor_agree, (metric, agree)
-        # ties only: disagreements are NTILE force-splits, one bucket off
-        assert (m[f"{qcol}_e"] - m[f"{qcol}_s"]).abs().max() <= 1
-        # value-deterministic + monotone (1 = best = largest metric)
-        per_val = m.groupby(f"{metric}_s")[f"{qcol}_s"].agg(["nunique", "first"])
-        assert (per_val["nunique"] == 1).all(), metric
-        assert per_val["first"].is_monotonic_decreasing, metric
-        assert set(m[f"{qcol}_s"]) <= {1, 2, 3, 4}
-
-
-def test_rfm_scale_path_plan_has_no_window(spark):
-    """The whole point of the scale path: no NTILE, no Window, no
-    global single-partition sort — quartile bounds broadcast back."""
-    import contextlib
-    import io
-
-    from stateflow_flink_spark.operators.analytics import rfm_segment
-
-    from .conftest import SF_SMOKE
-
-    df = rfm_segment(spark, SF_SMOKE, scale_path=True)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "Window" not in plan, plan
-    assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
-
-
 @given(
     st.lists(
         st.tuples(st.integers(0, 30), st.integers(1, 10)),

@@ -403,7 +403,7 @@ def test_cep_stream_pending_match_survives_restart(spark, tmp_path):
 
     from stateflow_flink_spark.streaming.cep import apply_cep_stream
 
-    from .test_wire_loop import QueryEvents
+    from .helpers import QueryEvents
 
     staged, ckpt = str(tmp_path / "staged"), str(tmp_path / "ckpt")
     progress: list = []

@@ -39,6 +39,7 @@ from stateflow_flink_spark.streaming.transport import (
 )
 
 from .conftest import SF_SMOKE
+from .helpers import QueryEvents
 
 
 def test_wire_loop_drains_every_flow_exactly_once(spark, tmp_path):
@@ -193,44 +194,6 @@ def test_hop_frames_is_one_python_pass(spark):
     assert {decode_event(bytes(f.value))["reply"] for f in got} == {
         "SuccessfulInvocation"
     }
-
-
-class QueryEvents:
-    """A ``StreamingQueryListener`` registered for a ``with`` block: it
-    keeps each run's progress reports and termination exception, keyed
-    by run id, and on exit drains the listener bus so every event of the
-    block has been delivered."""
-
-    def __init__(self, spark) -> None:
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        self.spark = spark
-        self.progress: list = []
-        self.terminated: dict[str, str | None] = {}
-        events = self
-
-        class Listener(StreamingQueryListener):
-            def onQueryStarted(self, event) -> None:
-                pass
-
-            def onQueryProgress(self, event) -> None:
-                events.progress.append(event.progress)
-
-            def onQueryIdle(self, event) -> None:
-                pass
-
-            def onQueryTerminated(self, event) -> None:
-                events.terminated[str(event.runId)] = event.exception
-
-        self.listener = Listener()
-
-    def __enter__(self) -> "QueryEvents":
-        self.spark.streams.addListener(self.listener)
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        self.spark.streams.removeListener(self.listener)
 
 
 class DrainDuringBatch(DirectoryTransport):

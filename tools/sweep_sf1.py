@@ -6,7 +6,7 @@ RELATIONAL queries under the same lens using the gen_sf1.py fixture set
 (6M-row lineitem, 1M events).
 
     python tools/gen_sf1.py            # once, ~30 s
-    python tools/sweep_sf1.py          # prints the SWEEP_r8 table
+    python tools/sweep_sf1.py          # markdown table: sf1 vs sf0.1 wall and rows
 
 Measurement discipline is stress_sweep's: one OS process per query
 (private JVM), warm-up run discarded, median of 3.
