@@ -22,7 +22,7 @@ Scale notes: the dimension tables (region/nation/supplier/customer at
 TPC-H ratios) sit far under the broadcast threshold, so Catalyst
 broadcasts every dim⋈fact here; the fact⋈fact joins (lineitem⋈orders,
 lineitem self-joins in Q17/Q21) shuffle on their equi-keys with AQE
-handling skew — the same shapes `tests/test_plans_relational.py` gates on the
+handling skew — the same shapes the relational section of `tests/test_plans.py` gates on the
 Q1-Q19 half of the family.
 """
 
