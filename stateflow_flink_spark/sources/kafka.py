@@ -25,12 +25,16 @@ The framing stages — :func:`encode_frames` and :func:`decode_frames` —
 are each one ``mapInPandas`` stage calling the proto3 codec of
 :mod:`.proto` per record, the shape ``flow.hop_frames`` has, over the
 public Kafka record schema; they are unit-tested broker-free on static
-frames.
+frames.  The stages that make :data:`FRAME` rows (:func:`encode_frames`
+and ``flow.hop_frames``) are built by :func:`frame_stage`, which
+remembers the pass on the frames it returns, so the sandbox transport's
+producer runs inside that same pass, as the reference's producer ends
+the task that made the record.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -76,6 +80,9 @@ FRAME = StructType(
         StructField("topic", StringType()),
     ]
 )
+
+# One ``mapInPandas`` function: pandas batches in, pandas batches out.
+PandasPass = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
 
 _ENVELOPE_COLS = [f.name for f in EVENT_ENVELOPE.fields]
 _SOURCE_COLS = ("topic", "partition", "offset")
@@ -128,6 +135,23 @@ def frame_batch(events: Iterable[tuple[dict, str]]) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=FRAME.fieldNames())
 
 
+def frame_stage(src: DataFrame, run: PandasPass) -> DataFrame:
+    """``src.mapInPandas(run, FRAME)``, with ``(src, run)`` recorded on
+    the result: a producer that finds them runs ``run`` inside its own
+    pass over ``src`` (``streaming.transport.DirectoryTransport.append``)
+    instead of a second pass over the frames.  To every other caller the
+    result is the plain frame stage."""
+    frames = src.mapInPandas(run, FRAME)
+    frames._frame_stage = (src, run)
+    return frames
+
+
+def recorded_stage(frames: DataFrame) -> tuple[DataFrame, PandasPass] | None:
+    """The ``(src, run)`` pass :func:`frame_stage` recorded on ``frames``,
+    or None for frames built any other way."""
+    return vars(frames).get("_frame_stage")
+
+
 def decode_frames(raw: DataFrame) -> DataFrame:
     """Kafka records -> flat EVENT_ENVELOPE columns + the source metadata
     ``raw`` carries (``topic``, ``partition``, ``offset``), in one
@@ -160,11 +184,11 @@ def decode_frames(raw: DataFrame) -> DataFrame:
 
 def encode_frames(events: DataFrame, topic: str) -> DataFrame:
     """Flat EVENT_ENVELOPE columns (selected by name) -> Kafka
-    :data:`FRAME` rows for ``topic``, in one ``mapInPandas`` stage, framed
+    :data:`FRAME` rows for ``topic``, in one :func:`frame_stage`, framed
     by :func:`frame_batch`."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield frame_batch((event, topic) for event in pdf.to_dict("records"))
 
-    return events.select(*_ENVELOPE_COLS).mapInPandas(run, FRAME)
+    return frame_stage(events.select(*_ENVELOPE_COLS), run)

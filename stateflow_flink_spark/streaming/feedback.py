@@ -18,10 +18,12 @@ Both queries read their topic's raw Kafka records and run one batch
 function, as the reference's one chained task runs every event through
 ``Event.parseFrom``, ``IngressRouter``, the invoke, ``EgressRouter`` and
 ``toByteString``: ``flow.hop_frames`` does all five per record in one
-``mapInPandas`` stage over the whole micro-batch, so a batch crosses
-into Python once. The invoke is the reference's per-event contract:
-``advance`` is called once per event per hop, so a batch runs the same
-number of Spark jobs whatever its flows' hop count, and only flows past
+``mapInPandas`` stage over the whole micro-batch, and the transport's
+producer, the reference's Kafka producer at the end of that task
+(``:127-139``), writes the frames from the same pass. So a data batch crosses into Python once
+and runs one Spark job. The invoke is the reference's per-event
+contract: ``advance`` is called once per event per hop, so the job count
+does not grow with the flows' hop count, and only flows past
 ``flow.MAX_FLOW_STEPS`` hops cross the feedback edge.
 
 Termination is the driver's concern (the reference's job runs forever;
@@ -37,8 +39,7 @@ import tempfile
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.kafka import (
     TOPIC_CLIENT_REPLY,
@@ -78,18 +79,18 @@ def run_event_loop(
             INTERNAL -> advance the event while it is
                         mid-flow, up to MAX_FLOW_STEPS hops (R4+R11)
           -> routing.egress_topic -> encode_event
-        -> localCheckpoint, the batch's one checkpoint
-        -> client_reply, one append per batch; internal (the feedback
-           edge), only flows still mid-flow after the bound   (R13)
+        -> one append, produced in the same pass: each frame to
+           client_reply, or to internal (the feedback edge) if its
+           flow is still mid-flow after the bound          (R12+R13)
 
-    A data batch runs two Spark jobs, the checkpoint and the reply
-    append, plus the feedback append when a flow passes the bound,
-    whatever its flows' hop count (the Drizzle amortization of
-    per-batch coordination). A flow of at most MAX_FLOW_STEPS hops is
-    answered in the micro-batch that ingests it and never touches
-    ``internal``; a longer one crosses it once per further run of
-    MAX_FLOW_STEPS hops. No hop here waits on keyed state, so none has
-    to cross the topic.
+    A data batch runs one Spark job whatever its flows' hop count, also
+    when a flow passes the bound (the Drizzle amortization of per-batch
+    coordination), and the seed append is one job too. Each reply's
+    ``timestamp`` is its producer's clock after the hops ran. A flow of
+    at most MAX_FLOW_STEPS hops is answered in the micro-batch that
+    ingests it and never touches ``internal``; a longer one crosses it
+    once per further run of MAX_FLOW_STEPS hops. No hop here waits on
+    keyed state, so none has to cross the topic.
     """
     base = tempfile.mkdtemp(prefix="sfs_wireloop_ck_")
     n_expected = expected_replies if expected_replies is not None else seed.count()
@@ -97,24 +98,11 @@ def run_event_loop(
     # Seed: the client produces proto-framed requests to client_request.
     transport.append(encode_frames(seed, TOPIC_CLIENT_REQUEST), TOPIC_CLIENT_REQUEST)
 
-    out_topics = (TOPIC_CLIENT_REPLY, TOPIC_INTERNAL)
-
     def loop_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sizes = Observation()
-        frames = (
-            hop_frames(batch_df, advance)
-            .observe(
-                sizes, *[F.count_if(F.col("topic") == t).alias(t) for t in out_topics]
-            )
-            .localCheckpoint()
-        )
-        counts = sizes.get
-        # One append per non-empty topic: the replies, then THE FEEDBACK
-        # EDGE, flows still mid-flow after the bound going back into
-        # query B's source topic (StateFlowFlinkJob.java:127-132).
-        for topic in out_topics:
-            if counts[topic]:
-                transport.append(frames.filter(F.col("topic") == topic), topic)
+        # One append routes each frame by its topic: the replies, and
+        # THE FEEDBACK EDGE, flows still mid-flow after the bound going
+        # back into query B's source topic (StateFlowFlinkJob.java:127-132).
+        transport.append(hop_frames(batch_df, advance), None)
 
     # One query per source topic, both running loop_batch: query A
     # ingests client_request, query B the feedback edge.

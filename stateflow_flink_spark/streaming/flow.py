@@ -19,8 +19,10 @@ mappings of it run this loop inside the one ``mapInPandas`` stage
     each micro-batch of the two streaming queries sharing ``internal``
     (streaming/feedback.py): per Kafka record it decodes the Event,
     applies the ingress rule, hops, applies the egress rule and encodes
-    the frame for its topic, so a batch crosses into Python once. Only
-    flows still mid-flow after the bound cross the feedback edge;
+    the frame for its topic, and the transport's producer writes the
+    frames from that same pass, so a batch crosses into Python once and
+    runs one Spark job. Only flows still mid-flow after the bound cross
+    the feedback edge;
   * bounded/batch: ``q_flow_iterate`` frames a fixture's flows with
     ``encode_frames``, hops them through the same :func:`hop_frames`
     and decodes the frames it emits; a flow still mid-flow after the
@@ -38,12 +40,12 @@ from pyspark.sql import functions as F
 from ..io import load
 from ..plans.registry import query
 from ..sources.kafka import (
-    FRAME,
     TOPIC_CLIENT_REQUEST,
     TOPIC_INTERNAL,
     decode_frames,
     encode_frames,
     frame_batch,
+    frame_stage,
 )
 from ..sources.proto import decode_event
 from .routing import RETURN_NODE, egress_topic, ingress, mid_flow
@@ -105,8 +107,8 @@ def run_flow(event: dict, advance: Callable[[dict], dict]) -> dict:
 
 
 def hop_frames(frames: DataFrame, advance: Callable[[dict], dict]) -> DataFrame:
-    """Kafka records -> the :data:`FRAME` rows they produce, in one
-    ``mapInPandas`` stage with no action.
+    """Kafka records -> the FRAME rows they produce, in one
+    ``kafka.frame_stage`` with no action.
 
     Per record, the reference's chained task: ``decode_event``
     (KafkaDeserializeProto.java:11-13), ``routing.ingress``,
@@ -131,7 +133,7 @@ def hop_frames(frames: DataFrame, advance: Callable[[dict], dict]) -> DataFrame:
         for pdf in batches:
             yield frame_batch(routed(pdf["value"]))
 
-    return frames.select("value").mapInPandas(run, FRAME)
+    return frame_stage(frames.select("value"), run)
 
 
 @query(

@@ -12,10 +12,20 @@ schema (``sources.kafka.KAFKA_RECORD``) — between topics:
     pattern, R12/R13).  Needs a live broker + the spark-sql-kafka
     package to ``.load()``/``.save()``.
   * :class:`DirectoryTransport` — the sandbox wire: each topic is a
-    directory of parquet part-files holding the SAME record schema.
-    ``partition`` is stamped by key-hash (Kafka's contract: one key →
-    one partition, so one event's re-emitted hops stay ordered);
-    ``offset`` is a unique monotonic stamp per append.
+    local directory of parquet part-files holding the SAME record
+    schema.  Its producer runs inside the Python pass that makes the
+    frames (``kafka.frame_stage``), as the reference's producer ends the
+    task that made the record: each task writes its frames with pyarrow
+    and renames them into their topic, so an append is one Spark job
+    with no Spark file write.  ``partition`` is stamped by key-hash
+    (Kafka's contract: one key → one partition, so one event's
+    re-emitted hops stay ordered); ``offset`` is a unique stamp per
+    append; ``timestamp`` is the producer's clock when it writes
+    (Kafka's CreateTime).
+
+``append(frames, topic)`` produces every frame to ``topic``; with
+``topic=None`` each frame goes to the topic its ``topic`` column names,
+so one append serves a batch's replies and feedback frames alike.
 
 Everything above the seam — proto framing (the ``encode_frames`` /
 ``decode_frames`` stages), the one ``flow.hop_frames`` stage that
@@ -28,23 +38,101 @@ exact production path minus only the socket.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import threading
+import time
+import zlib
+from collections.abc import Iterator
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..sources.kafka import DEFAULT_BOOTSTRAP, KAFKA_RECORD, kafka_reader
+from ..sources.kafka import (
+    DEFAULT_BOOTSTRAP,
+    KAFKA_RECORD,
+    PandasPass,
+    kafka_reader,
+    recorded_stage,
+)
 
 N_PARTITIONS = 4  # a DirectoryTransport topic's partition count
 
+_ARROW_RECORD = to_arrow_schema(KAFKA_RECORD)  # as the producer writes it
+
+
+def _framed(topic: str | None) -> list[str]:
+    """The frame columns an append to ``topic`` reads: a topic-less
+    append routes each row by its ``topic`` column."""
+    return ["key", "value"] + (["topic"] if topic is None else [])
+
+
+def _as_is(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    return batches
+
+
+def _producer(base: str, epoch: int, topic: str | None, run: PandasPass) -> PandasPass:
+    """The ``mapInPandas`` function of one append: ``run`` makes the
+    task's frames, then each topic's share is written as one parquet
+    file under a hidden name and renamed to ``part-<epoch>-<task
+    partition>.parquet`` in the topic dir, so a reader never lists a
+    partial file.  Yields the task's row count."""
+
+    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        made = [pdf for pdf in run(batches) if len(pdf)]
+        n = sum(len(pdf) for pdf in made)
+        if n:
+            now_us = time.time_ns() // 1000  # after the pass made the frames
+            ctx = TaskContext.get()
+            task = ctx.partitionId()
+            frames = pd.concat(made, ignore_index=True)
+            frames["offset"] = np.arange(n, dtype=np.int64) + (epoch << 40) + (task << 33)
+            shares = (
+                frames.groupby("topic", sort=False) if topic is None else [(topic, frames)]
+            )
+            for t, share in shares:
+                d = os.path.join(base, t)
+                os.makedirs(d, exist_ok=True)
+                tmp = os.path.join(d, f".part-{epoch}-{task}-{ctx.attemptNumber()}.tmp")
+                try:
+                    pq.write_table(_record_table(share, t, now_us), tmp)
+                    os.rename(tmp, os.path.join(d, f"part-{epoch}-{task}.parquet"))
+                finally:  # left behind only if the write or rename failed
+                    if os.path.exists(tmp):
+                        os.remove(tmp)
+        yield pd.DataFrame({"rows": [n]})
+
+    return produce
+
+
+def _record_table(frames: pd.DataFrame, topic: str, now_us: int) -> pa.Table:
+    """One topic's frames as KAFKA_RECORD columns."""
+    keys = frames["key"].tolist()
+    n = len(keys)
+    return pa.table(
+        {
+            "key": keys,
+            "value": frames["value"].tolist(),
+            "topic": [topic] * n,
+            "partition": [0 if k is None else zlib.crc32(k) % N_PARTITIONS for k in keys],
+            "offset": frames["offset"].to_numpy(),
+            "timestamp": [now_us] * n,
+            "timestampType": [0] * n,
+        },
+        schema=_ARROW_RECORD,
+    )
+
 
 class DirectoryTransport:
-    """Broker-free topic transport: parquet directories of Kafka-shaped
-    records.  The stand-in preserves the three transport properties the
-    event loop relies on: append-only logs, key-hash partitioning, and
-    replayability (a reader can re-scan from the beginning)."""
+    """Broker-free topic transport: local parquet directories of
+    Kafka-shaped records.  The stand-in preserves the three transport
+    properties the event loop relies on: append-only logs, key-hash
+    partitioning, and replayability (a reader can re-scan from the
+    beginning).  Producers write with ``os.makedirs``/``os.rename``, so
+    ``base`` must be a local path the executors share with the driver."""
 
     def __init__(self, base: str) -> None:
         self.base = base
@@ -65,52 +153,28 @@ class DirectoryTransport:
         ``format("kafka").load()`` would yield."""
         return spark.readStream.schema(KAFKA_RECORD).parquet(self.topic_dir(topic))
 
-    def append(self, frames: DataFrame, topic: str) -> None:
-        """Produce pre-framed ``(key, value[, topic])`` rows.
+    def append(self, frames: DataFrame, topic: str | None = None) -> None:
+        """Produce pre-framed ``(key, value[, topic])`` rows, in one
+        Spark job that collects each task's row count.
 
-        Plain distributed parquet append, NOT the streaming file sink: a
-        ``_spark_metadata`` log would make readers trust that log alone
-        and never see other writers' appends — a topic must accept
-        producers from any query (the feedback edge depends on it).
-        ``partition = hash(key) % N_PARTITIONS`` mirrors Kafka's sticky key
-        partitioner (different hash function, same one-key-one-partition
-        contract); ``offset`` is (producer-epoch << 40) | within-write-id
-        — unique and append-ordered per topic rather than per-partition-
+        Frames made by a ``kafka.frame_stage`` are produced inside that
+        stage's own pass; any other frames through one ``mapInPandas``
+        over them.  Each task writes its own files, so concurrent
+        producers on one topic never touch each other's output, and
+        nothing like the streaming file sink's ``_spark_metadata`` log
+        hides one producer's appends from another's readers.
+        ``partition = crc32(key) % N_PARTITIONS`` mirrors Kafka's key
+        partitioner (different hash, same one-key-one-partition
+        contract); ``offset`` is ``(epoch << 40) + (task partition <<
+        33) + row``, so ``offset >> 40`` is the producer epoch — unique
+        and append-ordered per topic rather than per-partition-
         contiguous, which is all the loop reads from it.
         """
         with self._epoch_lock:
             self._epoch += 1
             epoch = self._epoch
-        stamped = frames.select(
-            "key",
-            "value",
-            F.lit(topic).alias("topic"),
-            F.pmod(F.xxhash64("key"), F.lit(N_PARTITIONS))
-            .cast("int")
-            .alias("partition"),
-            (
-                F.lit(epoch).cast("long") * F.lit(1 << 40).cast("long")
-                + F.monotonically_increasing_id()
-            ).alias("offset"),
-            F.current_timestamp().alias("timestamp"),
-            F.lit(0).alias("timestampType"),
-        )
-        # Each append commits into its own staging dir, outside every
-        # topic, and only then moves its part files into the topic: a
-        # job commit deletes its output dir's ``_temporary``, so two
-        # producers committing into one topic dir lose each other's
-        # task output.
-        staging = os.path.join(self.base, ".staging")
-        os.makedirs(staging, exist_ok=True)
-        stage = tempfile.mkdtemp(dir=staging)
-        try:
-            stamped.write.mode("append").parquet(stage)
-            dest = self.topic_dir(topic)
-            for name in os.listdir(stage):
-                if name.startswith("part-"):
-                    os.rename(os.path.join(stage, name), os.path.join(dest, name))
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        src, run = recorded_stage(frames) or (frames.select(*_framed(topic)), _as_is)
+        src.mapInPandas(_producer(self.base, epoch, topic, run), "rows long").collect()
 
     def read_batch(self, spark: SparkSession, topic: str) -> DataFrame:
         """Bounded snapshot (drain checks / assertions); a topic with no
@@ -136,17 +200,20 @@ class KafkaTransport:
             spark, self.bootstrap, (topic,), starting_offsets="earliest"
         ).load()
 
-    def append(self, frames: DataFrame, topic: str) -> None:
+    def append(self, frames: DataFrame, topic: str | None = None) -> None:
         """Batch producer inside ``foreachBatch`` — the standard Spark
         pattern for multi-sink streaming writes (R12 client producer /
-        R13 internal feedback producer)."""
-        (
-            frames.select("key", "value")
+        R13 internal feedback producer), one ``format("kafka")`` write.
+        With no ``topic`` it sets no ``topic`` option, so the sink routes
+        each row by its ``topic`` column."""
+        writer = (
+            frames.select(*_framed(topic))
             .write.format("kafka")
             .option("kafka.bootstrap.servers", self.bootstrap)
-            .option("topic", topic)
-            .save()
         )
+        if topic is not None:
+            writer = writer.option("topic", topic)
+        writer.save()
 
     def read_batch(self, spark: SparkSession, topic: str) -> DataFrame:
         return (

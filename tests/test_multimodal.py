@@ -50,7 +50,7 @@ def test_fake_decode_deterministic_and_bounded():
     b = _fake_decode(b"same payload")
     assert a == b
     assert 1 <= a["height"] <= 128 and 1 <= a["width"] <= 128 and a["channels"] == 3
-    assert _fake_decode(b"other payload") != a or True  # content-addressed
+    assert _fake_decode(b"other payload") != a  # content-addressed
 
 
 def test_feature_vectors_are_normalized_histograms(spark):

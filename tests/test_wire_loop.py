@@ -239,10 +239,10 @@ def test_wire_loop_stops_queries_between_batches(spark, tmp_path):
 
 
 def test_wire_loop_batch_jobs_do_not_grow_with_hops(spark, tmp_path):
-    """A data batch hops all its flows in one stage: query A's batch of
-    1-hop flows and its batch of 8-hop flows each run two Spark jobs,
-    the checkpoint and the reply append. The stream thread runs a
-    batch's jobs under the query's run id as job group."""
+    """A data batch hops all its flows in one stage and produces the
+    frames from that same pass: query A's batch of 1-hop flows and its
+    batch of 8-hop flows each run one Spark job. The stream thread runs
+    a batch's jobs under the query's run id as job group."""
 
     def jobs_of_ingesting_batch(steps: int, base: str) -> int:
         flows = spark.range(40).select(
@@ -265,19 +265,7 @@ def test_wire_loop_batch_jobs_do_not_grow_with_hops(spark, tmp_path):
 
     one = jobs_of_ingesting_batch(1, str(tmp_path / "one"))
     eight = jobs_of_ingesting_batch(8, str(tmp_path / "eight"))
-    assert (one, eight) == (2, 2)
-
-
-class CountingTransport(DirectoryTransport):
-    """DirectoryTransport that counts its appends per topic."""
-
-    def __init__(self, base: str) -> None:
-        super().__init__(base)
-        self.appends: Counter[str] = Counter()
-
-    def append(self, frames, topic: str) -> None:
-        self.appends[topic] += 1
-        super().append(frames, topic)
+    assert (one, eight) == (1, 1)
 
 
 def _epoch(offset: int) -> int:
@@ -286,12 +274,21 @@ def _epoch(offset: int) -> int:
     return offset >> 40
 
 
+def _epochs(spark, transport, topic: str) -> dict[str, int]:
+    """event_id -> producer epoch of each frame in ``topic``."""
+    return {
+        r.event_id: _epoch(r.offset)
+        for r in decode_frames(transport.read_batch(spark, topic)).collect()
+    }
+
+
 def test_wire_loop_answers_flows_in_the_ingesting_batch(spark, tmp_path):
     """Pings and flows of 1 to 3 hops are all answered by the batch that
-    ingests them: after the seed, one append to client_reply and none to
-    internal.  A flow of MAX_FLOW_STEPS + 1 hops adds exactly one append
-    to internal, and its reply is appended after that frame, so it was
-    the internal topic's query that answered it."""
+    ingests them: every reply comes from one producer epoch, and
+    internal stays empty.  A flow of MAX_FLOW_STEPS + 1 hops puts exactly
+    one frame in internal, and its reply is produced after that frame,
+    in an epoch of its own, so it was the internal topic's query that
+    answered it."""
     flows = spark.range(9).select(
         F.col("id").alias("event_id"), (F.col("id") % 3 + 1).alias("steps_left")
     )
@@ -309,9 +306,10 @@ def test_wire_loop_answers_flows_in_the_ingesting_batch(spark, tmp_path):
             if r.reply == "SuccessfulInvocation":
                 assert r.current_fun_key == "0"
 
-    transport = CountingTransport(str(tmp_path / "short"))
+    transport = DirectoryTransport(str(tmp_path / "short"))
     check(run_event_loop(spark, transport, seed.unionByName(pings), timeout_s=90.0))
-    assert transport.appends == {TOPIC_CLIENT_REQUEST: 1, "client_reply": 1}
+    assert len(set(_epochs(spark, transport, TOPIC_CLIENT_REPLY).values())) == 1
+    assert transport.read_batch(spark, "internal").count() == 0
 
     long_seed = make_flow_requests(
         spark,
@@ -321,7 +319,7 @@ def test_wire_loop_answers_flows_in_the_ingesting_batch(spark, tmp_path):
         ),
     )
     expected["99"] = "SuccessfulInvocation"
-    transport = CountingTransport(str(tmp_path / "long"))
+    transport = DirectoryTransport(str(tmp_path / "long"))
     check(
         run_event_loop(
             spark,
@@ -330,21 +328,47 @@ def test_wire_loop_answers_flows_in_the_ingesting_batch(spark, tmp_path):
             timeout_s=90.0,
         )
     )
-    assert transport.appends == {
-        TOPIC_CLIENT_REQUEST: 1,
-        "internal": 1,
-        "client_reply": 2,
-    }
-    ((internal_offset,),) = (
-        transport.read_batch(spark, "internal").select("offset").collect()
-    )
-    reply_epochs = {
-        r.event_id: _epoch(r.offset)
-        for r in decode_frames(transport.read_batch(spark, "client_reply")).collect()
-    }
+    (internal_epoch,) = _epochs(spark, transport, "internal").values()
+    reply_epochs = _epochs(spark, transport, TOPIC_CLIENT_REPLY)
+    assert len(set(reply_epochs.values())) == 2
     long_epoch = reply_epochs.pop("99")
-    assert long_epoch > _epoch(internal_offset)
+    assert long_epoch > internal_epoch
     assert long_epoch not in set(reply_epochs.values())
+
+
+def test_wire_loop_reply_is_stamped_after_its_last_hop(spark, tmp_path):
+    """A reply record's ``timestamp`` is its producer's clock when it
+    writes (Kafka's CreateTime), so it is never earlier than the wall
+    clock of the flow's last hop. ``advance`` writes ``time.time_ns()``
+    into the payload on every hop, as ``q_flow_iterate``'s counted hop
+    writes its count; a stamp fixed before the hops ran, such as a
+    ``current_timestamp()`` Spark evaluates when it plans the write,
+    fails this."""
+
+    def clocked_hop(event: dict) -> dict:
+        return {**hop(event), "payload": str(time.time_ns()).encode("utf-8")}
+
+    flows = spark.range(30).select(
+        F.col("id").alias("event_id"), (F.col("id") % 4 + 1).alias("steps_left")
+    )
+    transport = DirectoryTransport(str(tmp_path))
+    replies = run_event_loop(
+        spark,
+        transport,
+        make_flow_requests(spark, flows),
+        advance=clocked_hop,
+        timeout_s=90.0,
+    )
+    assert replies.count() == 30
+    records = (
+        transport.read_batch(spark, TOPIC_CLIENT_REPLY)
+        .select("value", F.unix_micros("timestamp").alias("ts_us"))
+        .collect()
+    )
+    assert len(records) == 30
+    for r in records:
+        last_hop_ns = int(decode_event(bytes(r.value))["payload"])
+        assert r.ts_us >= last_hop_ns // 1000, (r.ts_us, last_hop_ns)
 
 
 def test_event_loop_populates_invoke_latency_histogram(spark, tmp_path):
