@@ -852,8 +852,8 @@ def star_contraction(edges: DataFrame, max_rounds: int = 24) -> DataFrame:
     shuffles over edges that only ever point at smaller ids (total work
     shrinks monotonically).  `session.pin` cuts the per-round lineage
     exactly as in q_dedup_cluster — localCheckpoint by default, reliable
-    `.checkpoint()` when spark.stateflow.checkpointDir /
-    SPARK_GRAFT_CHECKPOINT_DIR is set (the cluster-reliability knob).
+    `.checkpoint()` when the session has Spark's checkpoint directory
+    (`spark.checkpoint.dir`, the cluster-reliability setting).
 
     At convergence the edge list IS a star forest child→root; labels
     are those edges plus (root, root) for each root.  The root

@@ -145,8 +145,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the edge frame feeds two joins per iteration x two iterations:
     # pin it once, LAZILY (eager=False: constructing the query must not
     # launch a Spark job).  `pin` is localCheckpoint by default and
-    # reliable `.checkpoint()` when spark.stateflow.checkpointDir /
-    # SPARK_GRAFT_CHECKPOINT_DIR is set — the cluster-reliability knob
+    # reliable `.checkpoint()` when the session has Spark's checkpoint
+    # directory (`spark.checkpoint.dir`) — the cluster-reliability setting
     edges = pin(fwd.unionByName(rev))
     # deg doubles as the node list (every node has an out-edge in the
     # undirected graph) — no separate distinct pass

@@ -88,37 +88,20 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Reliable-checkpoint knob for iteratively-reused frames (pagerank /
-# triangles / star contraction).  Conf name, or the env var of the same
-# intent; when neither is set, `pin` uses localCheckpoint.
-CHECKPOINT_DIR_CONF = "spark.stateflow.checkpointDir"
-_ckpt_dir_applied: str | None = None
-
-
 def pin(df, eager: bool = False):
     """Cut lineage on a frame an iterative loop reuses each round.
 
     ``localCheckpoint`` stores UNREPLICATED executor-local blocks —
     the right local-mode default (no FS round-trip), but on a cluster
     a lost executor makes the pinned frame unrecoverable and the whole
-    iteration fails over to recompute-from-scratch.  Setting
-    ``spark.stateflow.checkpointDir`` (or env
-    ``SPARK_GRAFT_CHECKPOINT_DIR``) swaps in reliable
-    ``Dataset.checkpoint()`` against that directory for every pinned
-    frame — one knob, every iterative operator."""
-    global _ckpt_dir_applied
-    spark = df.sparkSession
-    try:
-        ckdir = spark.conf.get(CHECKPOINT_DIR_CONF, None)
-    except Exception:
-        ckdir = None
-    ckdir = ckdir or os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if not ckdir:
-        return df.localCheckpoint(eager=eager)
-    if _ckpt_dir_applied != ckdir:
-        spark.sparkContext.setCheckpointDir(ckdir)
-        _ckpt_dir_applied = ckdir
-    return df.checkpoint(eager=eager)
+    iteration fails over to recompute-from-scratch.  When the session
+    has a checkpoint directory (Spark's ``spark.checkpoint.dir`` or
+    ``sc.setCheckpointDir``), every pinned frame takes reliable
+    ``Dataset.checkpoint()`` into it instead — one deployment setting,
+    every iterative operator."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def session_token(spark: SparkSession) -> str:

@@ -92,31 +92,34 @@ def run_event_loop(
     once per further run of MAX_FLOW_STEPS hops. No hop here waits on
     keyed state, so none has to cross the topic.
     """
-    base = tempfile.mkdtemp(prefix="sfs_wireloop_ck_")
-    n_expected = expected_replies if expected_replies is not None else seed.count()
-
-    # Seed: the client produces proto-framed requests to client_request.
-    transport.append(encode_frames(seed, TOPIC_CLIENT_REQUEST), TOPIC_CLIENT_REQUEST)
-
     def loop_batch(batch_df: DataFrame, batch_id: int) -> None:
         # One append routes each frame by its topic: the replies, and
         # THE FEEDBACK EDGE, flows still mid-flow after the bound going
         # back into query B's source topic (StateFlowFlinkJob.java:127-132).
         transport.append(hop_frames(batch_df, advance), None)
 
-    # One query per source topic, both running loop_batch: query A
-    # ingests client_request, query B the feedback edge.
-    queries = [
-        transport.read_stream(spark, topic)
-        .writeStream.foreachBatch(loop_batch)
-        .option("checkpointLocation", os.path.join(base, name))
-        .trigger(processingTime=TRIGGER)
-        .start()
-        for name, topic in (("ck_a", TOPIC_CLIENT_REQUEST), ("ck_b", TOPIC_INTERNAL))
-    ]
-
+    # Set-up runs inside the try, so a failure in it still stops the
+    # queries already started and removes the checkpoints.
+    base = tempfile.mkdtemp(prefix="sfs_wireloop_ck_")
+    queries = []
     deadline = time.time() + timeout_s
     try:
+        n_expected = expected_replies if expected_replies is not None else seed.count()
+
+        # Seed: the client produces proto-framed requests to client_request.
+        transport.append(encode_frames(seed, TOPIC_CLIENT_REQUEST), TOPIC_CLIENT_REQUEST)
+
+        # One query per source topic, both running loop_batch: query A
+        # ingests client_request, query B the feedback edge.
+        for name, topic in (("ck_a", TOPIC_CLIENT_REQUEST), ("ck_b", TOPIC_INTERNAL)):
+            queries.append(
+                transport.read_stream(spark, topic)
+                .writeStream.foreachBatch(loop_batch)
+                .option("checkpointLocation", os.path.join(base, name))
+                .trigger(processingTime=TRIGGER)
+                .start()
+            )
+
         done = 0
         while time.time() < deadline:
             done = transport.read_batch(spark, TOPIC_CLIENT_REPLY).count()

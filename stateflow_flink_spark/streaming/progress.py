@@ -10,17 +10,16 @@ state-store size (the R9 ValueState growth curve) and
 ``numRowsDroppedByWatermark`` (the late-data loss the reference, running
 processing-time-only per ``StateFlowFlinkJob.java:69``, can't even see).
 
-Shape: plain dict extraction from ``StreamingQuery.recentProgress`` —
-no listener thread, no extra work on the hot path; the engine already
-computed every number.  Call ``collect_progress(query)`` after (or
-between) batches.  A ``StreamingQueryListener`` variant would push the
-same dicts; pull keeps the bounded ``availableNow`` runs used everywhere
-in this repo deterministic.
+Shape: :class:`QueryEvents`, a ``StreamingQueryListener`` registered for
+a ``with`` block, so it reads every query the block runs without a
+handle to it: a registry run through ``run_query``, an
+``io.run_bounded`` run and both ``run_event_loop`` queries alike. The
+engine already computed every number; the listener only keeps them.
 """
 
 from __future__ import annotations
 
-from typing import Any
+import json
 
 
 def _batch_row(p: dict) -> dict:
@@ -41,31 +40,48 @@ def _batch_row(p: dict) -> dict:
     }
 
 
-def collect_progress(query: Any) -> list[dict]:
-    """All retained progress events of a (finished or running)
-    StreamingQuery as flat metric rows, oldest first."""
-    import json
+class QueryEvents:
+    """A ``StreamingQueryListener`` registered for a ``with`` block: it
+    keeps each run's progress reports and termination exception, keyed
+    by run id, and on exit drains the listener bus so every event of the
+    block has been delivered."""
 
-    rows = []
-    for raw in query.recentProgress:
-        p = raw if isinstance(raw, dict) else json.loads(raw.json)
-        rows.append(_batch_row(p))
-    return rows
+    def __init__(self, spark) -> None:
+        from pyspark.sql.streaming import StreamingQueryListener
 
+        self.spark = spark
+        self.progress: list = []
+        self.terminated: dict[str, str | None] = {}
+        events = self
 
-def progress_summary(query: Any) -> dict:
-    """Roll the batch rows up to the numbers a dashboard keys on."""
-    rows = collect_progress(query)
-    n = len(rows)
-    total_rows = sum(r["num_input_rows"] for r in rows)
-    total_ms = sum(r["batch_duration_ms"] or 0 for r in rows)
-    return {
-        "n_batches": n,
-        "total_input_rows": total_rows,
-        "total_batch_ms": total_ms,
-        "rows_per_sec": (total_rows / (total_ms / 1000.0)) if total_ms else 0.0,
-        "max_state_rows": max((r["state_rows"] for r in rows), default=0),
-        "rows_dropped_by_watermark": sum(
-            r["rows_dropped_by_watermark"] for r in rows
-        ),
-    }
+        class Listener(StreamingQueryListener):
+            def onQueryStarted(self, event) -> None:
+                pass
+
+            def onQueryProgress(self, event) -> None:
+                events.progress.append(event.progress)
+
+            def onQueryIdle(self, event) -> None:
+                pass
+
+            def onQueryTerminated(self, event) -> None:
+                events.terminated[str(event.runId)] = event.exception
+
+        self.listener = Listener()
+
+    def __enter__(self) -> "QueryEvents":
+        self.spark.streams.addListener(self.listener)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        self.spark.streams.removeListener(self.listener)
+
+    def batches(self, run_id: str | None = None) -> list[dict]:
+        """One flat metrics row per progress report, oldest first; only
+        run ``run_id``'s reports when it is given."""
+        return [
+            _batch_row(json.loads(p.json))
+            for p in self.progress
+            if run_id is None or str(p.runId) == run_id
+        ]

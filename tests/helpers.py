@@ -1,5 +1,6 @@
 """Helpers shared by the test modules: physical-plan text for the plan
-gates, a token counter over that text, and a streaming-query listener.
+gates, a token counter over that text, and a runner for scripts that
+need a fresh interpreter and session.
 
 Importing this module registers every query (``load_all_modules``)."""
 
@@ -7,10 +8,13 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
+import subprocess
+import sys
 
 from stateflow_flink_spark.plans.registry import load_all_modules, run_query
 
-from .conftest import SF_SMOKE
+from .conftest import REPO, SF_SMOKE
 
 load_all_modules()
 
@@ -45,39 +49,14 @@ def token_count(plan: str, token: str) -> int:
     return plan.count(token)
 
 
-class QueryEvents:
-    """A ``StreamingQueryListener`` registered for a ``with`` block: it
-    keeps each run's progress reports and termination exception, keyed
-    by run id, and on exit drains the listener bus so every event of the
-    block has been delivered."""
-
-    def __init__(self, spark) -> None:
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        self.spark = spark
-        self.progress: list = []
-        self.terminated: dict[str, str | None] = {}
-        events = self
-
-        class Listener(StreamingQueryListener):
-            def onQueryStarted(self, event) -> None:
-                pass
-
-            def onQueryProgress(self, event) -> None:
-                events.progress.append(event.progress)
-
-            def onQueryIdle(self, event) -> None:
-                pass
-
-            def onQueryTerminated(self, event) -> None:
-                events.terminated[str(event.runId)] = event.exception
-
-        self.listener = Listener()
-
-    def __enter__(self) -> "QueryEvents":
-        self.spark.streams.addListener(self.listener)
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        self.spark.streams.removeListener(self.listener)
+def run_script(script: str, cwd, *args: str) -> subprocess.CompletedProcess:
+    """Run ``script`` with ``args`` in a fresh interpreter with the
+    package importable."""
+    return subprocess.run(
+        [sys.executable, "-c", script, *args],
+        cwd=cwd,
+        env={**os.environ, "PYTHONPATH": str(REPO)},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )

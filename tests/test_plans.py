@@ -14,9 +14,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from stateflow_flink_spark.plans.registry import ORACLE, QUERIES, run_query
+from stateflow_flink_spark.streaming.progress import QueryEvents
 
 from .conftest import SF_CORRECTNESS, SF_SMOKE
-from .helpers import QueryEvents, plan_text, token_count
+from .helpers import plan_text, token_count
 from .parity import compare
 
 

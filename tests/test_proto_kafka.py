@@ -5,9 +5,6 @@ static DataFrames with the public Kafka record schema."""
 
 from __future__ import annotations
 
-import os
-import subprocess
-import sys
 import textwrap
 
 import pandas as pd
@@ -29,7 +26,7 @@ from stateflow_flink_spark.sources.proto import (
     encode_event_request_reply,
 )
 
-from .conftest import REPO
+from .helpers import run_script
 
 _COLS = [f.name for f in EVENT_ENVELOPE.fields]
 
@@ -268,24 +265,12 @@ _RESTART = textwrap.dedent(
 )
 
 
-def _run_script(script: str, cwd) -> subprocess.CompletedProcess:
-    """Run ``script`` in a fresh interpreter with the package importable."""
-    return subprocess.run(
-        [sys.executable, "-c", script],
-        cwd=cwd,
-        env={**os.environ, "PYTHONPATH": str(REPO)},
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-
-
 def test_codec_survives_a_session_restart(tmp_path):
     """A second session in the same process runs the codec as cleanly as
     the first: nothing codec-side may stay bound to the stopped
     context, whose accumulator channel is closed (Spark logs ``Failed
     to update accumulator`` for every task that reports into it)."""
-    done = _run_script(_RESTART, tmp_path)
+    done = run_script(_RESTART, tmp_path)
     assert done.returncode == 0, done.stderr[-4000:]
     assert done.stdout.split("\n").count("pings 5") == 2, done.stdout
     assert "Failed to update accumulator" not in done.stderr, done.stderr[-4000:]
@@ -326,7 +311,7 @@ def test_similarity_udfs_survive_a_session_restart(tmp_path):
     ``lsh_features``, ``emb_lsh_buckets``) run as cleanly in a second
     session of the same process as in the first: none may stay bound to
     the stopped context's accumulator channel."""
-    done = _run_script(_UDF_RESTART, tmp_path)
+    done = run_script(_UDF_RESTART, tmp_path)
     assert done.returncode == 0, done.stderr[-4000:]
     assert done.stdout.split("\n").count("rows 8") == 2, done.stdout
     assert "Failed to update accumulator" not in done.stderr, done.stderr[-4000:]

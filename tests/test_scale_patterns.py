@@ -9,6 +9,7 @@ match a published definition (Morton codes, PQ argmin, priority keys).
 from __future__ import annotations
 
 import hashlib
+import textwrap
 
 import pytest
 from hypothesis import given, settings
@@ -23,6 +24,8 @@ from stateflow_flink_spark.operators.joins import (
 )
 from stateflow_flink_spark.operators.layout import Z_BITS, _interleave
 from stateflow_flink_spark.operators.quantize import PQ_K
+
+from .helpers import run_script
 
 
 # ---------------------------------------------------------------------------
@@ -368,32 +371,44 @@ def test_label_propagation_escalates_to_star_contraction_on_deep_chain(
     assert out2 == {i: 0 for i in range(40)}
 
 
-def test_pin_uses_reliable_checkpoint_when_dir_configured(spark, tmp_path):
+_PIN = textwrap.dedent(
+    """
+    import sys
+
+    from pyspark.sql import SparkSession
+
+    from stateflow_flink_spark.session import configure, pin
+
+    builder = configure(SparkSession.builder.master("local[2]").appName("pin"))
+    if sys.argv[1:]:
+        builder = builder.config("spark.checkpoint.dir", sys.argv[1])
+    spark = builder.getOrCreate()
+    print("dir", spark.sparkContext.getCheckpointDir(), flush=True)
+    print("rows", pin(spark.range(10), eager=True).count(), flush=True)
+    spark.stop()
+    """
+)
+
+
+def test_pin_uses_reliable_checkpoint_when_dir_configured(tmp_path):
     """`session.pin` defaults to localCheckpoint (unreplicated executor
-    blocks — fine in local mode); setting spark.stateflow.checkpointDir
-    must swap in reliable Dataset.checkpoint() so iterative operators
-    (pagerank / triangles / star contraction) survive executor loss on
-    a cluster.  Evidence: RDD checkpoint files land under the dir."""
-    import glob
-    import os
+    blocks — fine in local mode); a session with Spark's checkpoint
+    directory (`spark.checkpoint.dir`) must get reliable
+    Dataset.checkpoint() so iterative operators (pagerank / triangles /
+    star contraction) survive executor loss on a cluster.  Evidence: RDD
+    checkpoint files land under the dir.  The conf is static, so each
+    case builds its own session in a fresh interpreter."""
+    local = run_script(_PIN, tmp_path)
+    assert local.returncode == 0, local.stderr[-4000:]
+    assert local.stdout.splitlines() == ["dir None", "rows 10"], local.stdout
+    assert not [p for p in tmp_path.rglob("*") if "rdd-" in p.name]
 
-    import stateflow_flink_spark.session as sess
-
-    df = spark.range(100)
-    # default path: no checkpoint files written anywhere
-    pinned = sess.pin(df, eager=True)
-    assert pinned.count() == 100
-
-    ckdir = str(tmp_path / "reliable")
-    spark.conf.set(sess.CHECKPOINT_DIR_CONF, ckdir)
-    try:
-        pinned = sess.pin(spark.range(50), eager=True)
-        assert pinned.count() == 50
-        files = glob.glob(os.path.join(ckdir, "**"), recursive=True)
-        assert any("rdd-" in f for f in files), files[:10]
-    finally:
-        spark.conf.unset(sess.CHECKPOINT_DIR_CONF)
-        sess._ckpt_dir_applied = None
+    ckdir = tmp_path / "reliable"
+    reliable = run_script(_PIN, tmp_path, ckdir.as_uri())
+    assert reliable.returncode == 0, reliable.stderr[-4000:]
+    assert "rows 10" in reliable.stdout.splitlines(), reliable.stdout
+    files = [p for p in ckdir.rglob("*") if "rdd-" in p.name]
+    assert files, reliable.stdout
 
 
 # ---------------------------------------------------------------------------

@@ -402,8 +402,7 @@ def test_cep_stream_pending_match_survives_restart(spark, tmp_path):
     import pandas as pd
 
     from stateflow_flink_spark.streaming.cep import apply_cep_stream
-
-    from .helpers import QueryEvents
+    from stateflow_flink_spark.streaming.progress import QueryEvents
 
     staged, ckpt = str(tmp_path / "staged"), str(tmp_path / "ckpt")
     progress: list = []

@@ -20,8 +20,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from stateflow_flink_spark.io import load, run_bounded
-from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules
+from stateflow_flink_spark.plans.registry import QUERIES, load_all_modules, run_query
 from stateflow_flink_spark.schemas import EVENTS_RAW
+from stateflow_flink_spark.streaming.progress import QueryEvents
 from stateflow_flink_spark.streaming.sessionization import session_window_stream
 from stateflow_flink_spark.streaming.state import apply_stateful
 
@@ -398,7 +399,7 @@ def test_run_query_releases_what_the_query_created(
     RDD persisted during the run (q_dedup_minhash caches its band
     table).  Frames other tests cached may be released too, since the
     run clears the cache, so the check is on RDD ids, not a count."""
-    from stateflow_flink_spark.plans.registry import ORACLE, run_query
+    from stateflow_flink_spark.plans.registry import ORACLE
 
     from .parity import compare
 
@@ -657,11 +658,6 @@ def test_progress_observables_capture_drops_and_throughput(spark, tmp_path):
     """streaming/progress.py: batch rows carry input counts + durations,
     and numRowsDroppedByWatermark surfaces the late row the engine
     discarded — the operational twin of test_watermark_drops_late_rows."""
-    from stateflow_flink_spark.streaming.progress import (
-        collect_progress,
-        progress_summary,
-    )
-
     stage = _mkdir(tmp_path, "prog")
 
     def write_batch(name, rows):
@@ -701,23 +697,36 @@ def test_progress_observables_capture_drops_and_throughput(spark, tmp_path):
             .start()
         )
         qy.awaitTermination()
-        return qy
 
     write_batch("b0.parquet", [(1, 10), (2, hour + 10), (3, 2 * hour - 1)])
     run()
     # late event behind the watermark + one fresh event
     write_batch("b1.parquet", [(4, 20), (5, 3 * hour + 10)])
-    qy = run()
+    with QueryEvents(spark) as events:
+        run()
 
-    rows = collect_progress(qy)
+    rows = events.batches()
     assert rows, "no progress events retained"
     assert all(r["batch_id"] is not None for r in rows)
-    summary = progress_summary(qy)
-    assert summary["n_batches"] == len(rows)
-    assert summary["total_input_rows"] == 2  # this run saw only b1
-    assert summary["rows_dropped_by_watermark"] == 1, summary
-    assert summary["max_state_rows"] >= 1
-    assert summary["total_batch_ms"] > 0 and summary["rows_per_sec"] > 0
+    assert sum(r["num_input_rows"] for r in rows) == 2  # this run saw only b1
+    assert sum(r["rows_dropped_by_watermark"] for r in rows) == 1, rows
+    assert max(r["state_rows"] for r in rows) >= 1
+    assert sum(r["batch_duration_ms"] or 0 for r in rows) > 0
+    assert sum(r["rows_per_sec"] for r in rows) > 0
+
+
+def test_progress_reads_a_registry_streaming_run(spark):
+    """A registry streaming run has no query handle to pull progress
+    from (``run_query`` over ``io.run_bounded``); the listener reads it:
+    its batches ingest every staged event."""
+    with QueryEvents(spark) as events:
+        run_query(spark, "q_stream_watermark", SF_SMOKE, lambda df: df.count())
+    rows = events.batches()
+    assert rows
+    (run_id,) = {str(p.runId) for p in events.progress}
+    assert events.batches(run_id) == rows and events.batches("no-such-run") == []
+    events_rows = load(spark, SF_SMOKE, "events").count()
+    assert sum(r["num_input_rows"] for r in rows) == events_rows
 
 
 def test_cdc_apply_query_is_batching_invariant(spark, tmp_path):

@@ -11,6 +11,7 @@ that substitution is what test_kafka_transport_format_wiring pins.
 
 from __future__ import annotations
 
+import tempfile
 import threading
 import time
 from collections import Counter
@@ -24,6 +25,7 @@ from stateflow_flink_spark.sources.kafka import (
     KAFKA_RECORD,
     TOPIC_CLIENT_REPLY,
     TOPIC_CLIENT_REQUEST,
+    TOPIC_INTERNAL,
     decode_frames,
     encode_frames,
 )
@@ -33,13 +35,13 @@ from stateflow_flink_spark.streaming.feedback import (
     run_event_loop,
 )
 from stateflow_flink_spark.streaming.flow import MAX_FLOW_STEPS, hop, hop_frames
+from stateflow_flink_spark.streaming.progress import QueryEvents
 from stateflow_flink_spark.streaming.transport import (
     DirectoryTransport,
     KafkaTransport,
 )
 
 from .conftest import SF_SMOKE
-from .helpers import QueryEvents
 
 
 def test_wire_loop_drains_every_flow_exactly_once(spark, tmp_path):
@@ -266,6 +268,36 @@ def test_wire_loop_batch_jobs_do_not_grow_with_hops(spark, tmp_path):
     one = jobs_of_ingesting_batch(1, str(tmp_path / "one"))
     eight = jobs_of_ingesting_batch(8, str(tmp_path / "eight"))
     assert (one, eight) == (1, 1)
+
+
+class FeedbackEdgeDown(DirectoryTransport):
+    """DirectoryTransport that cannot open the ``internal`` stream, so
+    ``run_event_loop`` fails after starting query A."""
+
+    def read_stream(self, spark, topic: str):
+        if topic == TOPIC_INTERNAL:
+            raise RuntimeError("internal topic unavailable")
+        return super().read_stream(spark, topic)
+
+
+def test_wire_loop_releases_its_set_up_when_a_query_fails_to_start(
+    spark, tmp_path, monkeypatch
+):
+    """A loop whose second query cannot start stops the first and
+    removes its checkpoint dir before the error reaches the caller."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    flows = spark.range(4).select(
+        F.col("id").alias("event_id"), F.lit(1).alias("steps_left")
+    )
+    with pytest.raises(RuntimeError, match="internal topic unavailable"):
+        run_event_loop(
+            spark,
+            FeedbackEdgeDown(str(tmp_path / "topics")),
+            make_flow_requests(spark, flows),
+            timeout_s=90.0,
+        )
+    assert spark.streams.active == []
+    assert list(tmp_path.glob("sfs_wireloop_ck_*")) == []
 
 
 def _epoch(offset: int) -> int:
